@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. One untimed warmup pass
@@ -9,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * at the 0.1–1.5 s magnitudes compared round-over-round a single sample
   * cannot distinguish regression from GC/scheduler noise. Per-query
   * spread (max − min) is reported under `spread` so noisy readings are
-  * visible, and the warmup wall time under `warmup_sec`.
+  * visible, and the warmup wall time under `warmup_sec`. A query whose
+  * timed pass crashes is listed under `errors` (`n_errors` on the last
+  * line), contributes no sample, and makes the run exit 1.
   */
 object Bench {
 
@@ -167,7 +170,6 @@ object Bench {
           f"stages=${stages.get}%3d tasks=${tasks.get}%4d " +
           f"taskSec=${taskNanos.get / 1e9}%7.3f")
         if (perStage) {
-          import scala.jdk.CollectionConverters._
           stageInfo.asScala.toSeq.sortBy(-_._2._3).take(15).foreach {
             case (sid, (sname, nt, ns)) =>
               println(f"  STAGE $sid%4d tasks=$nt%4d " +
@@ -224,15 +226,20 @@ object Bench {
             passTaskNanos.addAndGet(t.taskInfo.duration * 1000000L)
       })
     org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-    val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val samples = (1 to passes).map { _ =>
+    val timed = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> timePasses(passes) { () =>
         passTaskNanos.set(0)
         val t = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val wall = (System.nanoTime() - t) / 1e9
-        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-        (wall, passTaskNanos.get / 1e9)
-      }.sortBy(_._1)
+        try {
+          fn(spark, sfDir).count()
+          ((System.nanoTime() - t) / 1e9, passTaskNanos.get / 1e9)
+        } finally
+          org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+      }
+    }
+    val errors = timed.collect { case (name, Left(err)) => name -> err }
+    val results = timed.collect { case (name, Right(s0)) =>
+      val samples = s0.sortBy(_._1)
       // task-seconds of the MEDIAN-wall pass — paired, not independently
       // sorted, so the two numbers describe the same execution
       (name, samples(passes / 2)._1,
@@ -244,6 +251,8 @@ object Bench {
       .mkString("{", ",", "}")
     val taskSecs = results.map { case (k, _, _, ts) => "\"" + k + "\":" + ts }
       .mkString("{", ",", "}")
+    val errorsJson = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(errors.toMap.asJava)
     val taskTotal = results.map(_._4).sum
     val total = results.map(_._2).sum
     val battery = if (exact) "exact" else "default"
@@ -255,7 +264,7 @@ object Bench {
     // capture (grep '"metric":"total_full"'). At 220 queries this line
     // runs ~10 KB, far beyond the driver's 2000-char stdout tail, so it
     // must NOT be the last line printed.
-    println(s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"task_sec":$taskSecs,"passes":$passes,"warmup_sec":$warmup,"battery":"$battery","sf":"$sfDir"}""")
+    println(s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"task_sec":$taskSecs,"errors":$errorsJson,"passes":$passes,"warmup_sec":$warmup,"battery":"$battery","sf":"$sfDir"}""")
     // The LAST line is the driver's contract shape — {"metric":"total",
     // value, unit, queries, sf} — kept self-contained and small (the
     // queries map holds the top-12 slowest only) so the 2000-char tail
@@ -283,7 +292,18 @@ object Bench {
           .map(m => s""","frozen_ref":{"file":"${f.getName}","round":$rnd,"value":${m.group(1)}}""")
       }.getOrElse("")
     }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$top,"n_queries":${results.size},"passes":$passes,"warmup_sec":$warmup%.1f,"task_sec_total":$taskTotal%.3f,"battery":"$battery","sf":"$sfDir"$frozenRef}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$top,"n_queries":${results.size},"n_errors":${errors.size},"passes":$passes,"warmup_sec":$warmup%.1f,"task_sec_total":$taskTotal%.3f,"battery":"$battery","sf":"$sfDir"$frozenRef}""")
     Console.flush()
+    // a crashed query is reported, never timed — and never a green run
+    if (errors.nonEmpty) sys.exit(1)
   }
+
+  /** Time `passes` runs of one query. Each pass returns its (wall,
+    * task-seconds); a pass that throws makes the whole query an error
+    * (its message) instead of a timing sample — a fast crash must never
+    * read as a speedup. */
+  private[graft] def timePasses(passes: Int)(
+      pass: () => (Double, Double)): Either[String, Seq[(Double, Double)]] =
+    scala.util.Try(Seq.fill(passes)(pass())).toEither.left.map(e =>
+      s"${e.getClass.getName}: ${e.getMessage}".take(300))
 }

@@ -6,9 +6,12 @@ import graft.model._
 import graft.plan.{FieldRef, Grains, SemanticQuery}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Distinct, GlobalLimit, Join, LocalLimit, LogicalPlan, Sort}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 
 /** Compiles a [[SemanticQuery]] into a composed DataFrame plan.
   *
@@ -441,8 +444,16 @@ final class Generator(spark: SparkSession, cat: Catalog,
   // Standard path
   // ------------------------------------------------------------------
 
-  /** Route of the most recent plan() call, for explain output. */
+  /** Route of the most recent plan() call. [[explain]] reads the route
+    * from the cache entry it printed instead, so a concurrent plan()
+    * cannot mislabel it. */
   @volatile var lastRoute: String = ""
+
+  /** A composed plan as the compile cache keeps it: the analyzed
+    * LOGICAL plan after the one-task gate, the route that built it, and
+    * the gate's decision. */
+  private case class Planned(plan: LogicalPlan, route: String,
+      shape: Generator.Shape)
 
   /** Compile cache: identical requests reuse the composed plan
     * (reference: generator.py:332-377,1041 — warm repeat compile).
@@ -454,28 +465,34 @@ final class Generator(spark: SparkSession, cat: Catalog,
     * otherwise accumulate pinned broadcasts until execution memory
     * starves and join/pair stages start spilling. The route is restored
     * on hit so explain/route introspection does not depend on compile
-    * temperature. */
+    * temperature. The cached plan is the one-task-shaped one, so a hit
+    * pays nothing for the gate. */
   private val planCache =
-    new java.util.LinkedHashMap[SemanticQuery,
-        (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String)](
-        64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[SemanticQuery,
-          (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String)])
-          : Boolean = size > 256
+    new java.util.LinkedHashMap[SemanticQuery, Planned](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SemanticQuery, Planned]): Boolean = size > 256
     }
 
-  def plan(q: SemanticQuery): DataFrame = planCache.synchronized {
-    val hit = planCache.get(q)
-    if (hit != null) {
-      lastRoute = hit._2
-      org.apache.spark.sql.GraftSqlBridge.dataFrame(spark, hit._1)
-    } else {
-      val df = compute(q)
-      planCache.put(q,
-        (org.apache.spark.sql.GraftSqlBridge.logicalPlan(df), lastRoute))
-      df
+  def plan(q: SemanticQuery): DataFrame = planned(q)._1
+
+  /** The DataFrame for `q` together with the cache entry it was built
+    * from — every route (standard, window, funnel, pre-agg, multi-fact,
+    * and SqlFront, which calls [[plan]]) passes the gate here, once. */
+  private def planned(q: SemanticQuery): (DataFrame, Planned) =
+    planCache.synchronized {
+      val hit = planCache.get(q)
+      if (hit != null) {
+        lastRoute = hit.route
+        (GraftSqlBridge.dataFrame(spark, hit.plan), hit)
+      } else {
+        val df = compute(q)
+        val (shaped, shape) =
+          Generator.oneTask(spark, GraftSqlBridge.logicalPlan(df))
+        val p = Planned(shaped, lastRoute, shape)
+        planCache.put(q, p)
+        (if (shape.oneTask) GraftSqlBridge.dataFrame(spark, shaped) else df, p)
+      }
     }
-  }
 
   /** True when any model the query touches declares a security policy —
     * the preagg-bypass predicate. Segments carry a model prefix too.
@@ -579,7 +596,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
   /** Route + formatted physical plan, for debugging parity with the
     * reference's explain diagnostics (query_rewriter.py:331). */
   def explain(q: SemanticQuery): String = {
-    val df = plan(q)
+    val (df, p) = planned(q)
     // per-candidate rollup diagnostics (reference: core/query_plan.py) —
     // why each declared pre-aggregation matched or failed this query
     val preaggLines = preagg.map { st =>
@@ -597,9 +614,9 @@ final class Generator(spark: SparkSession, cat: Catalog,
           failed.map(ch => s"\n  $ch").mkString
       }.mkString("", "\n", "\n")
     }.getOrElse("")
-    s"route: $lastRoute\nmetrics: ${q.metrics.mkString(", ")}\n" +
+    s"route: ${p.route}\nmetrics: ${q.metrics.mkString(", ")}\n" +
       s"dimensions: ${q.dimensions.mkString(", ")}\n" + preaggLines +
-      org.apache.spark.sql.GraftSqlBridge.explainString(df, "formatted")
+      s"shape: ${p.shape}\n" + GraftSqlBridge.explainString(df, "formatted")
   }
 
   /** Aggregated frame at the requested dim grain, fan-out handled.
@@ -1064,4 +1081,95 @@ final class Generator(spark: SparkSession, cat: Catalog,
   private[gen] def metricOf(ref: String): (String, Metric) = {
     val mr = metricRef(ref); (mr.model, mr.metric)
   }
+}
+
+object Generator {
+
+  /** The one-task gate's decision for one composed plan: the summed
+    * leaf-size estimate, the read budget it was tested against, how many
+    * leaf scans Spark would split across several read tasks, and whether
+    * the plan shuffles at all. `inputBytes` is None for a streaming plan,
+    * which the gate never touches. */
+  final case class Shape(inputBytes: Option[BigInt], budget: Long,
+      splitLeaves: Int, shuffles: Boolean) {
+    def fits: Boolean = inputBytes.exists(b =>
+      graft.ops.IndexFiles.readTasks(b, budget) == 1)
+    def oneTask: Boolean = fits && splitLeaves == 0 && shuffles
+
+    override def toString: String = inputBytes match {
+      case None => "as planned (streaming)"
+      case Some(b) =>
+        val under = s"inputs ${mib(b)} < ${mib(budget)}"
+        if (!fits) s"as planned (inputs ${mib(b)} >= ${mib(budget)})"
+        else if (splitLeaves > 0)
+          s"as planned ($under, but $splitLeaves leaf scans span several " +
+            "read splits)"
+        else if (!shuffles) s"as planned ($under, no shuffle to remove)"
+        else s"one-task ($under)"
+    }
+  }
+
+  private def mib(b: BigInt): String = f"${b.toDouble / (1L << 20)}%.2f MiB"
+
+  /** One-task gate. A small semantic query costs its job dispatch, not
+    * its scan: over a few MB of input every exchange EnsureRequirements
+    * plants (aggregate, window, HAVING, the ORDER BY range sample) adds a
+    * job or stage of fixed cost. The gate opens when
+    *  - the plan's whole input fits one read task: the summed
+    *    `stats.sizeInBytes` of its leaves, known from the file listing
+    *    without a job, is under the per-task budget
+    *    [[graft.ops.IndexFiles.readShaped]] uses;
+    *  - Spark already reads every leaf in one split, so no scan loses
+    *    parallelism; and
+    *  - the plan shuffles at all.
+    * A no-shuffle coalesce to one partition then goes above every leaf,
+    * union, grouping-set expand and full outer join: the operators whose
+    * output is not one partition even over one-partition input. Every
+    * other operator sees SinglePartition, which satisfies every
+    * distribution but a broadcast, so it plans no shuffle; broadcast
+    * joins stay as they are. A full outer join (the multi-fact stitch)
+    * cannot broadcast and still shuffles its inputs, whose estimates
+    * multiply past `spark.sql.maxSinglePartitionBytes` without CBO; the
+    * coalesce above it keeps the operators after it shuffle-free. Other
+    * joins get no coalesce, which would hide them from the optimizer's
+    * outer-join elimination. Plans that fail the gate, and streaming
+    * plans, come back untouched, so cluster-scale plans keep their shape.
+    * A wrong estimate only moves work between tasks: slow, never wrong. */
+  private[graft] def oneTask(spark: SparkSession,
+      plan: LogicalPlan): (LogicalPlan, Shape) = {
+    val budget = graft.ops.IndexFiles.readBudget(spark)
+    if (plan.isStreaming) return (plan, Shape(None, budget, 0, false))
+    val leaves = plan.collectLeaves()
+    val shape = Shape(Some(leaves.map(_.stats.sizeInBytes).sum), budget,
+      leaves.count(!readInOneSplit(spark, _)), shuffles(plan))
+    (if (shape.oneTask) GraftSqlBridge.coalesceToOne(plan) else plan, shape)
+  }
+
+  /** Whether planning `plan` shuffles: it has an aggregate, window,
+    * distinct, join or global sort. A sort under a limit is a top-k that
+    * gathers without a shuffle; with nothing else to remove, the coalesce
+    * would only cost its codegen break. */
+  private def shuffles(plan: LogicalPlan): Boolean = plan match {
+    case GlobalLimit(_, LocalLimit(_, s: Sort)) => shuffles(s.child)
+    case _: Aggregate | _: logical.Window | _: Deduplicate | _: Distinct |
+        _: Join => true
+    case s: Sort if s.global => true
+    case p => p.children.exists(shuffles)
+  }
+
+  /** False for a file scan whose files exceed the split size Spark plans
+    * for them (`FilePartition.maxSplitBytes`: at least
+    * `spark.sql.files.openCostInBytes`), i.e. one it reads in several
+    * tasks. The listing is the relation's own, already in memory. */
+  private def readInOneSplit(spark: SparkSession, leaf: LogicalPlan): Boolean =
+    leaf match {
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation =>
+          val dirs = fs.location.listFiles(Nil, Nil)
+          dirs.iterator.flatMap(_.files).map(_.getLen).sum <=
+            FilePartition.maxSplitBytes(spark, dirs)
+        case _ => true
+      }
+      case _ => true
+    }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     broadcast prefix offsets (Σ over preceding partitions — the offset
   *     frame is one row per partition, so the inequality self-join is
   *     noise).
-  *   - percent_of_total: broadcast the global sum.
+  *   - percent_of_total / percentile: broadcast the global aggregate.
   *   - percent_of_previous / moving_average: global ordinal + running sum
   *     as above, then a self-join shifted by 1 / n on the ordinal —
   *     moving_average(i) = (S(i) − S(i−n)) / (C(i) − C(i−n)) where S and C
@@ -100,6 +100,9 @@ object TableCalcs {
     if (partitionBy.nonEmpty)
       df.withColumn(as, col(value).cast("double") * 100 /
         sum(col(value)).over(part(partitionBy)).cast("double"))
+    else if (smallGlobal(df))
+      df.withColumn(as, col(value).cast("double") * 100 /
+        sum(col(value)).over().cast("double"))
     else {
       val tot = df.agg(sum(col(value)).cast("double").as("__tc_tot"))
       df.crossJoin(broadcast(tot))
@@ -208,14 +211,17 @@ object TableCalcs {
     * Spark's `percentile` aggregate uses the same linear interpolation
     * as the reference's numpy-style formula (and DuckDB's
     * quantile_cont), so the value is oracle-exact cross-engine. The
-    * global form broadcasts a one-row aggregate; the partitioned form
-    * is a window aggregate per partition. */
+    * global form is a window aggregate over the whole frame under the
+    * size gate, else it broadcasts a one-row aggregate; the partitioned
+    * form is a window aggregate per partition. */
   def percentileValue(df: DataFrame, value: String, p: Double, as: String,
       partitionBy: Seq[String] = Nil): DataFrame = {
     require(p >= 0 && p <= 1, s"percentile must be in [0, 1], got $p")
     if (partitionBy.nonEmpty)
       df.withColumn(as,
         percentile(col(value).cast("double"), lit(p)).over(part(partitionBy)))
+    else if (smallGlobal(df))
+      df.withColumn(as, percentile(col(value).cast("double"), lit(p)).over())
     else {
       val q = df.agg(
         percentile(col(value).cast("double"), lit(p)).as("__tc_q"))

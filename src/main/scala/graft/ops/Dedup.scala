@@ -158,8 +158,10 @@ object Dedup {
     * contents); md5 hashes arrays and strings alike, so the vector
     * route shares the shape.
     *
-    * Both frames are EAGERLY locally checkpointed (the Bpe word-table
-    * trick). The routed operators consume `reps`/`members` many times
+    * Both frames are LAZILY locally checkpointed (the clusters-loop
+    * pattern): the first consumer materializes the blocks inside its
+    * own job, with no separate barrier job per frame. The routed
+    * operators consume `reps`/`members` many times
     * (semDedup ~10x: trainer jobs, assignment, pairing, verify;
     * [[expandFamilyPairs]] 2–4x), and Spark re-executes shared lazy
     * subtrees per consumer — the r15 zipfian skew battery paid the

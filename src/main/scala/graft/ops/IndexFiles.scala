@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Shared file-layout maintenance for the three persisted indexes
@@ -60,18 +61,32 @@ private[graft] object IndexFiles {
     * scan is coalesced — no shuffle — to one task per
     * `spark.graft.read.bytesPerTask` (default 8 MiB); above the gate the
     * scan's own splits stand, so a cluster-scale store keeps full read
-    * parallelism. */
-  def readShaped(spark: SparkSession, path: String): DataFrame = {
-    def conf(k: String, dflt: Long): Long = spark.conf.getOption(k)
-      .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(dflt)
-    val df = spark.read.parquet(path)
-    val gate = conf("spark.graft.read.coalesceMaxBytes", 64L << 20)
+    * parallelism. A caller that already knows the layout's schema passes
+    * it, which skips schema inference (a footer-merge job per read). */
+  def readShaped(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val df = schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
+    val gate = longConf(spark, "spark.graft.read.coalesceMaxBytes", 64L << 20)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes >= BigInt(gate)) return df
-    val perTask = math.max(1L, conf("spark.graft.read.bytesPerTask", 8L << 20))
     val par = spark.sparkContext.defaultParallelism
-    df.coalesce(((bytes / perTask) + 1).min(BigInt(par)).toInt)
+    df.coalesce(readTasks(bytes, readBudget(spark)).min(BigInt(par)).toInt)
   }
+
+  /** Bytes one read task should take: `spark.graft.read.bytesPerTask`
+    * (default 8 MiB, floor 1 byte). */
+  def readBudget(spark: SparkSession): Long =
+    math.max(1L, longConf(spark, "spark.graft.read.bytesPerTask", 8L << 20))
+
+  /** The read width rule: one task per `budget` bytes of estimated
+    * input, before any cluster clamp. [[readShaped]] clamps it to the
+    * cluster; [[graft.gen.Generator]] opens its one-task gate when it
+    * is 1, i.e. when the whole input is under one budget. */
+  def readTasks(bytes: BigInt, budget: Long): BigInt = bytes / budget + 1
+
+  private def longConf(spark: SparkSession, k: String, dflt: Long): Long =
+    spark.conf.getOption(k)
+      .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(dflt)
 
   private def parquetFiles(fs: org.apache.hadoop.fs.FileSystem,
       p: Path): Long = {

@@ -5,6 +5,7 @@ import graft.model.{Catalog, Model, PreAggregation}
 import graft.plan.{FieldRef, Grains, SemanticQuery}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Materialized rollup store: build, refresh, match, and route
@@ -28,6 +29,20 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
 
   def rollupPath(model: String, pa: PreAggregation): String =
     s"$basePath/${model}_preagg_${pa.name}"
+
+  /** Rollup schemas by path, remembered after the first read: a routed
+    * compile then reads its rollup without parquet schema inference,
+    * which launches a footer-merge job on every read. A rebuild
+    * ([[materialize]], [[refreshIncremental]]) forgets its entry. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  private def readRollup(path: String): DataFrame = {
+    val df = graft.ops.IndexFiles.readShaped(spark, path,
+      Option(schemas.get(path)))
+    schemas.putIfAbsent(path, df.schema)
+    df
+  }
 
   /** A rollup exists when its directory holds parquet data — dynamic
     * partition overwrites don't leave a top-level _SUCCESS marker. Goes
@@ -135,6 +150,7 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
     if (pa.partitionGranularity.isDefined)
       byPart(rollup).write.mode("overwrite").partitionBy("__part").parquet(path)
     else rollup.write.mode("overwrite").parquet(path)
+    schemas.remove(path)
     path
   }
 
@@ -164,6 +180,7 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
     byPart(rollup).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__part").parquet(path)
+    schemas.remove(path)
     path
   }
 
@@ -375,7 +392,7 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
     * caller falls back to the base-table plan (the reference's fallback-
     * with-recompile, semantic_layer.py:798-849). */
   def plan(q: SemanticQuery): Option[DataFrame] = matchQuery(q).map { mt =>
-    var df = graft.ops.IndexFiles.readShaped(spark, mt.path)
+    var df = readRollup(mt.path)
     // rewrite query filters into rollup scope
     mt.ownFilters.foreach { f =>
       val e = Exprs.rewriteRelativeDates(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
 
 /** Narrow bridge into Spark's `private[sql]` surface: wrap a Catalyst
   * Expression back into a public Column, and reach the session's SQL parser.
-  * Kept to two one-liners so the engine touches no other internals.
+  * Kept to a few short calls so the engine touches no other internals.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -20,4 +20,24 @@ object GraftSqlBridge {
   def dataFrame(spark: SparkSession,
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `plan` with a no-shuffle coalesce to one partition above every
+    * leaf, union, expand and full outer join — the operators whose
+    * physical output is not one partition even over one-partition input.
+    * The added nodes are resolved and
+    * keep their child's output, so an analyzed input stays marked
+    * analyzed: a Dataset built over the result does not run the analyzer
+    * again. */
+  def coalesceToOne(plan: catalyst.plans.logical.LogicalPlan)
+      : catalyst.plans.logical.LogicalPlan = {
+    import catalyst.plans.FullOuter
+    import catalyst.plans.logical.{Expand, Join, LeafNode, Repartition, Union}
+    val out = plan.transformUp {
+      case p @ (_: LeafNode | _: Union | _: Expand |
+          Join(_, _, FullOuter, _, _)) =>
+        Repartition(1, shuffle = false, p)
+    }
+    if (plan.analyzed) out.setAnalyzed()
+    out
+  }
 }

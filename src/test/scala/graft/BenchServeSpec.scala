@@ -37,6 +37,18 @@ class BenchServeSpec extends AnyFunSuite {
       === "ERR failed q_boom_exec")
   }
 
+  test("a crashed timed pass is an error, never a sample") {
+    var n = 0
+    val flaky = Bench.timePasses(3) { () =>
+      n += 1
+      if (n == 2) throw new IllegalStateException("boom") else (0.001, 0.0)
+    }
+    assert(flaky === Left("java.lang.IllegalStateException: boom"))
+    assert(n === 2, "passes after a crash still ran")
+    assert(Bench.timePasses(3)(() => (0.5, 0.25)) ===
+      Right(Seq.fill(3)((0.5, 0.25))))
+  }
+
   test("an unknown query name answers ERR unknown") {
     assert(Bench.serveOne(queries, spark, TestSpark.sfDir, "q_nope")
       === "ERR unknown q_nope")

@@ -88,6 +88,20 @@ class TableCalcsPlanSpec extends AnyFunSuite {
       assert(fast.collect().map(_.toString).sorted
         .sameElements(slow.collect().map(_.toString).sorted))
     }
+    // percent_of_total and percentile: a whole-frame window under the
+    // gate, a broadcast one-row aggregate above it — same values, types
+    val totals: Seq[DataFrame => DataFrame] = Seq(
+      TableCalcs.percentOfTotal(_, "v", "x"),
+      TableCalcs.percentileValue(_, "v", 0.9, "x"))
+    for (df <- Seq(ints, decs); f <- totals) {
+      val (fast, slow) = both(f, df)
+      assert(partitionlessWindows(fast).nonEmpty,
+        "small frame did not take the single-window path")
+      assert(fast.schema.map(_.dataType) == slow.schema.map(_.dataType),
+        s"column types drift across the gate:\n${fast.schema}\n${slow.schema}")
+      assert(fast.collect().map(_.toString).sorted
+        .sameElements(slow.collect().map(_.toString).sorted))
+    }
     val calcs: Seq[DataFrame => DataFrame] = Seq(
       TableCalcs.percentOfPrevious(_, "v", Seq("id"), "x"),
       TableCalcs.rankBy(_, "v", "x"),
