@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 /** Dump `.explain("formatted")` for named queries to `<outDir>/<q>.txt`
   * — the committed plan evidence for optimization rounds (plans/rNN/).
   * Usage: runMain graft.PlanDump <outDir> <q1,q2,...> [suffix]
+  * Exits 1 when a requested name is unknown or a dump fails.
   * Session config mirrors Bench so the captured plan is the plan the
   * bench actually times (same AQE / shuffle-partition settings).
   */
@@ -31,13 +32,24 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = try run(spark, sfDir, outDir, names, suffix)
+                 finally spark.stop()
+    if (failed > 0) {
+      System.err.println(s"PlanDump: $failed of ${names.size} plans failed")
+      sys.exit(1)
+    }
+  }
+
+  /** Dump each named query's plan; returns how many failed. A requested
+    * name that matches no query counts as a failure, as does a query
+    * that throws: the committed plans must cover what was asked for. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      names: Set[String], suffix: String): Int = {
     Files.createDirectories(Paths.get(outDir))
     val matched = SparkEntry.queries.filter { case (k, _) => names(k) }
-    // a requested name that matches no query is an evidence bug, not a
-    // silent no-op — the committed plans must cover what was asked for
-    (names -- matched.keySet).toSeq.sorted
-      .foreach(n => println(s"PLAN $n UNKNOWN: no such query"))
-    matched.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    val unknown = (names -- matched.keySet).toSeq.sorted
+    unknown.foreach(n => println(s"PLAN $n UNKNOWN: no such query"))
+    unknown.size + matched.toSeq.sortBy(_._1).count { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
           // EXECUTE before dumping so the formatted plan is the AQE-final
@@ -52,10 +64,11 @@ object PlanDump {
           Files.write(Paths.get(outDir, s"$name$suffix.txt"),
             txt.getBytes("UTF-8"))
           println(s"PLAN $name -> $outDir/$name$suffix.txt")
+          false
         } catch { case e: Throwable =>
           println(s"PLAN $name FAILED: ${e.getMessage}")
+          true
         }
       }
-    spark.stop()
   }
 }

@@ -2070,18 +2070,17 @@ object SparkEntry {
     "q_explain_route" -> ((s, d) => {
       import s.implicits._
       val g = gen(s, d)
-      def routeOf(q: SemanticQuery): String = { g.plan(q); g.lastRoute }
       Seq(
-        ("simple_agg", routeOf(SemanticQuery(
+        ("simple_agg", g.route(SemanticQuery(
           metrics = Seq("orders.revenue"),
           dimensions = Seq("orders.orderstatus")))),
-        ("fanout_symmetric", routeOf(SemanticQuery(
+        ("fanout_symmetric", g.route(SemanticQuery(
           metrics = Seq("orders.revenue"),
           dimensions = Seq("lineitem.linestatus")))),
-        ("cumulative", routeOf(SemanticQuery(
+        ("cumulative", g.route(SemanticQuery(
           metrics = Seq("orders.cumulative_revenue"),
           dimensions = Seq("orders.order_date__month")))),
-        ("multi_fact", routeOf(SemanticQuery(
+        ("multi_fact", g.route(SemanticQuery(
           metrics = Seq("orders.revenue", "lineitem.quantity"),
           dimensions = Seq("customer.mktsegment"))))
       ).toDF("query_shape", "route").orderBy("query_shape")

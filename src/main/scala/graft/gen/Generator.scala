@@ -5,9 +5,11 @@ import graft.graph.{JoinHop, SemanticGraph}
 import graft.model._
 import graft.plan.{FieldRef, Grains, SemanticQuery}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.FullOuter
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Distinct, GlobalLimit, Join, LocalLimit, LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -444,29 +446,36 @@ final class Generator(spark: SparkSession, cat: Catalog,
   // Standard path
   // ------------------------------------------------------------------
 
-  /** Route of the most recent plan() call. [[explain]] reads the route
-    * from the cache entry it printed instead, so a concurrent plan()
-    * cannot mislabel it. */
-  @volatile var lastRoute: String = ""
+  /** Route of the plan being composed. Written and read only under the
+    * plan-cache lock, while [[compute]] runs; callers read a query's
+    * route from its cache entry through [[route]]. */
+  private var lastRoute: String = ""
 
   /** A composed plan as the compile cache keeps it: the analyzed
-    * LOGICAL plan after the one-task gate, the route that built it, and
-    * the gate's decision. */
+    * LOGICAL plan after the one-task gate, the route that built it, the
+    * gate's decision, the Dataset a hit returns again when
+    * [[Generator.reusable]] allows it, and the scan epoch and rollup
+    * store version it was built under. */
   private case class Planned(plan: LogicalPlan, route: String,
-      shape: Generator.Shape)
+      shape: Generator.Shape, reused: Option[DataFrame], scanEpoch: Long,
+      storeVersion: Long)
 
   /** Compile cache: identical requests reuse the composed plan
     * (reference: generator.py:332-377,1041 — warm repeat compile).
-    * What's cached is the LOGICAL plan plus the chosen route, and a hit
-    * returns a FRESH Dataset over it: an executed DataFrame's
-    * QueryExecution pins its adaptive runtime state — materialized
-    * broadcast hash tables, reused-exchange references — and a
-    * long-lived layer that served hundreds of distinct queries would
-    * otherwise accumulate pinned broadcasts until execution memory
-    * starves and join/pair stages start spilling. The route is restored
-    * on hit so explain/route introspection does not depend on compile
-    * temperature. The cached plan is the one-task-shaped one, so a hit
-    * pays nothing for the gate. */
+    * A plan the one-task gate opened for (and [[Generator.reusable]]
+    * admits) keeps the Dataset its miss returned, and a hit returns that
+    * same Dataset: its physical plan, generated code, scan RDDs and
+    * broadcast build sides carry over, while every action still runs its
+    * own job over the files. What it pins is bounded: at most 256
+    * entries, each over an input under the read budget. Any other plan
+    * keeps only its LOGICAL plan and a hit returns a FRESH Dataset over
+    * it: an executed Dataset pins its adaptive runtime state —
+    * materialized broadcast hash tables, shuffle outputs — and a
+    * long-lived layer serving hundreds of large queries would otherwise
+    * accumulate pinned state until execution memory starves. An entry
+    * built before a [[Catalog.invalidateScans]] or a write to this
+    * generator's rollup store is a miss: its file listings may name
+    * rewritten files. */
   private val planCache =
     new java.util.LinkedHashMap[SemanticQuery, Planned](64, 0.75f, true) {
       override def removeEldestEntry(
@@ -475,22 +484,34 @@ final class Generator(spark: SparkSession, cat: Catalog,
 
   def plan(q: SemanticQuery): DataFrame = planned(q)._1
 
+  /** The route that plans `q` (preagg, standard, window, ...), read from
+    * its cache entry, so concurrent plans cannot mislabel it. */
+  def route(q: SemanticQuery): String = planned(q)._2.route
+
   /** The DataFrame for `q` together with the cache entry it was built
     * from — every route (standard, window, funnel, pre-agg, multi-fact,
     * and SqlFront, which calls [[plan]]) passes the gate here, once. */
   private def planned(q: SemanticQuery): (DataFrame, Planned) =
     planCache.synchronized {
+      // read before composing: an invalidation racing the compose then
+      // leaves this entry stale, never a stale plan under a new epoch
+      val epoch = Catalog.scanEpoch
+      val version = preagg.fold(0L)(_.version)
       val hit = planCache.get(q)
-      if (hit != null) {
-        lastRoute = hit.route
-        (GraftSqlBridge.dataFrame(spark, hit.plan), hit)
-      } else {
+      if (hit != null && hit.scanEpoch == epoch &&
+          hit.storeVersion == version)
+        (hit.reused.getOrElse(GraftSqlBridge.dataFrame(spark, hit.plan)), hit)
+      else {
         val df = compute(q)
         val (shaped, shape) =
           Generator.oneTask(spark, GraftSqlBridge.logicalPlan(df))
-        val p = Planned(shaped, lastRoute, shape)
+        val out =
+          if (shape.oneTask) GraftSqlBridge.dataFrame(spark, shaped) else df
+        val p = Planned(shaped, lastRoute, shape,
+          Some(out).filter(_ => Generator.reusable(shape, shaped)), epoch,
+          version)
         planCache.put(q, p)
-        (if (shape.oneTask) GraftSqlBridge.dataFrame(spark, shaped) else df, p)
+        (out, p)
       }
     }
 
@@ -1144,6 +1165,26 @@ object Generator {
       leaves.count(!readInOneSplit(spark, _)), shuffles(plan))
     (if (shape.oneTask) GraftSqlBridge.coalesceToOne(plan) else plan, shape)
   }
+
+  /** Whether a plan-cache hit may return the Dataset its miss built,
+    * executed state and all. The one-task gate must have opened, which
+    * bounds what the entry pins by the read budget. Then nothing a
+    * second action must redo may be in the plan:
+    *  - a full outer join (the multi-fact stitch) shuffles, and a reused
+    *    adaptive plan would read its materialized shuffle instead of the
+    *    facts;
+    *  - a subquery expression is evaluated once per physical plan;
+    *  - a nondeterministic expression, or one that reads the clock (the
+    *    CURRENT_LIKE expressions `ComputeCurrentTime` folds into
+    *    literals at optimization), would repeat its first value.
+    * Scans re-read their files on every action; their listings are
+    * fixed when the plan is analyzed, reused or not. */
+  private def reusable(shape: Shape, plan: LogicalPlan): Boolean =
+    shape.oneTask && !plan.exists {
+      case Join(_, _, FullOuter, _, _) => true
+      case p => p.expressions.exists(e => !e.deterministic ||
+        e.containsPattern(CURRENT_LIKE) || SubqueryExpression.hasSubquery(e))
+    }
 
   /** Whether planning `plan` shuffles: it has an aggregate, window,
     * distinct, join or global sort. A sort under a limit is a top-k that

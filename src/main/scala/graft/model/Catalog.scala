@@ -197,12 +197,21 @@ object Catalog {
           size() > MaxScanEntries
       })
 
-  def invalidateScans(): Unit = scanCache.clear()
+  /** Bumped by both [[invalidateScans]] overloads, after the drop: a
+    * generator's plan cache treats an entry built under an older epoch
+    * as a miss, since its plan holds the dropped frames' file listings. */
+  private val epoch = new java.util.concurrent.atomic.AtomicLong
+  def scanEpoch: Long = epoch.get
+
+  def invalidateScans(): Unit = { scanCache.clear(); epoch.incrementAndGet() }
 
   /** Drop every cached scan belonging to one session (call on session close). */
-  def invalidateScans(spark: SparkSession): Unit = scanCache.synchronized {
-    val it = scanCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1 eq spark) it.remove()
+  def invalidateScans(spark: SparkSession): Unit = {
+    scanCache.synchronized {
+      val it = scanCache.keySet.iterator()
+      while (it.hasNext) if (it.next()._1 eq spark) it.remove()
+    }
+    epoch.incrementAndGet()
   }
 }
 

@@ -37,6 +37,14 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
+  /** Bumped after every rollup write ([[materialize]],
+    * [[refreshIncremental]]): a generator routing through this store
+    * treats a plan built under an older version as a miss, since a
+    * routed plan's file listing names the files the write replaced.
+    * Per store, so one store's refreshes leave other plans cached. */
+  private val writes = new java.util.concurrent.atomic.AtomicLong
+  def version: Long = writes.get
+
   private def readRollup(path: String): DataFrame = {
     val df = graft.ops.IndexFiles.readShaped(spark, path,
       Option(schemas.get(path)))
@@ -151,6 +159,7 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
       byPart(rollup).write.mode("overwrite").partitionBy("__part").parquet(path)
     else rollup.write.mode("overwrite").parquet(path)
     schemas.remove(path)
+    writes.incrementAndGet()
     path
   }
 
@@ -181,6 +190,7 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__part").parquet(path)
     schemas.remove(path)
+    writes.incrementAndGet()
     path
   }
 

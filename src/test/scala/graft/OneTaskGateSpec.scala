@@ -4,7 +4,7 @@ import graft.gen.Generator
 import graft.model._
 import graft.plan.SemanticQuery
 import graft.preagg.PreAggStore
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.TestSpark.jobsOf
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Repartition}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -50,26 +50,6 @@ class OneTaskGateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       case Repartition(1, false, _: LeafNode) => 1
     }.size
 
-  /** Result and the number of Spark jobs `body` launched on this
-    * thread. */
-  private def jobsOf[A](s: SparkSession)(body: => A): (A, Int) = {
-    val group = s"one-task-gate-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    val sc = s.sparkContext
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, group)
-    try {
-      val out = body
-      org.apache.spark.graft.ListenerBridge.drain(sc)
-      (out, n.get)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-  }
-
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
@@ -83,9 +63,12 @@ class OneTaskGateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("an open gate plans no shuffle and runs one job plus broadcasts") {
+    // a fresh session has a cold plan cache, so every broadcast builds
+    // here (a warm hit reuses them: PlanReuseSpec)
+    val cold = spark.newSession()
     shapes.foreach { name =>
-      val df = queries(name)(spark, dir)
-      val (_, jobs) = jobsOf(spark)(df.collect())
+      val df = queries(name)(cold, dir)
+      val (_, jobs) = jobsOf(cold)(df.collect())
       assert(coalescedLeaves(df) > 0, s"$name: the gate did not open")
       // the one exception: the multi-fact stitch is a full outer join,
       // which cannot broadcast, so its two inputs are shuffled (see
@@ -179,7 +162,7 @@ class OneTaskGateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     def routed(): (Seq[String], Int) = {
       val g = new Generator(s, cat, Some(store))
       val (df, jobs) = jobsOf(s)(g.plan(q))
-      assert(g.lastRoute == "preagg")
+      assert(g.route(q) == "preagg")
       (rows(df), jobs)
     }
     Seq("o_orderkey % 7", "o_totalprice").foldLeft(Seq.empty[String]) {

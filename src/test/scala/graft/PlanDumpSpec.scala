@@ -1,0 +1,38 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path}
+
+/** PlanDump reports every plan it could not write: an unknown name and a
+  * failing query each count, so its main exits non-zero. */
+class PlanDumpSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+
+  private def out(): Path = Files.createTempDirectory("graft_plandump")
+
+  test("a dumped plan counts no failure and writes its file") {
+    val o = out()
+    assert(PlanDump.run(spark, TestSpark.sfDir, o.toString,
+      Set("q_agg_minmax"), "_t") == 0)
+    assert(Files.readString(o.resolve("q_agg_minmax_t.txt"))
+      .contains("== Physical Plan =="))
+  }
+
+  test("an unknown name is a failure and the known ones still dump") {
+    val o = out()
+    assert(PlanDump.run(spark, TestSpark.sfDir, o.toString,
+      Set("q_agg_minmax", "q_no_such_query"), "") == 1)
+    assert(Files.exists(o.resolve("q_agg_minmax.txt")))
+    assert(!Files.exists(o.resolve("q_no_such_query.txt")))
+  }
+
+  test("a query that fails to run is a failure") {
+    val o = out()
+    val missing = o.resolve("no_data").toString
+    assert(PlanDump.run(spark, missing, o.toString,
+      Set("q_agg_minmax"), "") == 1)
+    assert(!Files.exists(o.resolve("q_agg_minmax.txt")))
+  }
+}

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Shared session for all suites (one JVM-wide session keeps test time
@@ -20,4 +21,24 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Result and the number of Spark jobs `body` launched on this
+    * thread. */
+  def jobsOf[A](s: SparkSession)(body: => A): (A, Int) = {
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    val sc = s.sparkContext
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBridge.drain(sc)
+      (out, n.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
 }

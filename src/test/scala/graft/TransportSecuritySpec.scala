@@ -135,12 +135,12 @@ class TransportSecuritySpec extends AnyFunSuite {
       cat.model("orders").preAggregations.find(_.name == "daily_by_customer").get)
     val gOpen = new Generator(spark, cat, Some(openStore))
     gOpen.plan(q).collect()
-    assert(gOpen.lastRoute == "preagg", "control: query must be routable")
+    assert(gOpen.route(q) == "preagg", "control: query must be routable")
     // secured customer: same store, same query — base path, not rollup
     val gSec = new Generator(spark, securedCustomer,
       Some(new PreAggStore(spark, securedCustomer, base)))
     gSec.plan(q).collect()
-    assert(gSec.lastRoute != "preagg")
+    assert(gSec.route(q) != "preagg")
     // and the base path enforces deny-by-default without a user
     intercept[SecurityException](
       gSec.plan(q.copy(user = None)).collect())
@@ -156,7 +156,7 @@ class TransportSecuritySpec extends AnyFunSuite {
       filters = Seq("customer.mktsegment = {{ seg }}"),
       user = Some(Map("role" -> "analyst")))
     gDef.plan(qDef).collect()
-    assert(gDef.lastRoute != "preagg")
+    assert(gDef.route(qDef) != "preagg")
   }
 
   test("CTE scope nests: an inner WITH's names are invisible outside it, " +
@@ -201,10 +201,11 @@ class TransportSecuritySpec extends AnyFunSuite {
   test("secured models bypass pre-aggregation routing (rollups have no " +
       "per-user row scope)") {
     import graft.plan.SemanticQuery
-    gen.plan(SemanticQuery(
+    val q = SemanticQuery(
       metrics = Seq("orders_secured.revenue"),
       dimensions = Seq("orders_secured.orderstatus"),
-      user = Some(Map("role" -> "analyst", "status" -> "F")))).collect()
-    assert(gen.lastRoute != "preagg")
+      user = Some(Map("role" -> "analyst", "status" -> "F")))
+    gen.plan(q).collect()
+    assert(gen.route(q) != "preagg")
   }
 }
