@@ -55,10 +55,10 @@ object PlanDump {
           // EXECUTE before dumping so the formatted plan is the AQE-final
           // runtime plan the bench times (isFinalPlan=true: coalesced
           // AQEShuffleReads, runtime join rewrites), not the initial
-          // speculative one. collect() — not a noop write — because the
-          // write would spawn its OWN QueryExecution and leave THIS one
-          // (the dumped one) unexecuted; results are report-sized.
-          df.collect()
+          // speculative one. This QueryExecution's own RDD runs, so the
+          // dumped plan is the executed one (a noop write would spawn its
+          // own QueryExecution), and no row reaches the driver.
+          df.queryExecution.toRdd.foreach(_ => ())
           val txt = df.queryExecution
             .explainString(ExplainMode.fromString("formatted"))
           Files.write(Paths.get(outDir, s"$name$suffix.txt"),

@@ -1,6 +1,6 @@
 package graft.gen
 
-import graft.functions.Exprs
+import graft.functions.{DecimalKernels, Exprs}
 import graft.graph.{JoinHop, SemanticGraph}
 import graft.model._
 import graft.plan.{FieldRef, Grains, SemanticQuery}
@@ -452,13 +452,14 @@ final class Generator(spark: SparkSession, cat: Catalog,
   private var lastRoute: String = ""
 
   /** A composed plan as the compile cache keeps it: the analyzed
-    * LOGICAL plan after the one-task gate, the route that built it, the
-    * gate's decision, the Dataset a hit returns again when
+    * LOGICAL plan after the decimal kernels and the one-task gate, the
+    * route that built it, the gate's decision, how many operators the
+    * kernels replaced, the Dataset a hit returns again when
     * [[Generator.reusable]] allows it, and the scan epoch and rollup
     * store version it was built under. */
   private case class Planned(plan: LogicalPlan, route: String,
-      shape: Generator.Shape, reused: Option[DataFrame], scanEpoch: Long,
-      storeVersion: Long)
+      shape: Generator.Shape, kernels: DecimalKernels.Replaced,
+      reused: Option[DataFrame], scanEpoch: Long, storeVersion: Long)
 
   /** Compile cache: identical requests reuse the composed plan
     * (reference: generator.py:332-377,1041 — warm repeat compile).
@@ -489,8 +490,11 @@ final class Generator(spark: SparkSession, cat: Catalog,
   def route(q: SemanticQuery): String = planned(q)._2.route
 
   /** The DataFrame for `q` together with the cache entry it was built
-    * from — every route (standard, window, funnel, pre-agg, multi-fact,
-    * and SqlFront, which calls [[plan]]) passes the gate here, once. */
+    * from. Every route (standard, window, funnel, pre-agg, multi-fact,
+    * and SqlFront, which calls [[plan]]) is rewritten here once, on a
+    * miss: first [[DecimalKernels.rewrite]] swaps double→decimal casts
+    * and decimal SUMs for their exact long-backed kernels, then the
+    * one-task gate reshapes the plan. A hit reuses the result. */
   private def planned(q: SemanticQuery): (DataFrame, Planned) =
     planCache.synchronized {
       // read before composing: an invalidation racing the compose then
@@ -503,11 +507,12 @@ final class Generator(spark: SparkSession, cat: Catalog,
         (hit.reused.getOrElse(GraftSqlBridge.dataFrame(spark, hit.plan)), hit)
       else {
         val df = compute(q)
-        val (shaped, shape) =
-          Generator.oneTask(spark, GraftSqlBridge.logicalPlan(df))
+        val composed = GraftSqlBridge.logicalPlan(df)
+        val (fast, kernels) = DecimalKernels.rewrite(composed)
+        val (shaped, shape) = Generator.oneTask(spark, fast)
         val out =
-          if (shape.oneTask) GraftSqlBridge.dataFrame(spark, shaped) else df
-        val p = Planned(shaped, lastRoute, shape,
+          if (shaped eq composed) df else GraftSqlBridge.dataFrame(spark, shaped)
+        val p = Planned(shaped, lastRoute, shape, kernels,
           Some(out).filter(_ => Generator.reusable(shape, shaped)), epoch,
           version)
         planCache.put(q, p)
@@ -637,7 +642,8 @@ final class Generator(spark: SparkSession, cat: Catalog,
     }.getOrElse("")
     s"route: ${p.route}\nmetrics: ${q.metrics.mkString(", ")}\n" +
       s"dimensions: ${q.dimensions.mkString(", ")}\n" + preaggLines +
-      s"shape: ${p.shape}\n" + GraftSqlBridge.explainString(df, "formatted")
+      s"shape: ${p.shape}\nkernels: ${p.kernels}\n" +
+      GraftSqlBridge.explainString(df, "formatted")
   }
 
   /** Aggregated frame at the requested dim grain, fan-out handled.

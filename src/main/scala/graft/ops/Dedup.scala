@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 
 /** Document deduplication operators for training-data pipelines.
   *
@@ -780,58 +780,57 @@ object Dedup {
     // single-partition shuffles: one job per round, whose handful of
     // rows sort in microseconds. Above the gate the adaptive plans are
     // untouched — a 100 TB pair graph keeps AQE's coalescing and skew
-    // handling (a converged giant component is a hot join key). Session
-    // confs are saved/restored; every consumer downstream of the loop
-    // plans under the caller's own settings (the returned frame reads
-    // the final round's checkpoint blocks, not a live plan).
+    // handling (a converged giant component is a hot join key). The
+    // inline loop plans in a clone of the caller's session, so its confs
+    // never reach the caller's: a query planned concurrently on that
+    // session keeps AQE and its shuffle width. The returned frame is
+    // bound back to the caller's session and reads the final round's
+    // checkpoint blocks, not a live plan.
     val gateEdges = spark.conf
       .getOption("spark.graft.clusters.inlineLoopMaxEdges")
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(1000000L)
-    val inline = nEdges <= gateEdges
-    val savedAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if (inline) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val loop = if (nEdges <= gateEdges) {
+      val clone = GraftSqlBridge.cloneSession(spark)
+      clone.conf.set("spark.sql.adaptive.enabled", "false")
+      clone.conf.set("spark.sql.shuffle.partitions", "1")
+      clone
+    } else spark
+    def in(s: SparkSession, df: DataFrame): DataFrame =
+      if (df.sparkSession eq s) df
+      else GraftSqlBridge.dataFrame(s, GraftSqlBridge.logicalPlan(df))
+    val edgesIn = in(loop, sym)
+    labels = in(loop, labels)
+    var round = 0
+    var changed = 1L
+    while (changed > 0) {
+      round += 1
+      require(round <= maxRounds,
+        s"duplicateClusters did not converge in $maxRounds rounds")
+      // neighbor minimum: the smallest label adjacent to (or already on) id
+      val viaEdges = edgesIn
+        .join(labels.select(col("id").as("dst"), col("label")), "dst")
+        .groupBy(col("src").as("id")).agg(min(col("label")).as("nbr"))
+      val stepped = labels.join(viaEdges, Seq("id"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
+          col("label").as("prev"))
+      // pointer jump: follow the label to ITS label (halves chains).
+      // LAZY checkpoint on purpose: the convergence count below is the
+      // round's first consumer, so it materializes the checkpoint inside
+      // its own job — an eager checkpoint here ran a separate barrier
+      // job first, doubling the per-round job count (~2 jobs × rounds of
+      // pure launch cost on converged-in-few-rounds dedup graphs)
+      val jumped = stepped
+        .join(labels.select(col("id").as("label"), col("label").as("ll")),
+          Seq("label"), "left")
+        .select(col("id"), least(col("label"), coalesce(col("ll"), col("label")))
+          .as("label"), col("prev"))
+        .localCheckpoint(false)
+      changed = jumped.filter(col("label") =!= col("prev")).count()
+      labels = jumped.select("id", "label")
     }
-    try {
-      var round = 0
-      var changed = 1L
-      while (changed > 0) {
-        round += 1
-        require(round <= maxRounds,
-          s"duplicateClusters did not converge in $maxRounds rounds")
-        // neighbor minimum: the smallest label adjacent to (or already on) id
-        val viaEdges = sym
-          .join(labels.select(col("id").as("dst"), col("label")), "dst")
-          .groupBy(col("src").as("id")).agg(min(col("label")).as("nbr"))
-        val stepped = labels.join(viaEdges, Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
-            col("label").as("prev"))
-        // pointer jump: follow the label to ITS label (halves chains).
-        // LAZY checkpoint on purpose: the convergence count below is the
-        // round's first consumer, so it materializes the checkpoint inside
-        // its own job — an eager checkpoint here ran a separate barrier
-        // job first, doubling the per-round job count (~2 jobs × rounds of
-        // pure launch cost on converged-in-few-rounds dedup graphs)
-        val jumped = stepped
-          .join(labels.select(col("id").as("label"), col("label").as("ll")),
-            Seq("label"), "left")
-          .select(col("id"), least(col("label"), coalesce(col("ll"), col("label")))
-            .as("label"), col("prev"))
-          .localCheckpoint(false)
-        changed = jumped.filter(col("label") =!= col("prev")).count()
-        labels = jumped.select("id", "label")
-      }
-      labels.select(col("id"), col("label").as("cluster_id"))
-    } finally {
-      if (inline) {
-        spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      }
-    }
+    in(spark, labels.select(col("id"), col("label").as("cluster_id")))
   }
 
   /** Keep one representative per duplicate cluster: drops every row whose

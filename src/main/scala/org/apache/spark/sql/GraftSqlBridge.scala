@@ -21,6 +21,21 @@ object GraftSqlBridge {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A session that starts with a copy of `spark`'s state, confs
+    * included (`newSession()` starts from defaults). Confs set on the
+    * clone do not reach `spark`. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `out`, a rewrite of `from` built from resolved expressions, marked
+    * analyzed when `from` was, so a Dataset over it skips the analyzer. */
+  def keepAnalyzed(from: catalyst.plans.logical.LogicalPlan,
+      out: catalyst.plans.logical.LogicalPlan)
+      : catalyst.plans.logical.LogicalPlan = {
+    if (from.analyzed) out.setAnalyzed()
+    out
+  }
+
   /** `plan` with a no-shuffle coalesce to one partition above every
     * leaf, union, expand and full outer join — the operators whose
     * physical output is not one partition even over one-partition input.
@@ -32,12 +47,10 @@ object GraftSqlBridge {
       : catalyst.plans.logical.LogicalPlan = {
     import catalyst.plans.FullOuter
     import catalyst.plans.logical.{Expand, Join, LeafNode, Repartition, Union}
-    val out = plan.transformUp {
+    keepAnalyzed(plan, plan.transformUp {
       case p @ (_: LeafNode | _: Union | _: Expand |
           Join(_, _, FullOuter, _, _)) =>
         Repartition(1, shuffle = false, p)
-    }
-    if (plan.analyzed) out.setAnalyzed()
-    out
+    })
   }
 }

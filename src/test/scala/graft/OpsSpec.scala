@@ -301,6 +301,33 @@ class OpsSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.clusters.inlineLoopMaxEdges")
   }
 
+  test("duplicate clusters: the loop never writes the caller's session confs") {
+    // a query planned concurrently on the caller's session must keep its
+    // AQE and shuffle width while the inline loop runs
+    val s = spark.newSession()
+    val chain = (1L until 200L).map(i => (i, i + 1)) ++
+      (1000L until 1040L).map(i => (i, 1000L))
+    val pairs = s.createDataFrame(chain).toDF("id_a", "id_b")
+    val watched = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    def confs() = watched.map(k => k -> s.conf.getOption(k))
+    val before = confs()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, Option[String])]]
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() => while (!stop.get) {
+      seen.add(confs()); Thread.sleep(1)
+    })
+    poller.start()
+    val clusters = try Dedup.duplicateClusters(pairs)
+    finally { stop.set(true); poller.join() }
+    assert(clusters.sparkSession eq s, "the result is bound to the caller")
+    val labels = clusters.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(!seen.isEmpty)
+    seen.forEach(c => assert(c == before, s"caller's confs changed to $c"))
+    assert(confs() == before)
+    assert(labels == ((1L to 200L).map(_ -> 1L) ++
+      (1000L until 1040L).map(_ -> 1000L)).toMap)
+  }
+
   test("ngram jaccard within blocks respects blocking") {
     val pairs = Dedup.ngramJaccardWithinBlocks(docs, "doc_id", "text", "source",
       n = 3, threshold = 0.5)

@@ -16,8 +16,10 @@ class PlanDumpSpec extends AnyFunSuite {
     val o = out()
     assert(PlanDump.run(spark, TestSpark.sfDir, o.toString,
       Set("q_agg_minmax"), "_t") == 0)
-    assert(Files.readString(o.resolve("q_agg_minmax_t.txt"))
-      .contains("== Physical Plan =="))
+    val plan = Files.readString(o.resolve("q_agg_minmax_t.txt"))
+    assert(plan.contains("== Physical Plan =="))
+    // the dumped plan is the executed, AQE-final one
+    assert(plan.contains("isFinalPlan=true"), plan)
   }
 
   test("an unknown name is a failure and the known ones still dump") {
