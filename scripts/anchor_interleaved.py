@@ -50,7 +50,7 @@ def spark_classpath(repo_root):
 def launch_server(sf_dir, repo_root):
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
+    env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     proc = subprocess.Popen(
         # 512m code cache: a long-lived server JITs generated classes for
         # 200+ distinct queries; the 240m default flushes hot compiled

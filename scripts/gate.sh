@@ -41,8 +41,18 @@ python3 scripts/make_frozen.py --check
 OUT_DIR="$(mktemp -d /tmp/graft_gate.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 echo "== gate: verify battery @ $SF_DIR -> $OUT_DIR"
-sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR $*" >"$OUT_DIR/verify.log" 2>&1 \
-  || { tail -40 "$OUT_DIR/verify.log"; echo "GATE FAIL: Verify crashed"; exit 1; }
+if ! sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR $*" >"$OUT_DIR/verify.log" 2>&1; then
+  # Verify names each unknown or crashed query on a VERIFY line; with
+  # none, the run itself died
+  n=$(grep -c '^VERIFY ' "$OUT_DIR/verify.log" || true)
+  if [ "${n:-0}" = "0" ]; then
+    tail -40 "$OUT_DIR/verify.log"; echo "GATE FAIL: Verify crashed"
+  else
+    grep '^VERIFY ' "$OUT_DIR/verify.log"
+    echo "GATE FAIL: Verify: $n queries failed"
+  fi
+  exit 1
+fi
 echo "== gate: codegen tripwire (battery)"
 codegen_tripwire "$OUT_DIR/verify.log" "the Verify battery"
 echo "== gate: tolerant check (check_oracle.py)"

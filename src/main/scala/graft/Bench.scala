@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 /** Driver-run benchmark: times every SparkEntry query on
@@ -52,45 +58,20 @@ object Bench {
     val exact = args.contains("--exact")
     val nameFilter = args.filterNot(_.startsWith("--")).headOption
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide aggregates (LSH plane dots, simhash bit-sums) need per-
-      // function codegen splitting or they overflow janino's 64 KB limit
-      .config("spark.sql.codegen.aggregate.splitAggregateFunc.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // coalesce post-shuffle partitions to the advisory target size
-      // instead of preserving parallelism: Spark's own docs recommend
-      // false; at small-SF it stops paying 32-task stage launches for
-      // kilobyte shuffles, at cluster scale partitions hit the target
-      // size anyway
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      // a partitioned rollup store holds ~80 month dirs; above this
-      // threshold Spark launches a DISTRIBUTED listing job (one task
-      // per dir) whose launch cost dwarfs a driver-side listing until
-      // the dir count is in the hundreds — every preagg-routed query
-      // was paying an 80-task job just to plan
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "256")
-      // janino's generated-class cache holds 100 entries by default; a
-      // battery that interleaves 200+ distinct queries (the serve-mode
-      // anchor, every round-robin pass) evicts everything between two
-      // runs of the same query and re-COMPILES every stage each time —
-      // measured 2x on a 46-query round-robin. Static conf, so it must
-      // be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
+    val sc = spark.sparkContext
+    sc.setLogLevel("WARN")
 
     val picked = SparkEntry.queries.filter { case (k, _) =>
       nameFilter.forall(_.split(',').exists(k.contains)) &&
         (exact || !exactOnly(k) ||
           nameFilter.exists(_.split(',').exists(k.contains))) }
+
+    // one untimed pass over every picked query absorbs JVM, codegen and
+    // file-listing warmup before anything is measured
+    def warm(): Unit = picked.foreach { case (_, fn) =>
+      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    }
 
     // `--profile`: per-query Spark-job accounting — where does a hot
     // anchor query's wall time go? For each matching query (warmed
@@ -100,64 +81,14 @@ object Bench {
     // planning floors (fix: fewer actions/jobs); one whose task time
     // ~= wall is doing real work (fix: a better plan or kernel).
     if (args.contains("--profile")) {
-      import org.apache.spark.scheduler._
-      picked.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val tasks = new java.util.concurrent.atomic.AtomicInteger
-      val taskNanos = new java.util.concurrent.atomic.AtomicLong
-      // per-STAGE task-time attribution (stage id → (name, tasks, ns)) —
-      // the query totals say WHETHER time is distributed work; the stage
-      // rows say WHERE (which exchange/scan/agg), which is what chasing
-      // a routed-vs-twin gap actually needs
-      val stageInfo = new java.util.concurrent.ConcurrentHashMap[
-        Int, (String, Int, Long)]()
-      val listener = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet()
-          // append row volumes at completion — WHICH stage carries the
-          // records is the routed-vs-twin question
-          val m = s.stageInfo.taskMetrics
-          if (m != null) {
-            val vol = s"  [in=${m.inputMetrics.recordsRead} " +
-              s"sRead=${m.shuffleReadMetrics.recordsRead} " +
-              s"sWrite=${m.shuffleWriteMetrics.recordsWritten} " +
-              s"run=${m.executorRunTime} cpu=${m.executorCpuTime / 1000000} " +
-              s"deser=${m.executorDeserializeTime} gc=${m.jvmGCTime} " +
-              s"fetchWait=${m.shuffleReadMetrics.fetchWaitTime}]"
-            stageInfo.computeIfPresent(s.stageInfo.stageId,
-              (_, v) => (v._1 + vol, v._2, v._3))
-          }
-        }
-        override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-          // the callsite name is opaque for SQL stages; the RDD scope
-          // chain (Scan > Exchange > WholeStageCodegen…) says what the
-          // stage IS
-          val scopes = s.stageInfo.rddInfos.sortBy(_.id)
-            .map(r => r.scope.map(_.name).getOrElse(r.name))
-            .distinct.take(6).mkString(" > ")
-          stageInfo.putIfAbsent(s.stageInfo.stageId, (scopes.take(96), 0, 0L))
-        }
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-          tasks.incrementAndGet()
-          if (t.taskInfo != null) {
-            taskNanos.addAndGet(t.taskInfo.duration * 1000000L)
-            stageInfo.merge(t.stageId, ("?", 1, t.taskInfo.duration * 1000000L),
-              (a, b) => (a._1, a._2 + b._2, a._3 + b._3))
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      // settle any still-queued warmup events before the first query
-      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+      warm()
       val perStage = args.contains("--stages")
+      val counts = new Counters(perStage)
+      sc.addSparkListener(counts)
+      // settle any still-queued warmup events before the first query
+      ListenerBridge.drain(sc)
       picked.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        jobs.set(0); stages.set(0); tasks.set(0); taskNanos.set(0)
-        stageInfo.clear()
+        counts.reset()
         val t = System.nanoTime()
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
         val wall = (System.nanoTime() - t) / 1e9
@@ -165,19 +96,17 @@ object Bench {
         // a fixed sleep lets late task-ends bleed into the next query's
         // counters under load, which is exactly the attribution error
         // this flag exists to avoid
-        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
-        println(f"PROFILE $name%-32s wall=$wall%7.3f jobs=${jobs.get}%3d " +
-          f"stages=${stages.get}%3d tasks=${tasks.get}%4d " +
-          f"taskSec=${taskNanos.get / 1e9}%7.3f")
-        if (perStage) {
-          stageInfo.asScala.toSeq.sortBy(-_._2._3).take(15).foreach {
-            case (sid, (sname, nt, ns)) =>
-              println(f"  STAGE $sid%4d tasks=$nt%4d " +
-                f"taskSec=${ns / 1e9}%7.3f  $sname")
-          }
+        ListenerBridge.drain(sc)
+        println(f"PROFILE $name%-32s wall=$wall%7.3f jobs=${counts.jobs.get}%3d " +
+          f"stages=${counts.stages.get}%3d tasks=${counts.tasks.get}%4d " +
+          f"taskSec=${counts.taskNanos.get / 1e9}%7.3f")
+        counts.stageRows.asScala.toSeq.sortBy(-_._2._3).take(15).foreach {
+          case (sid, (sname, nt, ns)) =>
+            println(f"  STAGE $sid%4d tasks=$nt%4d " +
+              f"taskSec=${ns / 1e9}%7.3f  $sname")
         }
       }
-      spark.sparkContext.removeSparkListener(listener)
+      sc.removeSparkListener(counts)
       spark.stop()
       return
     }
@@ -190,9 +119,7 @@ object Bench {
     // battery ran in. Protocol: "READY" after warmup, then per input
     // line `<query>` → `TIME <query> <seconds>`; "EXIT" quits.
     if (args.contains("--serve")) {
-      picked.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
+      warm()
       println("READY"); Console.flush()
       scala.io.Source.stdin.getLines().takeWhile(_.trim != "EXIT")
         .foreach { line =>
@@ -204,9 +131,7 @@ object Bench {
     }
 
     val t0 = System.nanoTime()
-    picked.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
+    warm()
     val warmup = (System.nanoTime() - t0) / 1e9
 
     val passes = 3
@@ -217,24 +142,17 @@ object Bench {
     // The listener only OBSERVES — the timed region (fn + count) is
     // unchanged; the event-bus drain sits outside each measured window
     // so late task-ends attribute to the right pass.
-    val passTaskNanos = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null)
-            passTaskNanos.addAndGet(t.taskInfo.duration * 1000000L)
-      })
-    org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+    val counts = new Counters(perStage = false)
+    sc.addSparkListener(counts)
+    ListenerBridge.drain(sc)
     val timed = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> timePasses(passes) { () =>
-        passTaskNanos.set(0)
+        counts.reset()
         val t = System.nanoTime()
         try {
           fn(spark, sfDir).count()
-          ((System.nanoTime() - t) / 1e9, passTaskNanos.get / 1e9)
-        } finally
-          org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+          ((System.nanoTime() - t) / 1e9, counts.taskNanos.get / 1e9)
+        } finally ListenerBridge.drain(sc)
       }
     }
     val errors = timed.collect { case (name, Left(err)) => name -> err }
@@ -296,6 +214,68 @@ object Bench {
     Console.flush()
     // a crashed query is reported, never timed — and never a green run
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  /** The one listener behind `--profile` and the timed passes: jobs,
+    * stages, tasks and summed task time since the last `reset`. With
+    * `perStage` it also keeps one row per stage (stage id → (what the
+    * stage is, tasks, task-nanos)) — the query totals say WHETHER time
+    * is distributed work; the stage rows say WHERE (which exchange/scan/
+    * agg), which is what chasing a routed-vs-twin gap actually needs.
+    * It only observes. */
+  private final class Counters(perStage: Boolean) extends SparkListener {
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
+    val tasks = new AtomicInteger
+    val taskNanos = new AtomicLong
+    val stageRows = new ConcurrentHashMap[Int, (String, Int, Long)]()
+
+    def reset(): Unit = {
+      jobs.set(0); stages.set(0); tasks.set(0); taskNanos.set(0)
+      stageRows.clear()
+    }
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+
+    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+      if (perStage) {
+        // the callsite name is opaque for SQL stages; the RDD scope
+        // chain (Scan > Exchange > WholeStageCodegen…) says what the
+        // stage IS
+        val scopes = s.stageInfo.rddInfos.sortBy(_.id)
+          .map(r => r.scope.map(_.name).getOrElse(r.name))
+          .distinct.take(6).mkString(" > ")
+        stageRows.putIfAbsent(s.stageInfo.stageId, (scopes.take(96), 0, 0L))
+      }
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      // append row volumes at completion — WHICH stage carries the
+      // records is the routed-vs-twin question
+      val m = s.stageInfo.taskMetrics
+      if (perStage && m != null) {
+        val vol = s"  [in=${m.inputMetrics.recordsRead} " +
+          s"sRead=${m.shuffleReadMetrics.recordsRead} " +
+          s"sWrite=${m.shuffleWriteMetrics.recordsWritten} " +
+          s"run=${m.executorRunTime} cpu=${m.executorCpuTime / 1000000} " +
+          s"deser=${m.executorDeserializeTime} gc=${m.jvmGCTime} " +
+          s"fetchWait=${m.shuffleReadMetrics.fetchWaitTime}]"
+        stageRows.computeIfPresent(s.stageInfo.stageId,
+          (_, v) => (v._1 + vol, v._2, v._3))
+      }
+    }
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      if (t.taskInfo != null) {
+        val ns = t.taskInfo.duration * 1000000L
+        taskNanos.addAndGet(ns)
+        if (perStage)
+          stageRows.merge(t.stageId, ("?", 1, ns),
+            (a, b) => (a._1, a._2 + b._2, a._3 + b._3))
+      }
+    }
   }
 
   /** Time `passes` runs of one query. Each pass returns its (wall,

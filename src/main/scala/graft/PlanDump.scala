@@ -7,8 +7,8 @@ import java.nio.file.{Files, Paths}
   * — the committed plan evidence for optimization rounds (plans/rNN/).
   * Usage: runMain graft.PlanDump <outDir> <q1,q2,...> [suffix]
   * Exits 1 when a requested name is unknown or a dump fails.
-  * Session config mirrors Bench so the captured plan is the plan the
-  * bench actually times (same AQE / shuffle-partition settings).
+  * The session is `GraftSession.create()`, as in Bench, so the captured
+  * plan is the plan the bench actually times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -16,21 +16,7 @@ object PlanDump {
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSet
     val suffix = if (args.length > 2) args(2) else ""
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.aggregate.splitAggregateFunc.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "256")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     val failed = try run(spark, sfDir, outDir, names, suffix)
                  finally spark.stop()

@@ -4,19 +4,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Shared session for all suites (one JVM-wide session keeps test time
-  * bounded; suites must not mutate session state). */
+  * bounded; suites must not mutate session state). It is the mains'
+  * `GraftSession` on `local[4]`, so specs check the plans the bench runs. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide aggregates (LSH plane dots, simhash bit-sums) need per-
-      // function codegen splitting or they overflow janino's 64 KB limit
-      .config("spark.sql.codegen.aggregate.splitAggregateFunc.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
