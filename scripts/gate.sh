@@ -38,6 +38,11 @@ echo "== gate: frozen bench-corpus checksum"
 # round-over-round bench deltas come from frozen/ ONLY — silent drift
 # there would quietly invalidate every cross-round comparison
 python3 scripts/make_frozen.py --check
+echo "== gate: benchmark self-tests (perfbench/tests)"
+# the benchmark's own rules (a crash is never a sample, a wrong result
+# exits non-zero, one seed gives one request list) are code too
+PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbench/tests \
+  || { echo "GATE FAIL: perfbench self-tests"; exit 1; }
 OUT_DIR="$(mktemp -d /tmp/graft_gate.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 echo "== gate: verify battery @ $SF_DIR -> $OUT_DIR"

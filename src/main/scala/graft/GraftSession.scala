@@ -1,11 +1,15 @@
 package graft
 
+import graft.gen.Generator
+import graft.model.Catalog
+import graft.preagg.PreAggStore
 import org.apache.spark.sql.SparkSession
 
 /** The driver session every graft main (Bench, Verify, PlanDump) and the
   * test suites plan under, so the correctness gate, the plan dumps and the
   * bench all see the same physical plans. The conf list is the one
   * `perfbench/src/Runner.scala` sets, minus its per-run scratch dirs.
+  * Next to it, the one shared [[Generator]] per session and catalog.
   */
 object GraftSession {
 
@@ -46,4 +50,32 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  /** Generators the factory keeps; the least recently used goes first. */
+  private val MaxGenerators = 16
+
+  private val generators =
+    new java.util.LinkedHashMap[(SparkSession, Catalog, Option[PreAggStore]),
+        Generator](32, 0.75f, /*accessOrder=*/ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (SparkSession, Catalog, Option[PreAggStore]), Generator]): Boolean =
+        size > MaxGenerators
+    }
+
+  /** The long-lived generator, and so the warm plan cache, for `cat` on
+    * `spark` (reference: the live semantic layer one connection keeps).
+    * Keyed by the catalog's VALUE — `Catalog` is an immutable case class,
+    * so a caller that rebuilds an equal catalog per request still gets
+    * the same generator — and by the rollup store's identity. A stopped
+    * session's generators are dropped on every call, and the rest are
+    * LRU-bounded. `new Generator` keeps a private, cold cache of its
+    * own. */
+  def generator(spark: SparkSession, cat: Catalog,
+      preagg: Option[PreAggStore] = None): Generator =
+    generators.synchronized {
+      val it = generators.keySet.iterator
+      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
+      generators.computeIfAbsent((spark, cat, preagg),
+        _ => new Generator(spark, cat, preagg))
+    }
 }

@@ -20,35 +20,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** Memoized per (session, dir) — the production shape is a LONG-LIVED
-    * semantic layer whose compile/plan cache is warm across requests
-    * (the reference keeps one live layer per connection for exactly this
-    * reason); constructing a fresh Generator per call made every battery
-    * pass re-compose plans the cache had already built. The catalog is
-    * immutable and `Generator.plan` is synchronized, so sharing one
-    * instance across sequential battery passes is safe. */
-  private val MaxGen = 8
-  private val genCache =
-    new java.util.LinkedHashMap[(SparkSession, String), Generator](
-        16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), Generator]): Boolean =
-        size > MaxGen
-    }
-  private def gen(s: SparkSession, dir: String): Generator =
-    genCache.synchronized {
-      // a long-lived host that creates many sessions must not retain a
-      // stopped session (and its Generator/plan cache) forever: purge
-      // dead-session entries on every access, and LRU-bound the rest —
-      // the memoization only needs to survive sequential battery passes
-      val it = genCache.keySet.iterator
-      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-      genCache.computeIfAbsent((s, dir),
-        _ => new Generator(s, TpchCatalog.build(dir)))
-    }
+  /** The session's shared generator over the TPC-H catalog at `dir`:
+    * a long-lived semantic layer whose plan cache stays warm across
+    * requests ([[GraftSession.generator]]). */
+  private def tpch(s: SparkSession, dir: String): Generator =
+    GraftSession.generator(s, TpchCatalog.build(dir))
 
   private def q(s: SparkSession, dir: String)(query: SemanticQuery): DataFrame =
-    gen(s, dir).plan(query)
+    tpch(s, dir).plan(query)
+
+  /** A table calc over a TPC-H semantic query, kept as a derived step of
+    * the query's plan-cache entry. `calc` names the TableCalcs function
+    * with its arguments, the result ordering and the output cast; with
+    * the calc's window size gate
+    * ([[TableCalcs.globalWindowMaxBytes]]) it keys the step, since
+    * together they determine `f`. */
+  private def tableCalc(s: SparkSession, dir: String, query: SemanticQuery,
+      calc: Product)(f: DataFrame => DataFrame): DataFrame =
+    tpch(s, dir).plan(query, (calc, TableCalcs.globalWindowMaxBytes(s)))(f)
 
   /** 30 tokens no real corpus contains — the novel filler between the
     * planted contaminated passages of the span-decontamination pair. */
@@ -487,80 +476,104 @@ object SparkEntry {
       orderBy = Seq("order_date__month")))),
 
     // ---- §2.8 top-n + §1.1 table calculations ----
-    "q_topn" -> ((s, d) => TableCalcs.topN(q(s, d)(SemanticQuery(
-      metrics = Seq("orders.revenue"),
-      dimensions = Seq("orders.order_date__month"))),
-      "revenue", 3).orderBy("order_date__month")),
-
-    "q_tablecalc_pct" -> ((s, d) => TableCalcs.percentOfTotal(
-      q(s, d)(SemanticQuery(
+    "q_topn" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.orderstatus"))),
-      "revenue", "revenue_share").orderBy("orderstatus")),
+        dimensions = Seq("orders.order_date__month")),
+      ("topN", "revenue", 3, "order_date__month")) { df =>
+      TableCalcs.topN(df, "revenue", 3).orderBy("order_date__month")
+    }),
 
-    "q_tablecalc_running" -> ((s, d) => TableCalcs.runningTotal(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_pct" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.order_date__month"))),
-      "revenue", Seq("order_date__month"), "running_revenue")
-      .orderBy("order_date__month")),
+        dimensions = Seq("orders.orderstatus")),
+      ("percentOfTotal", "revenue", "revenue_share", "orderstatus")) { df =>
+      TableCalcs.percentOfTotal(df, "revenue", "revenue_share")
+        .orderBy("orderstatus")
+    }),
 
-    "q_tablecalc_rank" -> ((s, d) => asLong(TableCalcs.rankBy(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_running" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.orderpriority"))),
-      "revenue", "revenue_rank").orderBy("orderpriority"), "revenue_rank")),
+        dimensions = Seq("orders.order_date__month")),
+      ("runningTotal", "revenue", "running_revenue", "order_date__month")) {
+      df => TableCalcs.runningTotal(df, "revenue", Seq("order_date__month"),
+        "running_revenue").orderBy("order_date__month")
+    }),
 
-    "q_tablecalc_moving_avg" -> ((s, d) => round4(TableCalcs.movingAverage(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_rank" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.order_date__month"))),
-      "revenue", Seq("order_date__month"), 3, "revenue_ma3")
-      .orderBy("order_date__month"), "revenue_ma3")),
+        dimensions = Seq("orders.orderpriority")),
+      ("rankBy", "revenue", "revenue_rank", "orderpriority", "asLong")) { df =>
+      asLong(TableCalcs.rankBy(df, "revenue", "revenue_rank")
+        .orderBy("orderpriority"), "revenue_rank")
+    }),
 
-    "q_tablecalc_prev" -> ((s, d) => round4(TableCalcs.percentOfPrevious(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_moving_avg" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.order_date__month"))),
-      "revenue", Seq("order_date__month"), "revenue_mom_pct")
-      .orderBy("order_date__month"), "revenue_mom_pct")),
+        dimensions = Seq("orders.order_date__month")),
+      ("movingAverage", "revenue", 3, "revenue_ma3", "order_date__month",
+        "round4")) { df =>
+      round4(TableCalcs.movingAverage(df, "revenue", Seq("order_date__month"),
+        3, "revenue_ma3").orderBy("order_date__month"), "revenue_ma3")
+    }),
 
-    "q_tablecalc_coltotal" -> ((s, d) => round4(TableCalcs.percentOfColumnTotal(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_prev" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.orderstatus", "orders.orderpriority"))),
-      "revenue", Seq("orderstatus"), "revenue_status_share")
-      .orderBy("orderstatus", "orderpriority"), "revenue_status_share")),
+        dimensions = Seq("orders.order_date__month")),
+      ("percentOfPrevious", "revenue", "revenue_mom_pct", "order_date__month",
+        "round4")) { df =>
+      round4(TableCalcs.percentOfPrevious(df, "revenue",
+        Seq("order_date__month"), "revenue_mom_pct")
+        .orderBy("order_date__month"), "revenue_mom_pct")
+    }),
 
-    "q_tablecalc_percentile" -> ((s, d) => round4(TableCalcs.percentileOf(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_coltotal" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.orderpriority"))),
-      "revenue", "revenue_pctile").orderBy("orderpriority"), "revenue_pctile")),
+        dimensions = Seq("orders.orderstatus", "orders.orderpriority")),
+      ("percentOfColumnTotal", "revenue", "orderstatus",
+        "revenue_status_share", "round4")) { df =>
+      round4(TableCalcs.percentOfColumnTotal(df, "revenue", Seq("orderstatus"),
+        "revenue_status_share").orderBy("orderstatus", "orderpriority"),
+        "revenue_status_share")
+    }),
+
+    "q_tablecalc_percentile" -> ((s, d) => tableCalc(s, d, SemanticQuery(
+        metrics = Seq("orders.revenue"),
+        dimensions = Seq("orders.orderpriority")),
+      ("percentileOf", "revenue", "revenue_pctile", "orderpriority",
+        "round4")) { df =>
+      round4(TableCalcs.percentileOf(df, "revenue", "revenue_pctile")
+        .orderBy("orderpriority"), "revenue_pctile")
+    }),
 
     // the reference's percentile TYPE: a constant interpolated quantile
     // (p90 revenue over the monthly series) on every row — distinct
     // from q_tablecalc_percentile's percent_rank helper
-    "q_tablecalc_pctvalue" -> ((s, d) => round4(TableCalcs.percentileValue(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_pctvalue" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.order_date__month"))),
-      "revenue", 0.9, "revenue_p90").orderBy("order_date__month"),
-      "revenue_p90")),
+        dimensions = Seq("orders.order_date__month")),
+      ("percentileValue", "revenue", 0.9, "revenue_p90", "order_date__month",
+        "round4")) { df =>
+      round4(TableCalcs.percentileValue(df, "revenue", 0.9, "revenue_p90")
+        .orderBy("order_date__month"), "revenue_p90")
+    }),
 
-    "q_tablecalc_rownum" -> ((s, d) => asLong(TableCalcs.rowNumberBy(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_rownum" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue"),
-        dimensions = Seq("orders.order_date__month"))),
-      Seq("order_date__month"), "row_num")
-      .orderBy("order_date__month"), "row_num")),
+        dimensions = Seq("orders.order_date__month")),
+      ("rowNumberBy", "order_date__month", "row_num", "asLong")) { df =>
+      asLong(TableCalcs.rowNumberBy(df, Seq("order_date__month"), "row_num")
+        .orderBy("order_date__month"), "row_num")
+    }),
 
-    "q_tablecalc_formula" -> ((s, d) => round4(TableCalcs.formula(
-      q(s, d)(SemanticQuery(
+    "q_tablecalc_formula" -> ((s, d) => tableCalc(s, d, SemanticQuery(
         metrics = Seq("orders.revenue", "orders.order_count"),
-        dimensions = Seq("orders.orderstatus"))),
-      "cast(revenue as double) / nullif(order_count, 0)", "avg_order_value")
-      .orderBy("orderstatus"), "avg_order_value")),
+        dimensions = Seq("orders.orderstatus")),
+      ("formula", "cast(revenue as double) / nullif(order_count, 0)",
+        "avg_order_value", "orderstatus", "round4")) { df =>
+      round4(TableCalcs.formula(df,
+        "cast(revenue as double) / nullif(order_count, 0)", "avg_order_value")
+        .orderBy("orderstatus"), "avg_order_value")
+    }),
 
     // structured graph introspection (reference introspection.py
     // describe_graph): the UI-facing catalog document round-trips
@@ -595,17 +608,17 @@ object SparkEntry {
       orderBy = Seq("event_type", "next_event_type")))),
 
     "q_saved_query" -> ((s, d) =>
-      gen(s, d).planSaved("revenue_by_priority")),
+      tpch(s, d).planSaved("revenue_by_priority")),
 
     // explore contract: defaults fill the selection, the mandatory
     // orderstatus filter always applies (reference: consumption.py:100)
     "q_explore" -> ((s, d) =>
-      gen(s, d).planExplore("fulfilled_orders")),
+      tpch(s, d).planExplore("fulfilled_orders")),
 
     // ---- §2.12 semantic SQL front end ----
     "q_sqlfront" -> ((s, d) => {
       val cat = TpchCatalog.build(d)
-      new graft.sqlfront.SqlFront(s, cat, new Generator(s, cat)).sql(
+      new graft.sqlfront.SqlFront(s, cat, GraftSession.generator(s, cat)).sql(
         """SELECT customer.mktsegment, orders.revenue, orders.order_count
           |FROM orders
           |WHERE orders.orderstatus = 'F'
@@ -614,7 +627,7 @@ object SparkEntry {
 
     "q_sqlfront_having" -> ((s, d) => {
       val cat = TpchCatalog.build(d)
-      new graft.sqlfront.SqlFront(s, cat, new Generator(s, cat)).sql(
+      new graft.sqlfront.SqlFront(s, cat, GraftSession.generator(s, cat)).sql(
         """SELECT orders.orderpriority, orders.revenue FROM orders
           |GROUP BY orders.orderpriority
           |HAVING orders.revenue > 70000000
@@ -625,7 +638,7 @@ object SparkEntry {
     // shell over the materialized view (reference: query_rewriter.py:917)
     "q_sqlfront_cte" -> ((s, d) => {
       val cat = TpchCatalog.build(d)
-      new graft.sqlfront.SqlFront(s, cat, new Generator(s, cat)).sql(
+      new graft.sqlfront.SqlFront(s, cat, GraftSession.generator(s, cat)).sql(
         """WITH seg AS (
           |  SELECT orders.orderpriority, orders.revenue FROM orders
           |)
@@ -637,7 +650,7 @@ object SparkEntry {
     // cross-model `metrics` virtual table (reference: query_rewriter.py:2616)
     "q_sqlfront_metrics" -> ((s, d) => {
       val cat = TpchCatalog.build(d)
-      new graft.sqlfront.SqlFront(s, cat, new Generator(s, cat)).sql(
+      new graft.sqlfront.SqlFront(s, cat, GraftSession.generator(s, cat)).sql(
         "SELECT orders.revenue, revenue_per_item FROM metrics")
     }),
 
@@ -658,7 +671,7 @@ object SparkEntry {
         metrics = Seq(Metric("nation_count",
           agg = Some("count_distinct"), sql = Some("n_nationkey"))))
       val cat = graft.model.Catalog().add(nation, region)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("nation_x.nation_count"),
         dimensions = Seq("region_x.name"),
         orderBy = Seq("name")))
@@ -668,7 +681,7 @@ object SparkEntry {
     // each branch plans independently, set semantics dedup the result
     "q_set_ops" -> ((s, d) => {
       val cat = TpchCatalog.build(d)
-      new graft.sqlfront.SqlFront(s, cat, new Generator(s, cat)).sql(
+      new graft.sqlfront.SqlFront(s, cat, GraftSession.generator(s, cat)).sql(
         """SELECT customer.mktsegment FROM customer
           |EXCEPT
           |SELECT customer.mktsegment FROM customer
@@ -695,7 +708,7 @@ object SparkEntry {
           sql = Some("cast(o_totalprice as decimal(18,2))"),
           filters = Seq("o_orderpriority = '1-URGENT'"))))
       val cat = graft.model.Catalog().add(parent).add(child)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders_urgent.revenue", "orders_urgent.urgent_revenue"),
         dimensions = Seq("orders_urgent.orderstatus"),
         orderBy = Seq("orderstatus")))
@@ -712,20 +725,23 @@ object SparkEntry {
           Dimension("orderstatus", sql = Some("o_orderstatus")),
           Dimension("internal_code", sql = Some("o_clerk"), public = false)),
         metrics = Seq(Metric("order_count", agg = Some("count"))))
-      val cat = graft.model.Catalog().add(m)
+      val g = GraftSession.generator(s, graft.model.Catalog().add(m))
       val denied =
         try {
-          new Generator(s, cat).plan(SemanticQuery(
+          g.plan(SemanticQuery(
             metrics = Seq("orders_vis.order_count"),
             dimensions = Seq("orders_vis.internal_code"))).collect()
           0
         } catch { case _: Exception => 1 }
-      val visibleStillWorks = new Generator(s, cat).plan(SemanticQuery(
-        metrics = Seq("orders_vis.order_count"),
-        dimensions = Seq("orders_vis.orderstatus"))).count()
-      s.range(1).select(
-        lit(denied).cast("int").as("denied"),
-        lit(visibleStillWorks).cast("long").as("visible_groups"))
+      // the visible plan's group count, counted by the returned Dataset
+      // itself, so the query function runs no job
+      g.plan(SemanticQuery(
+          metrics = Seq("orders_vis.order_count"),
+          dimensions = Seq("orders_vis.orderstatus")),
+        ("visible_groups", denied)) { visible =>
+        visible.agg(count(lit(1)).as("visible_groups"))
+          .select(lit(denied).cast("int").as("denied"), col("visible_groups"))
+      }
     }),
 
     // ---- §4.1 pre-aggregation routing ----
@@ -734,7 +750,7 @@ object SparkEntry {
       val store = new graft.preagg.PreAggStore(s, cat,
         s"${System.getProperty("java.io.tmpdir")}/graft_preagg_${math.abs(d.hashCode)}")
       store.materializeIfAbsent("orders", cat.model("orders").preAggregations.head)
-      val g2 = new Generator(s, cat, Some(store))
+      val g2 = GraftSession.generator(s, cat, Some(store))
       round4(g2.plan(SemanticQuery(
         metrics = Seq("orders.revenue", "orders.order_count", "orders.avg_order_value"),
         dimensions = Seq("orders.orderstatus", "orders.order_date__month"),
@@ -776,7 +792,7 @@ object SparkEntry {
       val models = graft.adapters.CubeAdapter.loadFile(
         "/root/reference/tests/fixtures/cube/orders.yml", resolve)
       val cat = graft.model.Catalog().add(models.filter(_.name == "orders"): _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders.revenue", "orders.count", "orders.avg_order_value"),
         dimensions = Seq("orders.status"),
         orderBy = Seq("status"))), "avg_order_value")
@@ -791,7 +807,7 @@ object SparkEntry {
         s"${System.getProperty("java.io.tmpdir")}/graft_preagg_${math.abs(d.hashCode)}")
       store.materializeIfAbsent("orders",
         cat.model("orders").preAggregations.find(_.name == "daily_by_customer").get)
-      val g2 = new Generator(s, cat, Some(store))
+      val g2 = GraftSession.generator(s, cat, Some(store))
       g2.plan(SemanticQuery(
         metrics = Seq("orders.revenue", "orders.order_count"),
         dimensions = Seq("nation.name"),
@@ -810,7 +826,7 @@ object SparkEntry {
       val orders = graft.adapters.HexAdapter.loadFile(
         "/root/reference/tests/fixtures/hex/orders.yml", resolve)
       val cat = graft.model.Catalog().add(orders: _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders.revenue", "orders.order_count",
           "orders.completed_revenue", "orders.conversion_rate"),
         dimensions = Seq("orders.status"),
@@ -828,7 +844,7 @@ object SparkEntry {
       val m = graft.adapters.SupersetAdapter.loadFile(
         "/root/reference/tests/fixtures/superset/orders.yaml", resolve)
       val cat = graft.model.Catalog().add(m)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders.count", "orders.total_revenue",
           "orders.avg_order_value"),
         dimensions = Seq("orders.status"),
@@ -851,7 +867,7 @@ object SparkEntry {
       val imp = graft.adapters.RillAdapter.loadFile(
         "/root/reference/tests/fixtures/rill/orders.yaml", resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders.total_orders", "orders.total_revenue",
           "orders.avg_order_value", "orders.completed_orders"),
         dimensions = Seq("orders.status"),
@@ -876,7 +892,7 @@ object SparkEntry {
         "/root/reference/tests/fixtures/lookml/orders.lkml", resolve)
       val cat = graft.model.Catalog().add(
         imp.models.filter(_.name == "orders"): _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders.count", "orders.revenue",
           "orders.completed_revenue", "orders.conversion_rate"),
         dimensions = Seq("orders.status"),
@@ -901,7 +917,7 @@ object SparkEntry {
       val imp = graft.adapters.MetricFlowAdapter.loadFile(
         "/root/reference/tests/fixtures/metricflow/semantic_models.yml", resolve)
       val cat = graft.adapters.MetricFlowAdapter.toCatalog(imp)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders.revenue", "orders.order_count",
           "average_order_value"),
         dimensions = Seq("customers.region"),
@@ -942,7 +958,7 @@ object SparkEntry {
           |""".stripMargin
       val imp = graft.adapters.MetricFlowAdapter.loadString(yaml, resolve)
       val cat = graft.adapters.MetricFlowAdapter.toCatalog(imp)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("pct_orders.amount_p90", "pct_orders.amount_med_disc"),
         dimensions = Seq("pct_orders.status"),
         orderBy = Seq("status"))), "amount_p90", "amount_med_disc")
@@ -959,7 +975,7 @@ object SparkEntry {
       val m = graft.adapters.TableauAdapter.loadFile(
         "/root/reference/tests/fixtures/tableau/orders.tds", resolve).head
       val cat = graft.model.Catalog().add(m)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders.amount", "orders.order_count"),
         dimensions = Seq("orders.order_date__month"),
         orderBy = Seq("order_date__month")))
@@ -985,7 +1001,7 @@ object SparkEntry {
       val imp = graft.adapters.OmniAdapter.loadDirectory(
         "/root/reference/tests/fixtures/omni", resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("orders.count", "orders.total_revenue",
           "orders.avg_order_value", "orders.completed_revenue"),
         dimensions = Seq("customers.country"),
@@ -1041,7 +1057,7 @@ object SparkEntry {
           |    relationship_type: many_to_one
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("sf_orders.revenue", "sf_orders.order_count"),
         dimensions = Seq("sf_customer.segment"),
         orderBy = Seq("segment")))
@@ -1102,7 +1118,7 @@ object SparkEntry {
           |              expression: COUNT(DISTINCT osi_orders.order_id)
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("osi_orders.total_revenue", "osi_orders.order_count"),
         dimensions = Seq("osi_customers.segment"),
         orderBy = Seq("segment")))
@@ -1187,7 +1203,7 @@ object SparkEntry {
           |""".stripMargin), resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
         .addGraphMetric(imp.graphMetrics: _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("fact_orders.total_amount", "fact_orders.order_count",
           "avg_order_value"),
         dimensions = Seq("dim_cust.segment"),
@@ -1237,7 +1253,7 @@ object SparkEntry {
           |      "sourceColumnDataType": "STRING"}]}
           |]}}""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("gd_orders.amount", "gd_orders.max_amount"),
         dimensions = Seq("gd_customers.segment"),
         orderBy = Seq("segment")))
@@ -1288,7 +1304,7 @@ object SparkEntry {
           |    toCardinality: one
           |""".stripMargin), resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("Sales.total_sales", "Sales.order_count",
           "Sales.avg_sale"),
         dimensions = Seq("Customers.Segment"),
@@ -1327,7 +1343,7 @@ object SparkEntry {
           |    measure weighted_sales = SUMX(Sales, Sales[Amount] * 2)
           |""".stripMargin), resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("Sales.total_sales", "Sales.sales_ytd",
           "Sales.sales_ly", "Sales.big_sales", "Sales.sales_tier",
           "Sales.safe_ratio", "Sales.sales_r3m", "Sales.sales_rank",
@@ -1389,7 +1405,7 @@ object SparkEntry {
           |        aggregation: SUM
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("ts_sales.revenue", "ts_sales.order_count",
           "ts_sales.double_revenue"),
         dimensions = Seq("ts_sales.segment"),
@@ -1433,7 +1449,7 @@ object SparkEntry {
           |    segment: _.segment
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("bsl_orders.revenue", "bsl_orders.order_count",
           "bsl_orders.final_count"),
         dimensions = Seq("bsl_customers.segment"),
@@ -1505,7 +1521,7 @@ object SparkEntry {
           |}
           |""".stripMargin), resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("h_orders.revenue", "h_orders.order_count",
           "h_orders.aov"),
         dimensions = Seq("h_users.segment"),
@@ -1545,7 +1561,7 @@ object SparkEntry {
           |}
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("m_orders.revenue", "m_orders.order_count",
           "m_orders.final_orders"),
         dimensions = Seq("m_customers.region"),
@@ -1585,7 +1601,7 @@ object SparkEntry {
           |)
           |""".stripMargin), resolve)
       val cat = graft.model.Catalog().add(imp.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("g_orders.revenue", "g_orders.final_revenue"),
         dimensions = Seq("g_users.segment"),
         orderBy = Seq("segment")))
@@ -1609,7 +1625,7 @@ object SparkEntry {
           |  filters "o_orderpriority = '1-URGENT'");
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("ddl_orders.revenue", "ddl_orders.order_count",
           "ddl_orders.urgent_revenue"),
         dimensions = Seq("ddl_orders.orderstatus"),
@@ -1629,7 +1645,7 @@ object SparkEntry {
           Metric("revenue", agg = Some("sum"),
             sql = Some("cast(o_totalprice as decimal(18,2))")),
           Metric("order_count", agg = Some("count"))))
-      new Generator(s, Catalog().add(m)).plan(SemanticQuery(
+      GraftSession.generator(s, Catalog().add(m)).plan(SemanticQuery(
         metrics = Seq("tv_orders_model.revenue", "tv_orders_model.order_count"),
         dimensions = Seq("tv_orders_model.orderstatus"),
         orderBy = Seq("orderstatus")))
@@ -1646,7 +1662,7 @@ object SparkEntry {
           Metric("revenue", agg = Some("sum"),
             sql = Some("cast(o_totalprice as decimal(18,2))")),
           Metric("order_count", agg = Some("count"))))
-      new Generator(s, Catalog().add(m)).plan(SemanticQuery(
+      GraftSession.generator(s, Catalog().add(m)).plan(SemanticQuery(
         metrics = Seq("big_orders.revenue", "big_orders.order_count"),
         dimensions = Seq("big_orders.priority"),
         orderBy = Seq("priority")))
@@ -1668,7 +1684,7 @@ object SparkEntry {
       val drilled = m.drillDown("order_year").getOrElse(
         throw new IllegalStateException("no drill-down from order_year"))
       val path = m.hierarchyPath(drilled) // root→leaf: year, month
-      new Generator(s, Catalog(dataDir = d).add(m)).plan(SemanticQuery(
+      GraftSession.generator(s, Catalog(dataDir = d).add(m)).plan(SemanticQuery(
         metrics = Seq("h_orders.revenue"),
         dimensions = path.map("h_orders." + _),
         orderBy = path))
@@ -1757,7 +1773,7 @@ object SparkEntry {
       }
       val store = new graft.preagg.PreAggStore(s, cat, base)
       store.refreshIncremental("orders", pa, "1997-01-01", lookback = 1)
-      val g2 = new Generator(s, cat, Some(store))
+      val g2 = GraftSession.generator(s, cat, Some(store))
       g2.plan(SemanticQuery(
         metrics = Seq("orders.revenue", "orders.order_count"),
         dimensions = Seq("orders.orderstatus", "orders.order_date__month"),
@@ -1767,7 +1783,7 @@ object SparkEntry {
     // §2 row 6: data-file bootstrap round-trip — introspected models
     // (auto dimensions, row_count + numeric sums) answer real queries
     "q_bootstrap" -> ((s, d) => round4(
-      new Generator(s, graft.load.Bootstrap.fromParquetDir(s, d)).plan(
+      GraftSession.generator(s, graft.load.Bootstrap.fromParquetDir(s, d)).plan(
         SemanticQuery(
           metrics = Seq("customer.row_count", "customer.total_c_acctbal"),
           dimensions = Seq("customer.c_mktsegment"),
@@ -1797,7 +1813,7 @@ object SparkEntry {
           |        agg: count
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(pkg.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("yl_orders.revenue", "yl_orders.order_count"),
         dimensions = Seq("yl_orders.orderstatus"),
         orderBy = Seq("orderstatus")))
@@ -1975,7 +1991,7 @@ object SparkEntry {
           |        sql: o_orderstatus
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(pkg.models: _*)
-      round4(new Generator(s, cat).plan(SemanticQuery(
+      round4(GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("ylc_customer.bal_per_customer"),
         dimensions = Seq("ylc_orders.orderstatus"),
         orderBy = Seq("orderstatus"))), "bal_per_customer")
@@ -2007,7 +2023,7 @@ object SparkEntry {
           |        sql: COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT')
           |""".stripMargin, resolve)
       val cat = graft.model.Catalog().add(pkg.models: _*)
-      new Generator(s, cat).plan(SemanticQuery(
+      GraftSession.generator(s, cat).plan(SemanticQuery(
         metrics = Seq("ylx_orders.revenue", "ylx_orders.urgent_count"),
         dimensions = Seq("ylx_orders.orderstatus"),
         orderBy = Seq("orderstatus")))
@@ -2044,7 +2060,7 @@ object SparkEntry {
       new graft.streaming.StreamingRollup(s, cat, store)
         .maintain("orders", pa, src.toString, base.resolve("ckpt").toString)
         .awaitTermination(180000)
-      new Generator(s, cat, Some(store)).plan(SemanticQuery(
+      GraftSession.generator(s, cat, Some(store)).plan(SemanticQuery(
         metrics = Seq("orders.revenue", "orders.order_count"),
         dimensions = Seq("orders.orderstatus", "orders.order_date__month"),
         orderBy = Seq("orderstatus", "order_date__month")))
@@ -2069,7 +2085,7 @@ object SparkEntry {
     // query shape, encoded as data
     "q_explain_route" -> ((s, d) => {
       import s.implicits._
-      val g = gen(s, d)
+      val g = tpch(s, d)
       Seq(
         ("simple_agg", g.route(SemanticQuery(
           metrics = Seq("orders.revenue"),
@@ -2408,7 +2424,7 @@ object SparkEntry {
           Metric("avg_quality", agg = Some("avg"), sql = Some("quality_score")),
           Metric("high_quality_docs", agg = Some("count"),
             filters = Seq("docs.quality_score >= 0.8"))))
-      round4(new Generator(s, graft.model.Catalog().add(m)).plan(SemanticQuery(
+      round4(GraftSession.generator(s, graft.model.Catalog().add(m)).plan(SemanticQuery(
         metrics = Seq("docs.doc_count", "docs.total_tokens",
           "docs.avg_quality", "docs.high_quality_docs"),
         dimensions = Seq("docs.lang"),

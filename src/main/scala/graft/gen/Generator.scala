@@ -10,10 +10,14 @@ import org.apache.spark.sql.catalyst.plans.FullOuter
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Distinct, GlobalLimit, Join, LocalLimit, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
 
 /** Compiles a [[SemanticQuery]] into a composed DataFrame plan.
   *
@@ -446,20 +450,22 @@ final class Generator(spark: SparkSession, cat: Catalog,
   // Standard path
   // ------------------------------------------------------------------
 
-  /** Route of the plan being composed. Written and read only under the
-    * plan-cache lock, while [[compute]] runs; callers read a query's
-    * route from its cache entry through [[route]]. */
-  private var lastRoute: String = ""
-
   /** A composed plan as the compile cache keeps it: the analyzed
     * LOGICAL plan after the decimal kernels and the one-task gate, the
     * route that built it, the gate's decision, how many operators the
     * kernels replaced, the Dataset a hit returns again when
     * [[Generator.reusable]] allows it, and the scan epoch and rollup
-    * store version it was built under. */
-  private case class Planned(plan: LogicalPlan, route: String,
-      shape: Generator.Shape, kernels: DecimalKernels.Replaced,
-      reused: Option[DataFrame], scanEpoch: Long, storeVersion: Long)
+    * store version it was built under. `derived` holds the steps
+    * [[plan(q, step)]] built over `reused`, by step; they live and die
+    * with the entry. */
+  private final class Planned(val plan: LogicalPlan, val route: String,
+      val shape: Generator.Shape, val kernels: DecimalKernels.Replaced,
+      val reused: Option[DataFrame], val scanEpoch: Long,
+      val storeVersion: Long) {
+    val derived = new ConcurrentHashMap[Product, DataFrame]()
+    def current(epoch: Long, version: Long): Boolean =
+      scanEpoch == epoch && storeVersion == version
+  }
 
   /** Compile cache: identical requests reuse the composed plan
     * (reference: generator.py:332-377,1041 — warm repeat compile).
@@ -468,7 +474,8 @@ final class Generator(spark: SparkSession, cat: Catalog,
     * same Dataset: its physical plan, generated code, scan RDDs and
     * broadcast build sides carry over, while every action still runs its
     * own job over the files. What it pins is bounded: at most 256
-    * entries, each over an input under the read budget. Any other plan
+    * entries, each over an input under the read budget, each with at
+    * most [[Generator.MaxDerived]] derived steps. Any other plan
     * keeps only its LOGICAL plan and a hit returns a FRESH Dataset over
     * it: an executed Dataset pins its adaptive runtime state —
     * materialized broadcast hash tables, shuffle outputs — and a
@@ -476,48 +483,96 @@ final class Generator(spark: SparkSession, cat: Catalog,
     * accumulate pinned state until execution memory starves. An entry
     * built before a [[Catalog.invalidateScans]] or a write to this
     * generator's rollup store is a miss: its file listings may name
-    * rewritten files. */
+    * rewritten files.
+    *
+    * Each key holds the future its first miss completes, so the map's
+    * lock is held only to look a key up: a miss composes outside it,
+    * callers of the same key wait on that future, and a hit on any other
+    * key never waits for a compose. */
   private val planCache =
-    new java.util.LinkedHashMap[SemanticQuery, Planned](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SemanticQuery, Planned]): Boolean = size > 256
+    new java.util.LinkedHashMap[SemanticQuery, CompletableFuture[Planned]](
+        64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[SemanticQuery,
+          CompletableFuture[Planned]]): Boolean = size > 256
     }
 
   def plan(q: SemanticQuery): DataFrame = planned(q)._1
+
+  /** A result-shaping step over `plan(q)` — a table calc, a rename, an
+    * aggregate over the result — cached in q's own entry, so it is
+    * evicted and invalidated with it. `step` is a value holding the
+    * step's parameters (a tuple or case class, never a closure) and must
+    * determine `f`. The derived Dataset is kept, and a hit returns it
+    * again, only when q's entry holds a reused Dataset and the derived
+    * plan passes [[Generator.derivable]]; otherwise every call returns
+    * `f` over a fresh Dataset, as `f(plan(q))` would. */
+  def plan(q: SemanticQuery, step: Product)(
+      f: DataFrame => DataFrame): DataFrame = {
+    val (df, p) = planned(q)
+    if (p.reused.isEmpty) f(df)
+    else Option(p.derived.get(step)).getOrElse {
+      val out = f(df)
+      if (p.derived.size >= Generator.MaxDerived || !Generator.derivable(out))
+        out
+      else Option(p.derived.putIfAbsent(step, out)).getOrElse(out)
+    }
+  }
 
   /** The route that plans `q` (preagg, standard, window, ...), read from
     * its cache entry, so concurrent plans cannot mislabel it. */
   def route(q: SemanticQuery): String = planned(q)._2.route
 
   /** The DataFrame for `q` together with the cache entry it was built
-    * from. Every route (standard, window, funnel, pre-agg, multi-fact,
-    * and SqlFront, which calls [[plan]]) is rewritten here once, on a
-    * miss: first [[DecimalKernels.rewrite]] swaps double→decimal casts
-    * and decimal SUMs for their exact long-backed kernels, then the
-    * one-task gate reshapes the plan. A hit reuses the result. */
-  private def planned(q: SemanticQuery): (DataFrame, Planned) =
-    planCache.synchronized {
-      // read before composing: an invalidation racing the compose then
-      // leaves this entry stale, never a stale plan under a new epoch
-      val epoch = Catalog.scanEpoch
-      val version = preagg.fold(0L)(_.version)
-      val hit = planCache.get(q)
-      if (hit != null && hit.scanEpoch == epoch &&
-          hit.storeVersion == version)
-        (hit.reused.getOrElse(GraftSqlBridge.dataFrame(spark, hit.plan)), hit)
-      else {
-        val df = compute(q)
-        val composed = GraftSqlBridge.logicalPlan(df)
-        val (fast, kernels) = DecimalKernels.rewrite(composed)
-        val (shaped, shape) = Generator.oneTask(spark, fast)
-        val out =
-          if (shaped eq composed) df else GraftSqlBridge.dataFrame(spark, shaped)
-        val p = Planned(shaped, lastRoute, shape, kernels,
-          Some(out).filter(_ => Generator.reusable(shape, shaped)), epoch,
-          version)
-        planCache.put(q, p)
-        (out, p)
-      }
+    * from. A hit returns the entry's Dataset; a stale entry (older scan
+    * epoch or store version) is replaced; a miss is built by [[build]]
+    * under its own key's future, which other callers of `q` wait on. */
+  @annotation.tailrec
+  private def planned(q: SemanticQuery): (DataFrame, Planned) = {
+    // read before composing: an invalidation racing the compose then
+    // leaves this entry stale, never a stale plan under a new epoch
+    val epoch = Catalog.scanEpoch
+    val version = preagg.fold(0L)(_.version)
+    val mine = new CompletableFuture[Planned]
+    val slot = planCache.synchronized {
+      val cur = planCache.get(q)
+      if (cur != null && (!cur.isDone || cur.join().current(epoch, version)))
+        cur
+      else { planCache.put(q, mine); mine }
+    }
+    if (slot eq mine) build(q, epoch, version, mine)
+    else {
+      val p = try slot.join()
+        catch { case e: CompletionException => throw e.getCause }
+      if (p.current(epoch, version))
+        (p.reused.getOrElse(GraftSqlBridge.dataFrame(spark, p.plan)), p)
+      else planned(q) // built under an epoch or version this call predates
+    }
+  }
+
+  /** A miss: compose `q` and complete its slot. Every route (standard,
+    * window, funnel, pre-agg, multi-fact, and SqlFront, which calls
+    * [[plan]]) is rewritten here once: first [[DecimalKernels.rewrite]]
+    * swaps double→decimal casts and decimal SUMs for their exact
+    * long-backed kernels, then the one-task gate reshapes the plan. A
+    * failed compose leaves no entry, so the next call composes again. */
+  private def build(q: SemanticQuery, epoch: Long, version: Long,
+      slot: CompletableFuture[Planned]): (DataFrame, Planned) =
+    try {
+      val (df, route) = compute(q)
+      val composed = GraftSqlBridge.logicalPlan(df)
+      val (fast, kernels) = DecimalKernels.rewrite(composed)
+      val (shaped, shape) = Generator.oneTask(spark, fast)
+      val out =
+        if (shaped eq composed) df else GraftSqlBridge.dataFrame(spark, shaped)
+      val p = new Planned(shaped, route, shape, kernels,
+        Some(out).filter(_ => Generator.reusable(shape, shaped)), epoch,
+        version)
+      slot.complete(p)
+      (out, p)
+    } catch { case e: Throwable =>
+      planCache.synchronized(planCache.remove(q, slot))
+      slot.completeExceptionally(e)
+      throw e
     }
 
   /** True when any model the query touches declares a security policy —
@@ -542,7 +597,9 @@ final class Generator(spark: SparkSession, cat: Catalog,
     (fieldModels ++ filterModels).exists(secured)
   }
 
-  private def compute(q: SemanticQuery): DataFrame = withTimezone(q.timezone) {
+  /** The composed plan for `q` and the route that built it. */
+  private def compute(q: SemanticQuery): (DataFrame, String) =
+      withTimezone(q.timezone) {
     // pre-aggregation routing first (reference route order,
     // generator.py:1258); timezone localization bypasses rollups, which
     // store UTC-truncated buckets (reference: generator.py:1038).
@@ -550,27 +607,24 @@ final class Generator(spark: SparkSession, cat: Catalog,
     // per-user row scope, so serving one would leak rows the security
     // filter removes (reference: transport_security.py:135-140 —
     // "structured compile already disables them for active row filters")
-    if (q.usePreAggs && q.timezone.isEmpty && !referencesSecuredModel(q))
-      preagg.flatMap(_.plan(q)).foreach { df =>
-        lastRoute = "preagg"; return df
-      }
-    val requested = q.metrics.map(metricRef)
-    val kinds = requested.map(_.metric.kind).toSet
-    val offsetRatio = requested.exists(mr =>
-      mr.metric.kind == "ratio" && mr.metric.offsetWindow.isDefined)
-    if (kinds.exists(Set("cumulative", "time_comparison")) || offsetRatio) {
-      // label set AFTER planning: the inner replan recurses through
-      // planAggregate and would otherwise overwrite the route
-      val df = new WindowMetrics(spark, this).plan(q)
-      lastRoute = "window"
-      df
-    } else if (kinds.exists(Set("conversion", "retention", "cohort", "funnel"))) {
-      require(requested.size == 1,
-        "conversion/retention/cohort/funnel metrics must be queried alone")
-      val df = new Funnels(spark, this).plan(q)
-      lastRoute = kinds.intersect(Set("conversion", "retention", "cohort", "funnel")).head
-      df
-    } else planAggregate(q, finalShape = true)
+    val rollup =
+      if (q.usePreAggs && q.timezone.isEmpty && !referencesSecuredModel(q))
+        preagg.flatMap(_.plan(q))
+      else None
+    rollup.map(_ -> "preagg").getOrElse {
+      val requested = q.metrics.map(metricRef)
+      val kinds = requested.map(_.metric.kind).toSet
+      val offsetRatio = requested.exists(mr =>
+        mr.metric.kind == "ratio" && mr.metric.offsetWindow.isDefined)
+      if (kinds.exists(Set("cumulative", "time_comparison")) || offsetRatio)
+        (new WindowMetrics(spark, this).plan(q), "window")
+      else if (kinds.exists(Set("conversion", "retention", "cohort", "funnel"))) {
+        require(requested.size == 1,
+          "conversion/retention/cohort/funnel metrics must be queried alone")
+        (new Funnels(spark, this).plan(q),
+          kinds.intersect(Set("conversion", "retention", "cohort", "funnel")).head)
+      } else aggregate(q, finalShape = true)
+    }
   }
 
   /** Saved-query execution (reference: core/consumption.py SavedQuery). */
@@ -640,16 +694,24 @@ final class Generator(spark: SparkSession, cat: Catalog,
           failed.map(ch => s"\n  $ch").mkString
       }.mkString("", "\n", "\n")
     }.getOrElse("")
+    val reuse =
+      if (p.reused.isEmpty) "fresh Dataset per hit"
+      else s"executed Dataset, ${p.derived.size} derived steps"
     s"route: ${p.route}\nmetrics: ${q.metrics.mkString(", ")}\n" +
       s"dimensions: ${q.dimensions.mkString(", ")}\n" + preaggLines +
-      s"shape: ${p.shape}\nkernels: ${p.kernels}\n" +
+      s"shape: ${p.shape}\nkernels: ${p.kernels}\nreuse: $reuse\n" +
       GraftSqlBridge.explainString(df, "formatted")
   }
 
   /** Aggregated frame at the requested dim grain, fan-out handled.
     * When finalShape, also applies derived/ratio composition, HAVING,
     * ordering, limit/offset and user-facing renames. */
-  private[gen] def planAggregate(q0: SemanticQuery, finalShape: Boolean): DataFrame = {
+  private[gen] def planAggregate(q0: SemanticQuery, finalShape: Boolean): DataFrame =
+    aggregate(q0, finalShape)._1
+
+  /** [[planAggregate]] with the route it took. */
+  private def aggregate(q0: SemanticQuery,
+      finalShape: Boolean): (DataFrame, String) = {
     // default time dimension injection (reference: generator.py:1015):
     // a dimension-less query over a model declaring BOTH
     // default_time_dimension and default_grain groups by it implicitly
@@ -713,27 +775,21 @@ final class Generator(spark: SparkSession, cat: Catalog,
       mr.metric.nonAdditive.isEmpty &&
         fanned(mr.model) && !AggKind.FanoutSafe(mr.metric.agg.get))
 
-    val aggregated: DataFrame =
-      if (q.ungrouped) {
-        lastRoute = "ungrouped"
-        return ungroupedSelect(q, dims, simples, pushed, outer, hops, base)
-      } else if (atRisk.isEmpty) {
-        lastRoute = "standard"
-        singlePass(q, dims, simples, pushed, outer, hops, base, Set.empty)
-      } else if (multiFactLegal(q, dims, simples)) {
-        // label set AFTER the split: its per-fact sub-plans recurse through
-        // planAggregate and would otherwise overwrite the route
-        val df = multiFactSplit(q, dims, simples)
-        lastRoute = "multi-fact-split"
-        df
-      } else {
-        lastRoute = "symmetric-dedup"
-        singlePass(q, dims, simples, pushed, outer, hops, base,
-          atRisk.map(_.model).toSet)
-      }
+    val (aggregated, route) =
+      if (q.ungrouped)
+        return (ungroupedSelect(q, dims, simples, pushed, outer, hops, base),
+          "ungrouped")
+      else if (atRisk.isEmpty)
+        (singlePass(q, dims, simples, pushed, outer, hops, base, Set.empty),
+          "standard")
+      else if (multiFactLegal(q, dims, simples))
+        (multiFactSplit(q, dims, simples), "multi-fact-split")
+      else
+        (singlePass(q, dims, simples, pushed, outer, hops, base,
+          atRisk.map(_.model).toSet), "symmetric-dedup")
 
-    if (!finalShape) aggregated
-    else finish(q, aggregated, dims, requested, simples, having)
+    (if (!finalShape) aggregated
+     else finish(q, aggregated, dims, requested, simples, having), route)
   }
 
   /** True when every metric model can reach all dims without fan-out, so
@@ -1186,11 +1242,33 @@ object Generator {
     * Scans re-read their files on every action; their listings are
     * fixed when the plan is analyzed, reused or not. */
   private def reusable(shape: Shape, plan: LogicalPlan): Boolean =
-    shape.oneTask && !plan.exists {
-      case Join(_, _, FullOuter, _, _) => true
-      case p => p.expressions.exists(e => !e.deterministic ||
-        e.containsPattern(CURRENT_LIKE) || SubqueryExpression.hasSubquery(e))
-    }
+    shape.oneTask && !repeatsFirstRun(plan)
+
+  /** The expression rules of [[reusable]]: a full outer join, a
+    * subquery, a nondeterministic or clock-reading expression. */
+  private def repeatsFirstRun(plan: LogicalPlan): Boolean = plan.exists {
+    case Join(_, _, FullOuter, _, _) => true
+    case p => p.expressions.exists(e => !e.deterministic ||
+      e.containsPattern(CURRENT_LIKE) || SubqueryExpression.hasSubquery(e))
+  }
+
+  /** Derived steps kept per plan-cache entry; further steps come back
+    * fresh on every call. */
+  private val MaxDerived = 16
+
+  /** Whether a step derived from a reused Dataset may itself be reused:
+    * its plan passes [[reusable]]'s expression rules and its physical
+    * plan has no shuffle exchange, whose materialized output a reused
+    * adaptive plan would read again instead of its input. The step
+    * reads only the reused plan's input, so the read budget bounds what
+    * it pins too. */
+  private def derivable(df: DataFrame): Boolean =
+    !repeatsFirstRun(GraftSqlBridge.logicalPlan(df)) &&
+      PlanWalk.find(GraftSqlBridge.executedPlan(df))(
+        _.isInstanceOf[ShuffleExchangeLike]).isEmpty
+
+  /** Walks a physical plan into its adaptive and query-stage nodes. */
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** Whether planning `plan` shuffles: it has an aggregate, window,
     * distinct, join or global sort. A sort under a limit is a top-k that

@@ -2,7 +2,7 @@ package graft.gen
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Post-query table calculations — window functions over the *result*
   * DataFrame of a semantic query (reference: core/table_calculation.py:14).
@@ -48,14 +48,16 @@ object TableCalcs {
     * Values are unchanged on both sides of the gate: the sums ride
     * decimals (exact) or the identical float expression, pinned by the
     * oracle battery at every SF. */
-  private def smallGlobal(df: DataFrame): Boolean = {
-    // malformed conf falls back to the default instead of throwing at
-    // plan-construction time
-    val maxBytes = df.sparkSession.conf
-      .getOption("spark.graft.tablecalc.globalWindowMaxBytes")
+  private def smallGlobal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      BigInt(globalWindowMaxBytes(df.sparkSession))
+
+  /** The size gate of [[smallGlobal]], read from the session conf at
+    * composition time. A malformed conf falls back to the default
+    * instead of throwing at plan-construction time. */
+  def globalWindowMaxBytes(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.tablecalc.globalWindowMaxBytes")
       .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(maxBytes)
-  }
 
   private def globalWin(order: Seq[Column]) = Window.orderBy(order: _*)
 

@@ -1,6 +1,6 @@
 package graft.sqlfront
 
-import graft.gen.Generator
+import graft.GraftSession
 import graft.model.{Catalog, ModelSource}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -63,7 +63,7 @@ class SemanticModelRule(session: SparkSession) extends Rule[LogicalPlan] {
     GraftExtensions.catalogFor(session) match {
       case None => plan
       case Some(cat) =>
-        val front = new SqlFront(session, cat, new Generator(session, cat))
+        val front = new SqlFront(session, cat, GraftSession.generator(session, cat))
         if (!front.referencesSemanticModel(plan)) plan
         else
           try front.rewritePlan(plan)

@@ -346,7 +346,15 @@ final class SqlFront(spark: SparkSession, cat: Catalog, gen: Generator) {
     val q = SemanticQuery(metrics = metrics, dimensions = dims,
       filters = filters, orderBy = orderBy, limit = limit, offset = offset,
       user = currentUser.value)
-    val df = gen.plan(q)
-    Some(renames.foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) })
+    Some(if (renames.isEmpty) gen.plan(q)
+      else gen.plan(q, SqlFront.Renamed(renames))(df =>
+        renames.foldLeft(df) { case (d, (from, to)) =>
+          d.withColumnRenamed(from, to) }))
   }
+}
+
+object SqlFront {
+
+  /** The derived step of a SELECT scope with aliases: its renames. */
+  private final case class Renamed(renames: Seq[(String, String)])
 }

@@ -1,6 +1,6 @@
 package graft.testing
 
-import graft.gen.Generator
+import graft.GraftSession
 import graft.model.{Catalog, Model}
 import graft.sqlfront.SqlFront
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -245,7 +245,7 @@ object GoldenRunner {
 
   /** Execute golden cases against a loaded semantic catalog via SqlFront. */
   def run(spark: SparkSession, cat: Catalog, cases: Seq[GoldenCase]): GoldenReport = {
-    val front = new SqlFront(spark, cat, new Generator(spark, cat))
+    val front = new SqlFront(spark, cat, GraftSession.generator(spark, cat))
     run(front.sql, cases)
   }
 

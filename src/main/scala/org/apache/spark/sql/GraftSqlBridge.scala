@@ -15,6 +15,8 @@ object GraftSqlBridge {
   def explainString(df: Dataset[Row], mode: String): String =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution
       .explainString(execution.ExplainMode.fromString(mode))
+  def executedPlan(df: Dataset[Row]): execution.SparkPlan =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.executedPlan
   def logicalPlan(df: Dataset[Row]): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
   def dataFrame(spark: SparkSession,
