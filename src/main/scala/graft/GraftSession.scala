@@ -17,7 +17,10 @@ object GraftSession {
   private lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** A `local[cores]` session with one shuffle partition per core. */
-  def create(cores: Int = cpus): SparkSession =
+  def create(cores: Int = cpus): SparkSession = builder(cores).getOrCreate()
+
+  /** The builder [[create]] completes: every conf of the driver session. */
+  def builder(cores: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -49,7 +52,6 @@ object GraftSession {
       // be set before the session exists.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
 
   /** Generators the factory keeps; the least recently used goes first. */
   private val MaxGenerators = 16

@@ -5,6 +5,10 @@ import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named queries to `<outDir>/<q>.txt`
   * — the committed plan evidence for optimization rounds (plans/rNN/).
+  * `<outDir>/digests<suffix>.tsv` gets one `<q>\t<digest>` line per dumped
+  * query: a digest of its canonicalized optimized plan, by the rule
+  * perfbench's `planDigest` uses, so two builds' files diff to nothing
+  * when they plan the same queries identically.
   * Usage: runMain graft.PlanDump <outDir> <q1,q2,...> [suffix]
   * Exits 1 when a requested name is unknown or a dump fails.
   * The session is `GraftSession.create()`, as in Bench, so the captured
@@ -35,7 +39,8 @@ object PlanDump {
     val matched = SparkEntry.queries.filter { case (k, _) => names(k) }
     val unknown = (names -- matched.keySet).toSeq.sorted
     unknown.foreach(n => println(s"PLAN $n UNKNOWN: no such query"))
-    unknown.size + matched.toSeq.sortBy(_._1).count { case (name, fn) =>
+    val digests = Seq.newBuilder[String]
+    val failed = unknown.size + matched.toSeq.sortBy(_._1).count { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
           // EXECUTE before dumping so the formatted plan is the AQE-final
@@ -50,11 +55,21 @@ object PlanDump {
           Files.write(Paths.get(outDir, s"$name$suffix.txt"),
             txt.getBytes("UTF-8"))
           println(s"PLAN $name -> $outDir/$name$suffix.txt")
+          digests += s"$name\t" +
+            digest(df.queryExecution.optimizedPlan.canonicalized.toString)
           false
         } catch { case e: Throwable =>
           println(s"PLAN $name FAILED: ${e.getMessage}")
           true
         }
       }
+    Files.write(Paths.get(outDir, s"digests$suffix.tsv"),
+      digests.result().mkString("", "\n", "\n").getBytes("UTF-8"))
+    failed
   }
+
+  /** The first 16 bytes of the SHA-256 of `s`, in hex. */
+  private def digest(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
 }

@@ -3,7 +3,7 @@ package graft.gen
 import graft.functions.Exprs
 import graft.plan.{FieldRef, SemanticQuery}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlan, SparkSession}
 
 /** Conversion / retention / cohort metric generators — multi-stage DataFrame
   * plans (reference: sql/generator.py:5210-5700 conversion,
@@ -17,14 +17,14 @@ final class Funnels(spark: SparkSession, gen: Generator) {
 
   private val cat = gen.catRef
 
-  def plan(q: SemanticQuery): DataFrame = {
+  def plan(q: SemanticQuery): GraftPlan = {
     val (modelName, m) = gen.metricOf(q.metrics.head)
     val model = cat.model(modelName)
 
     // base frame: the shared enforcement point (deny-by-default, access
     // gate, row filters) + all query filters (single-model scope) — funnel
     // plans get exactly the same security semantics as the standard path
-    var df = gen.securedScan(model, q.user)
+    var df = gen.securedScan(model, q.user).toDF
     (q.filters ++ segmentSql(q)).foreach { f =>
       val e = Exprs.rewriteRelativeDates(
         Exprs.parse(spark, Exprs.interpolate(f, gen.mergedParams(q))), q.anchorDate)
@@ -66,7 +66,7 @@ final class Funnels(spark: SparkSession, gen: Generator) {
         m.baseFilter.get, m.conversionFilter.get,
         m.retentionGrain.getOrElse("day"), m.retentionPeriods.getOrElse(7))
       case "cohort" => cohort(q, df, m, dims, dimCol, local, col(entity))
-      case "funnel" => funnelSteps(q, df, m, local, col(entity))
+      case "funnel" => GraftPlan(funnelSteps(q, df, m, local, col(entity)))
     }
   }
 
@@ -106,7 +106,7 @@ final class Funnels(spark: SparkSession, gen: Generator) {
   private def conversion(q: SemanticQuery, df: DataFrame, name: String,
       dims: Seq[FieldRef], dimCol: FieldRef => Column, local: String => Column,
       entity: Column, ts: Column, baseFilter: String, convFilter: String,
-      window: String): DataFrame = {
+      window: String): GraftPlan = {
 
     val (n, unit) = new WindowMetrics(spark, gen).parseWindow(window)
     val dimCols = dims.map(dimCol)
@@ -128,7 +128,7 @@ final class Funnels(spark: SparkSession, gen: Generator) {
         count(lit(1)).as("base_entities"),
         sum(col("__conv")).as("converted_entities"),
         (sum(col("__conv")) / count(lit(1))).as(name))
-    gen.shape(q, out)
+    gen.shape(q, GraftPlan(out))
   }
 
   /** Cohort retention curve, on the reference's fixed output contract
@@ -138,7 +138,7 @@ final class Funnels(spark: SparkSession, gen: Generator) {
   private def retention(q: SemanticQuery, df: DataFrame, name: String,
       local: String => Column, entity: Column, ts: Column,
       cohortFilter: String, activityFilter: String,
-      grain: String, periods: Int): DataFrame = {
+      grain: String, periods: Int): GraftPlan = {
 
     def trunc(c: Column): Column = grain match {
       case "day"   => to_date(c)
@@ -178,15 +178,15 @@ final class Funnels(spark: SparkSession, gen: Generator) {
         round(col("active_users") * lit(100.0) / col("cohort_size"), 1)
           .as("retention_pct"))
     // reference default ordering when the query specifies none
-    gen.shape(q,
-      if (q.orderBy.isEmpty) out.orderBy(col("cohort_date"), col(label)) else out)
+    gen.shape(q, GraftPlan(
+      if (q.orderBy.isEmpty) out.orderBy(col("cohort_date"), col(label)) else out))
   }
 
   /** Two-stage cohort metric: per-entity inner aggregate gated by HAVING,
     * then an outer aggregate over qualifying entities. */
   private def cohort(q: SemanticQuery, df: DataFrame, m: graft.model.Metric,
       dims: Seq[FieldRef], dimCol: FieldRef => Column,
-      local: String => Column, entity: Column): DataFrame = {
+      local: String => Column, entity: Column): GraftPlan = {
 
     val dimCols = dims.map(dimCol)
     val inner = df
@@ -205,6 +205,6 @@ final class Funnels(spark: SparkSession, gen: Generator) {
     val grouped =
       if (dims.isEmpty) qualified.agg(outer.as(m.name))
       else qualified.groupBy(dims.map(d => col(d.outName)): _*).agg(outer.as(m.name))
-    gen.shape(q, grouped)
+    gen.shape(q, GraftPlan(grouped))
   }
 }

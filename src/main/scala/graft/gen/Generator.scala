@@ -15,18 +15,27 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlan, GraftSqlBridge, SparkSession}
 
 import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
 
-/** Compiles a [[SemanticQuery]] into a composed DataFrame plan.
+/** Compiles a [[SemanticQuery]] into one logical plan, analysed once.
   *
-  * Design (SURVEY §7.1): emit declarative DataFrame plans, never SQL strings —
-  * Catalyst then handles predicate pushdown, column pruning, join physical
-  * strategy (broadcast for small dims), and whole-stage codegen. Our job is
-  * the *semantic* planning Catalyst cannot do: join-path resolution, join
-  * pruning, fan-out-safe aggregation strategy, metric-type lowering, security
-  * injection (reference pipeline: sidemantic/sql/generator.py:961).
+  * Design (SURVEY §7.1): compose a declarative logical plan, never SQL
+  * strings — Catalyst then handles predicate pushdown, column pruning, join
+  * physical strategy (broadcast for small dims), and whole-stage codegen.
+  * Our job is the *semantic* planning Catalyst cannot do: join-path
+  * resolution, join pruning, fan-out-safe aggregation strategy, metric-type
+  * lowering, security injection (reference pipeline:
+  * sidemantic/sql/generator.py:961).
+  *
+  * The standard, multi-fact and pre-aggregation routes compose through
+  * [[GraftPlan]], which adds plan nodes without analysing them, so Spark's
+  * analyzer runs once per compile, in [[build]], over the whole plan. The
+  * window planner ([[WindowMetrics]]) still composes DataFrames over
+  * [[planAggregate]]'s analysed result, and the funnel planner
+  * ([[Funnels]]) over the analysed secured scan; each hands its last steps
+  * back as a [[GraftPlan]].
   *
   * Internal column naming: `<model>__<field>[__<grain>]`; metric inputs as
   * `<model>__<metric>__raw`. Final select renames to user-facing short names.
@@ -293,8 +302,8 @@ final class Generator(spark: SparkSession, cat: Catalog,
     * user attributes raises rather than running unscoped; the access gate
     * and row filters are applied before any join so fan-out cannot leak. */
   private[gen] def securedScan(model: Model,
-      user: Option[Map[String, String]]): DataFrame = {
-    var df = cat.scan(spark, model)
+      user: Option[Map[String, String]]): GraftPlan = {
+    var df = GraftPlan(cat.scan(spark, model))
     model.security.foreach { pol =>
       val attrs = user.getOrElse(throw new SecurityException(
         s"Model '${model.name}' has a security policy; query supplied no user attributes"))
@@ -311,7 +320,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
   }
 
   private def modelFrame(model: Model, needed: Needed,
-      pushed: Seq[Expression], user: Option[Map[String, String]]): DataFrame = {
+      pushed: Seq[Expression], user: Option[Map[String, String]]): GraftPlan = {
     var df = securedScan(model, user)
     pushed.foreach(e => df = df.filter(toColumn(toModelScope(model, e))))
     val dimCols = needed.dims.toSeq.sortBy(_._1).map { case (dn, grain) =>
@@ -558,7 +567,8 @@ final class Generator(spark: SparkSession, cat: Catalog,
   private def build(q: SemanticQuery, epoch: Long, version: Long,
       slot: CompletableFuture[Planned]): (DataFrame, Planned) =
     try {
-      val (df, route) = compute(q)
+      val (unanalysed, route) = compute(q)
+      val df = unanalysed.toDF // the compile's one analysis
       val composed = GraftSqlBridge.logicalPlan(df)
       val (fast, kernels) = DecimalKernels.rewrite(composed)
       val (shaped, shape) = Generator.oneTask(spark, fast)
@@ -597,8 +607,8 @@ final class Generator(spark: SparkSession, cat: Catalog,
     (fieldModels ++ filterModels).exists(secured)
   }
 
-  /** The composed plan for `q` and the route that built it. */
-  private def compute(q: SemanticQuery): (DataFrame, String) =
+  /** The composed, unanalysed plan for `q` and the route that built it. */
+  private def compute(q: SemanticQuery): (GraftPlan, String) =
       withTimezone(q.timezone) {
     // pre-aggregation routing first (reference route order,
     // generator.py:1258); timezone localization bypasses rollups, which
@@ -707,11 +717,11 @@ final class Generator(spark: SparkSession, cat: Catalog,
     * When finalShape, also applies derived/ratio composition, HAVING,
     * ordering, limit/offset and user-facing renames. */
   private[gen] def planAggregate(q0: SemanticQuery, finalShape: Boolean): DataFrame =
-    aggregate(q0, finalShape)._1
+    aggregate(q0, finalShape)._1.toDF
 
-  /** [[planAggregate]] with the route it took. */
+  /** [[planAggregate]], unanalysed, with the route it took. */
   private def aggregate(q0: SemanticQuery,
-      finalShape: Boolean): (DataFrame, String) = {
+      finalShape: Boolean): (GraftPlan, String) = {
     // default time dimension injection (reference: generator.py:1015):
     // a dimension-less query over a model declaring BOTH
     // default_time_dimension and default_grain groups by it implicitly
@@ -814,20 +824,18 @@ final class Generator(spark: SparkSession, cat: Catalog,
     * deduplicated on (dims, pk, value) — the symmetric-aggregate route. */
   private def singlePass(q: SemanticQuery, dims: Seq[DimRef],
       simples: Seq[MetricRef], pushed: Seq[PushDown], outer: Seq[OuterWhere],
-      hops: Seq[JoinHop], base: String, dedupModels: Set[String]): DataFrame = {
+      hops: Seq[JoinHop], base: String, dedupModels: Set[String]): GraftPlan = {
 
     val joined = buildJoined(q, dims, simples, pushed, outer, hops, base,
       extraPk = dedupModels)
     val dimCols = dims.map(d => col(d.innerName))
 
-    def grouped(df: DataFrame, aggs: Seq[Column]): DataFrame =
+    def grouped(df: GraftPlan, aggs: Seq[Column]): GraftPlan =
       if (q.withTotals) {
         val flag = (if (dims.nonEmpty) grouping(dimCols.head).cast("int")
                     else lit(0)).as("_is_total")
-        df.groupingSets(Seq(dimCols, Seq.empty[Column]), dimCols: _*)
-          .agg(aggs.head, (aggs.tail :+ flag): _*)
-      } else if (dims.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-      else df.groupBy(dimCols: _*).agg(aggs.head, aggs.tail: _*)
+        df.groupingSets(Seq(dimCols, Seq.empty[Column]), dimCols, aggs :+ flag)
+      } else df.agg(dimCols, aggs)
 
     val (semiAdd, plain) = simples.partition(_.metric.nonAdditive.isDefined)
 
@@ -837,18 +845,17 @@ final class Generator(spark: SparkSession, cat: Catalog,
     } else {
       // partial aggregates per strategy class, then stitched back on the dims
       val safe = plain.filterNot(mr => dedupModels(mr.model))
-      val partials = scala.collection.mutable.ListBuffer[DataFrame]()
+      val partials = scala.collection.mutable.ListBuffer[GraftPlan]()
       if (safe.nonEmpty) partials += grouped(joined, safe.map(aggColumn))
       // detail+total union for strategies whose per-bucket input frame
       // depends on the grouping (dedup keys / snapshot windows include the
       // dims): the grand-total bucket must recompute its frame WITHOUT the
       // dims, or a pk appearing under k distinct dim values counts k times
-      def detailPlusTotal(detailFrame: DataFrame, totalFrame: DataFrame,
-          aggs: Seq[Column]): DataFrame = {
-        val detail = (if (dims.isEmpty) detailFrame.agg(aggs.head, aggs.tail: _*)
-                      else detailFrame.groupBy(dimCols: _*).agg(aggs.head, aggs.tail: _*))
+      def detailPlusTotal(detailFrame: GraftPlan, totalFrame: GraftPlan,
+          aggs: Seq[Column]): GraftPlan = {
+        val detail = detailFrame.agg(dimCols, aggs)
           .withColumn("_is_total", lit(0))
-        val total0 = totalFrame.agg(aggs.head, aggs.tail: _*)
+        val total0 = totalFrame.agg(Nil, aggs)
           .withColumn("_is_total", lit(1))
         val total = dims.foldLeft(total0)((t, dm) =>
           t.withColumn(dm.innerName, lit(null)))
@@ -861,7 +868,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
              .groupBy(mr => (mr.model, mr.metric.nonAdditive.get)).toSeq
              .sortBy(_._2.head.metric.name)) {
         val tCol = col(s"${model}__${na.name}")
-        def snapFrame(partCols: Seq[String]): DataFrame = {
+        def snapFrame(partCols: Seq[String]): GraftPlan = {
           val w = Window.partitionBy(partCols.map(col): _*)
           val snap = (if (na.windowChoice == "min") min(tCol) else max(tCol)).over(w)
           joined.withColumn("__snap", snap).filter(tCol === col("__snap"))
@@ -892,15 +899,17 @@ final class Generator(spark: SparkSession, cat: Catalog,
 
   /** Full-outer join partial aggregates on the dim columns (null-safe),
     * coalescing the key columns. */
-  private def stitch(partials: Seq[DataFrame], keys: Seq[String]): DataFrame =
+  private def stitch(partials: Seq[GraftPlan], keys: Seq[String]): GraftPlan =
     partials.reduce { (l, r) =>
       if (keys.isEmpty) l.crossJoin(r)
       else {
+        // the right side's keys are renamed, so every name in the join's
+        // output is unique and resolves by name alone
         val rr = keys.foldLeft(r)((df, k) => df.withColumnRenamed(k, s"__r_$k"))
-        val cond = keys.map(k => l(k) <=> rr(s"__r_$k")).reduce(_ && _)
+        val cond = keys.map(k => outCol(k) <=> outCol(s"__r_$k")).reduce(_ && _)
         val j = l.join(rr, cond, "full_outer")
         val merged = keys.foldLeft(j)((df, k) =>
-          df.withColumn(k, coalesce(df(k), df(s"__r_$k"))))
+          df.withColumn(k, coalesce(outCol(k), outCol(s"__r_$k"))))
         merged.drop(keys.map(k => s"__r_$k"): _*)
       }
     }
@@ -909,7 +918,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
     * the grains are FULL-joined and COALESCEd
     * (reference: _generate_with_preaggregation, generator.py:2652-2921). */
   private def multiFactSplit(q: SemanticQuery, dims: Seq[DimRef],
-      simples: Seq[MetricRef]): DataFrame = {
+      simples: Seq[MetricRef]): GraftPlan = {
     val byModel = simples.groupBy(_.model).toSeq.sortBy(_._1)
     val crossModelOuter = classify(q).collect { case o: OuterWhere => o }
     require(crossModelOuter.forall { o =>
@@ -931,7 +940,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
         metrics = ms.map(mr => s"$m.${mr.metric.name}"),
         filters = nonHavingFilters,
         orderBy = Nil, limit = None, offset = None)
-      planAggregate(sub, finalShape = false)
+      aggregate(sub, finalShape = false)._1
     }
     stitch(partials, dims.map(_.innerName) ++
       (if (q.withTotals) Seq("_is_total") else Nil))
@@ -940,7 +949,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
   /** Build the joined multi-model frame with everything later stages need. */
   private def buildJoined(q: SemanticQuery, dims: Seq[DimRef],
       simples: Seq[MetricRef], pushed: Seq[PushDown], outer: Seq[OuterWhere],
-      hops: Seq[JoinHop], base: String, extraPk: Set[String]): DataFrame = {
+      hops: Seq[JoinHop], base: String, extraPk: Set[String]): GraftPlan = {
 
     val models = (base +: hops.map(_.toModel)).distinct
     var needed: Map[String, Needed] = models.map(_ -> Needed()).toMap
@@ -991,7 +1000,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
     // LEFT default (reference: generator.py:2549-2586)
     val filteredModels = pushedByModel.keySet
 
-    val frames: Map[String, DataFrame] = models.map { m =>
+    val frames: Map[String, GraftPlan] = models.map { m =>
       m -> modelFrame(cat.model(m), needed(m),
         pushedByModel.getOrElse(m, Nil).map(_.e), q.user)
     }.toMap
@@ -1022,7 +1031,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
     * (reference: generator.py:971,989). */
   private def ungroupedSelect(q: SemanticQuery, dims: Seq[DimRef],
       simples: Seq[MetricRef], pushed: Seq[PushDown], outer: Seq[OuterWhere],
-      hops: Seq[JoinHop], base: String): DataFrame = {
+      hops: Seq[JoinHop], base: String): GraftPlan = {
     val joined = buildJoined(q, dims, simples, pushed, outer, hops, base,
       extraPk = Set(base))
     val pkCols = cat.model(base).primaryKey.map(k =>
@@ -1035,9 +1044,9 @@ final class Generator(spark: SparkSession, cat: Catalog,
   }
 
   /** Compose derived/ratio metrics, apply HAVING, rename, order, limit. */
-  private def finish(q: SemanticQuery, aggregated: DataFrame, dims: Seq[DimRef],
+  private def finish(q: SemanticQuery, aggregated: GraftPlan, dims: Seq[DimRef],
       requested: Seq[MetricRef], simples: Seq[MetricRef],
-      having: Seq[HavingF]): DataFrame = {
+      having: Seq[HavingF]): GraftPlan = {
 
     var df = aggregated
     // available metric output columns (by bare name and model.name)
@@ -1140,7 +1149,7 @@ final class Generator(spark: SparkSession, cat: Catalog,
   }
 
   /** ORDER BY / LIMIT / OFFSET on the shaped output. */
-  private[gen] def shape(q: SemanticQuery, df0: DataFrame): DataFrame = {
+  private[gen] def shape(q: SemanticQuery, df0: GraftPlan): GraftPlan = {
     var df = df0
     if (q.orderBy.nonEmpty) {
       val cols = q.orderBy.map { o =>

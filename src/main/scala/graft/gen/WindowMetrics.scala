@@ -4,7 +4,7 @@ import graft.model.DimType
 import graft.plan.{FieldRef, SemanticQuery}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlan, SparkSession}
 
 /** Lowers cumulative and time-comparison metric types to Spark window
   * functions over an inner aggregated query — the reference's two-stage
@@ -27,7 +27,7 @@ final class WindowMetrics(spark: SparkSession, gen: Generator) {
 
   private val cat = gen.catRef
 
-  def plan(q: SemanticQuery): DataFrame = {
+  def plan(q: SemanticQuery): GraftPlan = {
     val mets = q.metrics.map(r => (r, gen.metricOf(r)))
     val innerRefs = mets.flatMap { case (ref, (model, m)) =>
       m.kind match {
@@ -179,7 +179,7 @@ final class WindowMetrics(spark: SparkSession, gen: Generator) {
 
     val dimOut = dimInfo.map { case (fr, _) => col(fr.outName) }
     val metOut = mets.map { case (_, (_, m)) => col(m.name) }
-    gen.shape(q, df.select(dimOut ++ metOut: _*))
+    gen.shape(q, GraftPlan(df).select(dimOut ++ metOut: _*))
   }
 
   private def strip(ref: String): String =

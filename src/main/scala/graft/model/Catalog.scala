@@ -2,6 +2,8 @@ package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.util.concurrent.{CompletableFuture, CompletionException}
+
 /** Explicit model registry (no global mutable context — reference's implicit
   * `with SemanticLayer()` registration, core/registry.py, is replaced by an
   * immutable catalog). Also hosts graph-level metrics (metrics defined over
@@ -85,12 +87,11 @@ final case class Catalog(
   def scan(spark: SparkSession, m: Model): DataFrame = m.source match {
     case ModelSource.Parquet(pattern) =>
       val path = pattern.replace("{dir}", dataDir)
-      Catalog.scanCache.computeIfAbsent((spark, "parquet", path),
-        _ => spark.read.parquet(path))
+      Catalog.cachedScan((spark, "parquet", path))(spark.read.parquet(path))
     case ModelSource.Table(t) => spark.table(t)
     case ModelSource.SqlView(s) =>
       if (s.contains("parquet.`"))
-        Catalog.scanCache.computeIfAbsent((spark, "sql", s), _ => spark.sql(s))
+        Catalog.cachedScan((spark, "sql", s))(spark.sql(s))
       else spark.sql(s)
   }
 
@@ -189,13 +190,41 @@ object Catalog {
     * releases a closing session's entries (the cached frames hold their
     * session strongly, so eviction is what makes it collectable). */
   private val MaxScanEntries = 256
-  private[model] val scanCache: java.util.Map[(SparkSession, String, String), DataFrame] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(SparkSession, String, String), DataFrame](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(SparkSession, String, String), DataFrame]): Boolean =
-          size() > MaxScanEntries
-      })
+  private type ScanKey = (SparkSession, String, String)
+
+  /** Each key holds the future its first miss completes, so the map's
+    * lock is held only to look a key up: a cold scan lists its files or
+    * analyses its view outside it, callers of the same key wait on its
+    * future, and a cold scan of any other key never waits for it. */
+  private val scanCache =
+    new java.util.LinkedHashMap[ScanKey, CompletableFuture[DataFrame]](
+        64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[ScanKey, CompletableFuture[DataFrame]]): Boolean =
+        size() > MaxScanEntries
+    }
+
+  /** The memoized scan for `key`, built by `build` on a miss. A failed
+    * build leaves no entry. An invalidation that runs while a build is in
+    * flight removes its future, so no caller after the invalidation is
+    * served that build; callers before it planned under the older
+    * [[scanEpoch]], whose plan-cache entries are then stale. */
+  private def cachedScan(key: ScanKey)(build: => DataFrame): DataFrame = {
+    val mine = new CompletableFuture[DataFrame]
+    val slot = scanCache.synchronized {
+      val cur = scanCache.get(key)
+      if (cur != null) cur else { scanCache.put(key, mine); mine }
+    }
+    if (slot ne mine)
+      try slot.join() catch { case e: CompletionException => throw e.getCause }
+    else
+      try { val df = build; mine.complete(df); df }
+      catch { case e: Throwable =>
+        scanCache.synchronized(scanCache.remove(key, mine))
+        mine.completeExceptionally(e)
+        throw e
+      }
+  }
 
   /** Bumped by both [[invalidateScans]] overloads, after the drop: a
     * generator's plan cache treats an entry built under an older epoch
@@ -203,7 +232,10 @@ object Catalog {
   private val epoch = new java.util.concurrent.atomic.AtomicLong
   def scanEpoch: Long = epoch.get
 
-  def invalidateScans(): Unit = { scanCache.clear(); epoch.incrementAndGet() }
+  def invalidateScans(): Unit = {
+    scanCache.synchronized(scanCache.clear())
+    epoch.incrementAndGet()
+  }
 
   /** Drop every cached scan belonging to one session (call on session close). */
   def invalidateScans(spark: SparkSession): Unit = {

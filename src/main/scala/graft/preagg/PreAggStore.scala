@@ -5,8 +5,7 @@ import graft.model.{Catalog, Model, PreAggregation}
 import graft.plan.{FieldRef, Grains, SemanticQuery}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlan, SparkSession}
 
 /** Materialized rollup store: build, refresh, match, and route
   * (reference: core/pre_aggregation.py:35,135 materialization;
@@ -30,26 +29,53 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
   def rollupPath(model: String, pa: PreAggregation): String =
     s"$basePath/${model}_preagg_${pa.name}"
 
-  /** Rollup schemas by path, remembered after the first read: a routed
-    * compile then reads its rollup without parquet schema inference,
-    * which launches a footer-merge job on every read. A rebuild
-    * ([[materialize]], [[refreshIncremental]]) forgets its entry. */
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+  /** A rollup's resolved scan, with the store version and the
+    * [[Catalog.scanEpoch]] it was resolved under. */
+  private final case class Resolved(version: Long, epoch: Long,
+      df: DataFrame)
+
+  /** Resolved rollup scans by path. A routed compile reuses its rollup's
+    * scan — no file listing, no schema inference, no analysis — for as
+    * long as neither this store has written ([[written]], which also
+    * drops the entry) nor
+    * [[Catalog.invalidateScans]] has run since it was resolved. */
+  private val resolved =
+    new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
 
   /** Bumped after every rollup write ([[materialize]],
-    * [[refreshIncremental]]): a generator routing through this store
-    * treats a plan built under an older version as a miss, since a
-    * routed plan's file listing names the files the write replaced.
-    * Per store, so one store's refreshes leave other plans cached. */
+    * [[refreshIncremental]], streaming maintenance): a generator routing
+    * through this store treats a plan built under an older version as a
+    * miss, since a routed plan's file listing names the files the write
+    * replaced. Per store, so one store's refreshes leave other plans
+    * cached. */
   private val writes = new java.util.concurrent.atomic.AtomicLong
   def version: Long = writes.get
 
+  /** Records a finished write to the rollup at `path`: its resolved scan
+    * is dropped and the store version bumped. Every writer of this
+    * store's rollups calls it after the write. */
+  private[graft] def written(path: String): Unit = {
+    resolved.remove(path)
+    writes.incrementAndGet()
+  }
+
+  /** The rollup's scan, resolved again only when it is stale. The
+    * version and epoch are read before resolving, so a scan that races a
+    * write or an invalidation is stamped with the older value and is
+    * resolved again by the next read. An invalidation alone leaves the
+    * schema as it was (only this store's writes change it), so the scan
+    * is re-listed without parquet schema inference, which would launch a
+    * footer-merge job. */
   private def readRollup(path: String): DataFrame = {
-    val df = graft.ops.IndexFiles.readShaped(spark, path,
-      Option(schemas.get(path)))
-    schemas.putIfAbsent(path, df.schema)
-    df
+    val (version, epoch) = (writes.get, Catalog.scanEpoch)
+    val cur = resolved.get(path)
+    if (cur != null && cur.version == version && cur.epoch == epoch) cur.df
+    else {
+      val schema = Option(cur).filter(_.version == version).map(_.df.schema)
+      val df = graft.ops.IndexFiles.readShaped(spark, path, schema)
+      resolved.put(path, Resolved(version, epoch, df))
+      df
+    }
   }
 
   /** A rollup exists when its directory holds parquet data — dynamic
@@ -158,8 +184,7 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
     if (pa.partitionGranularity.isDefined)
       byPart(rollup).write.mode("overwrite").partitionBy("__part").parquet(path)
     else rollup.write.mode("overwrite").parquet(path)
-    schemas.remove(path)
-    writes.incrementAndGet()
+    written(path)
     path
   }
 
@@ -189,8 +214,7 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
     byPart(rollup).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__part").parquet(path)
-    schemas.remove(path)
-    writes.incrementAndGet()
+    written(path)
     path
   }
 
@@ -401,8 +425,8 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
   /** Try to serve the query from a rollup. None = no usable rollup; the
     * caller falls back to the base-table plan (the reference's fallback-
     * with-recompile, semantic_layer.py:798-849). */
-  def plan(q: SemanticQuery): Option[DataFrame] = matchQuery(q).map { mt =>
-    var df = readRollup(mt.path)
+  def plan(q: SemanticQuery): Option[GraftPlan] = matchQuery(q).map { mt =>
+    var df = GraftPlan(readRollup(mt.path))
     // rewrite query filters into rollup scope
     mt.ownFilters.foreach { f =>
       val e = Exprs.rewriteRelativeDates(
@@ -424,7 +448,7 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
     // data instead of the fact table)
     mt.hops.foreach { h =>
       val dm = cat.model(h.toModel)
-      var frame = cat.scan(spark, dm)
+      var frame = GraftPlan(cat.scan(spark, dm))
       mt.foreignFilters(h.toModel).foreach { f =>
         val e = Exprs.rewriteRelativeDates(
           Exprs.parse(spark, Exprs.interpolate(f, q.parameters)), q.anchorDate)
@@ -462,11 +486,11 @@ final class PreAggStore(spark: SparkSession, cat: Catalog, basePath: String) {
         case "max"   => max(col(s"${name}__max")).as(name)
       }
     }
+    val agg = df.agg(dimCols, aggCols)
     var out =
-      if (dimCols.isEmpty) df.agg(aggCols.head, aggCols.tail: _*)
-      else df.groupBy(dimCols: _*).agg(aggCols.head, aggCols.tail: _*)
-        .select(mt.dims.map(d => col(d.outName)) ++
-          q.metrics.map(r => col(FieldRef.parse(r).field)): _*)
+      if (dimCols.isEmpty) agg
+      else agg.select(mt.dims.map(d => col(d.outName)) ++
+        q.metrics.map(r => col(FieldRef.parse(r).field)): _*)
     if (q.orderBy.nonEmpty)
       out = out.orderBy(q.orderBy.map(o =>
         if (o.startsWith("-")) col(o.drop(1)).desc else col(o).asc): _*)

@@ -120,81 +120,65 @@ final class SqlFront(spark: SparkSession, cat: Catalog, gen: Generator) {
             cat.models.contains(ur.multipartIdentifier.head) => ()
     }.isDefined
 
-  private def rewrite(plan: LogicalPlan): Option[DataFrame] = plan match {
+  /** `plan` as a DataFrame when it is semantic: a single scope is the
+    * planner's own DataFrame (a plan-cache hit returns the cached one);
+    * any other semantic shape is the parsed plan with its scopes
+    * substituted, analysed once. */
+  private def rewrite(plan: LogicalPlan): Option[DataFrame] =
+    single(plan).orElse(substitute(plan).map(GraftSqlBridge.dataFrame(spark, _)))
+
+  /** `plan` with each semantic scope replaced by the plan the planner
+    * built for it, or None when it is not a shape this front end
+    * rewrites. Nothing is registered in the session catalog, so
+    * concurrent queries on one session cannot see each other's names. */
+  private def substitute(plan: LogicalPlan): Option[LogicalPlan] = plan match {
     case w: UnresolvedWith => withCtes(w)
-    case d: Distinct => d.child match {
-      case u: Union => branchFrames(u).map(_.distinct())
-      case _        => single(plan)
-    }
-    case u: Union => branchFrames(u)
+    case d @ Distinct(u: Union) => branches(u).map(b => d.copy(child = b))
+    case _: Distinct => None // SELECT DISTINCT is not a semantic scope
+    case u: Union => branches(u)
     case i: Intersect =>
-      for (lf <- rewrite(i.left); rf <- rewrite(i.right))
-        yield if (i.isAll) lf.intersectAll(rf) else lf.intersect(rf)
+      for (l <- substitute(i.left); r <- substitute(i.right))
+        yield i.copy(left = l, right = r)
     case e: Except =>
-      for (lf <- rewrite(e.left); rf <- rewrite(e.right))
-        yield if (e.isAll) lf.exceptAll(rf) else lf.except(rf)
-    case other => single(other).orElse(hybridSubqueries(other))
+      for (l <- substitute(e.left); r <- substitute(e.right))
+        yield e.copy(left = l, right = r)
+    case other => scope(other).orElse(hybridSubqueries(other))
   }
 
+  /** One SELECT scope's planned plan. */
+  private def scope(plan: LogicalPlan): Option[LogicalPlan] =
+    single(plan).map(GraftSqlBridge.logicalPlan)
+
   /** WITH query (reference: query_rewriter.py:917-1107): each CTE compiles
-    * independently — semantic scopes through the planner, plain SQL (which
-    * may reference earlier CTEs) through Spark — and registers as a temp
-    * view under its own name; the main body then compiles in the same way.
-    * Engaged only when something in the query is semantic, so pure-SQL WITH
-    * queries pass through Spark untouched with no view side effects.
-    *
-    * The temp registrations are SCOPED, not a session side effect: any
-    * pre-existing temp view a CTE name collides with is saved first and
-    * restored after, and names this query introduced are dropped — a
-    * query's `WITH orders_view AS …` must not shadow the user's session
-    * state for every later query. Restoring after the final DataFrame is
-    * built is sound because every compile path analyzes eagerly (the
-    * views are inlined into the analyzed plan before the finally runs). */
-  private def withCtes(w: UnresolvedWith): Option[DataFrame] = {
+    * independently — a semantic body through the planner, plain SQL
+    * (which may reference earlier CTEs) left to Spark — and the main body
+    * the same way. The planned bodies stand in for the parsed ones inside
+    * the WITH, so Spark's own CTE substitution keeps the query's scoping:
+    * a CTE name shadows a session view of that name for this query only.
+    * Engaged only when something in the query is semantic, so pure-SQL
+    * WITH queries pass through Spark untouched. */
+  private def withCtes(w: UnresolvedWith): Option[LogicalPlan] = {
     val defs = w.cteRelations.map(_._2)
     val semantic = (w.child +: defs.map(_.child))
       .exists(p => referencesSemanticModel(p) || referencesMetricsTable(p))
     if (!semantic) return None
-    val catalog = spark.sessionState.catalog
-    val saved = w.cteRelations.map { case (name, _, _) =>
-      name -> catalog.getRawTempView(name)
+    val ctes = w.cteRelations.map { case (name, sa, d) =>
+      (name, substitute(sa.child).fold(sa)(p => sa.copy(child = p)), d)
     }
-    try {
-      w.cteRelations.foreach { case (name, sa, _) =>
-        val df = rewrite(sa.child)
-          .getOrElse(GraftSqlBridge.dataFrame(spark, sa.child))
-        df.createOrReplaceTempView(name)
-      }
-      Some(rewrite(w.child).getOrElse(GraftSqlBridge.dataFrame(spark, w.child)))
-    } finally {
-      saved.foreach {
-        case (name, Some(prior)) =>
-          catalog.createTempView(name, prior, overrideIfExists = true)
-        case (name, None) => spark.catalog.dropTempView(name)
-      }
-    }
+    Some(w.copy(child = substitute(w.child).getOrElse(w.child),
+      cteRelations = ctes))
   }
 
-  /** Subquery-in-FROM recursion: replace each aliased semantic sub-scope
-    * with a temp view of its planned DataFrame, then run the remaining
-    * (plain-SQL) outer shell through Spark. */
-  private val subCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def hybridSubqueries(plan: LogicalPlan): Option[DataFrame] = {
-    var views = List.empty[String]
+  /** Subquery-in-FROM recursion: each aliased semantic sub-scope is
+    * replaced by its planned plan under the same alias; the remaining
+    * (plain-SQL) outer shell is left to Spark. */
+  private def hybridSubqueries(plan: LogicalPlan): Option[LogicalPlan] = {
+    var found = false
     val replaced = plan.transformUp {
-      case sa @ SubqueryAlias(ident, child) if single(child).isDefined =>
-        val df = single(child).get
-        val view = s"__graft_sub_${subCounter.incrementAndGet()}"
-        df.createOrReplaceTempView(view)
-        views ::= view
-        SubqueryAlias(ident, UnresolvedRelation(Seq(view)))
+      case sa @ SubqueryAlias(_, child) =>
+        scope(child).fold(sa) { p => found = true; sa.copy(child = p) }
     }
-    if (views.isEmpty) None
-    else
-      // eager analysis inlines the scratch views; drop them so the
-      // session catalog doesn't accumulate one per compiled subquery
-      try Some(GraftSqlBridge.dataFrame(spark, replaced))
-      finally views.foreach(spark.catalog.dropTempView)
+    if (found) Some(replaced) else None
   }
 
   private def referencesMetricsTable(plan: LogicalPlan): Boolean =
@@ -204,10 +188,10 @@ final class SqlFront(spark: SparkSession, cat: Catalog, gen: Generator) {
             !cat.models.contains("metrics") => ()
     }.isDefined
 
-  private def branchFrames(u: Union): Option[DataFrame] = {
-    val frames = u.children.map(rewrite)
-    if (frames.exists(_.isEmpty)) None
-    else Some(frames.flatten.reduce(_ union _))
+  private def branches(u: Union): Option[LogicalPlan] = {
+    val planned = u.children.map(substitute)
+    if (planned.exists(_.isEmpty)) None
+    else Some(u.withNewChildren(planned.flatten))
   }
 
   /** One SELECT scope → SemanticQuery. */

@@ -106,60 +106,57 @@ final class Yardstick(spark: SparkSession, cat: Catalog) {
   }
 
   private def rewriteOrSpark(text: String): DataFrame =
-    rewriteText(text).getOrElse(spark.sql(text))
+    rewriteText(text).getOrElse {
+      val ctes = scope.value
+      if (ctes.isEmpty) spark.sql(text)
+      else GraftSqlBridge.dataFrame(spark, UnresolvedWith(
+        GraftSqlBridge.parser(spark).parsePlan(text),
+        ctes.map { case (n, p) => (n, SubqueryAlias(n, p), None) }))
+    }
 
   // ------------------------------------------------------------------
-  // WITH queries: each CTE → temp view, then the main body
+  // WITH queries: each CTE in order, then the main body
   // ------------------------------------------------------------------
 
-  /** WITH handling. CTE views are registered under their declared names so
-    * body references resolve, but any pre-existing temp view of the same
-    * name is captured first and restored afterwards (spark.sql analyzes
-    * eagerly, so the returned DataFrame keeps its resolved plan after the
-    * CTE views are gone). A WITH shape outside the supported subset (e.g. a
-    * column-alias list `WITH x (a,b) AS (...)`) returns None so SqlFront
-    * falls back to Spark's own parser instead of throwing.
+  /** The CTEs compiled so far by the WITH query this thread is compiling,
+    * in order. A plain-SQL body and a yardstick side that names one of
+    * them read its plan; nothing is registered in the session catalog,
+    * so concurrent queries on one session never see each other's CTEs. */
+  private val scope =
+    new scala.util.DynamicVariable[Vector[(String, LogicalPlan)]](Vector.empty)
+
+  /** WITH handling: each CTE body compiles under the CTEs before it, and
+    * the main body under all of them. A WITH shape outside the supported
+    * subset (e.g. a column-alias list `WITH x (a,b) AS (...)`) returns
+    * None so SqlFront falls back to Spark's own parser instead of
+    * throwing.
     */
   private def withCtes(text: String): Option[DataFrame] = {
     val masked = maskForScan(text)
     if (raw"(?is)^\s*WITH\b".r.findFirstIn(masked).isEmpty) return None
-    // (name, prior temp-view frame if one was shadowed)
-    var created = List.empty[(String, Option[DataFrame])]
-    def restore(): Unit = created.foreach { case (name, prior) =>
-      prior match {
-        case Some(df) => df.createOrReplaceTempView(name)
-        case None     => spark.catalog.dropTempView(name)
-      }
+    var ctes = Vector.empty[(String, LogicalPlan)]
+    var i = masked.indexWhere(!_.isWhitespace) + 4 // past WITH
+    var more = true
+    while (more) {
+      while (i < text.length && text(i).isWhitespace) i += 1
+      val ns = i
+      while (i < text.length && (text(i).isLetterOrDigit || text(i) == '_')) i += 1
+      val name = text.substring(ns, i)
+      while (i < text.length && text(i).isWhitespace) i += 1
+      if (name.isEmpty || !text.regionMatches(true, i, "AS", 0, 2))
+        return None // unsupported WITH shape → Spark parser
+      i += 2
+      while (i < text.length && text(i).isWhitespace) i += 1
+      if (i >= text.length || text(i) != '(') return None
+      val close = matchingClose(masked, i)
+      if (close < 0) return None
+      val body = scope.withValue(ctes)(rewriteOrSpark(text.substring(i + 1, close)))
+      ctes :+= name -> GraftSqlBridge.logicalPlan(body)
+      i = close + 1
+      while (i < text.length && text(i).isWhitespace) i += 1
+      if (i < text.length && text(i) == ',') { i += 1 } else more = false
     }
-    try {
-      var i = masked.indexWhere(!_.isWhitespace) + 4 // past WITH
-      var more = true
-      while (more) {
-        while (i < text.length && text(i).isWhitespace) i += 1
-        val ns = i
-        while (i < text.length && (text(i).isLetterOrDigit || text(i) == '_')) i += 1
-        val name = text.substring(ns, i)
-        while (i < text.length && text(i).isWhitespace) i += 1
-        if (name.isEmpty || !text.regionMatches(true, i, "AS", 0, 2))
-          return None // unsupported WITH shape → Spark parser (finally restores)
-        i += 2
-        while (i < text.length && text(i).isWhitespace) i += 1
-        if (i >= text.length || text(i) != '(') return None
-        val close = matchingClose(masked, i)
-        if (close < 0) return None
-        val prior =
-          if (spark.catalog.tableExists(name) &&
-              spark.catalog.getTable(name).isTemporary)
-            Some(spark.table(name))
-          else None
-        rewriteOrSpark(text.substring(i + 1, close)).createOrReplaceTempView(name)
-        created = (name, prior) :: created
-        i = close + 1
-        while (i < text.length && text(i).isWhitespace) i += 1
-        if (i < text.length && text(i) == ',') { i += 1 } else more = false
-      }
-      Some(rewriteOrSpark(text.substring(i)))
-    } finally restore()
+    Some(scope.withValue(ctes)(rewriteOrSpark(text.substring(i))))
   }
 
   // ------------------------------------------------------------------
@@ -672,7 +669,11 @@ final class Yardstick(spark: SparkSession, cat: Catalog) {
 
     def sideBase(i: Int): DataFrame = sides(i).model match {
       case Some(m) => baseFrame(m)
-      case None    => spark.table(sides(i).relName)
+      case None    =>
+        val rel = sides(i).relName
+        scope.value.reverseIterator.find(_._1.equalsIgnoreCase(rel))
+          .fold(spark.table(rel))(c =>
+            GraftSqlBridge.dataFrame(spark, SubqueryAlias(rel, c._2)))
     }
     def sideAliasName(i: Int): String =
       sides(i).alias.getOrElse(sides(i).relName)

@@ -55,7 +55,7 @@ final class StreamingRollup(spark: SparkSession, cat: Catalog,
         batchRollup.write.mode("overwrite")
           .partitionBy("__part")
           .parquet(s"$path/__batch=$batchId")
-        ()
+        store.written(path)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -80,5 +80,6 @@ final class StreamingRollup(spark: SparkSession, cat: Catalog,
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     fs.rename(new org.apache.hadoop.fs.Path(tmp),
       new org.apache.hadoop.fs.Path(path))
+    store.written(path)
   }
 }

@@ -79,6 +79,43 @@ class PlanCacheConcurrencySpec extends AnyFunSuite {
     }
   }
 
+  test("a slow cold scan does not hold up a cold compose on another " +
+      "generator") {
+    // the slow scan: a SqlView over a 40-way union, analysed on its
+    // first use; the other compose reads orders on a new session, so its
+    // scans are cold too
+    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    val union = (1 to 40).map(i =>
+      s"SELECT o_orderkey AS id, o_orderstatus AS kind, $i AS part, " +
+        s"'$nonce' AS tag FROM parquet.`$dir/orders.parquet`")
+      .mkString(" UNION ALL ")
+    val slowCat = TpchCatalog.build(dir).add(Model("slow_scan",
+      source = ModelSource.SqlView(union), primaryKey = Seq("id"),
+      dimensions = Seq(Dimension("kind", sql = Some("kind"))),
+      metrics = Seq(Metric("parts", agg = Some("count_distinct"),
+        sql = Some("part")))))
+    val slow = new graft.gen.Generator(spark, slowCat)
+    val other = new graft.gen.Generator(spark.newSession(),
+      TpchCatalog.build(dir))
+    pool(1) { implicit ec =>
+      val t0 = System.nanoTime()
+      val cold = Future(slow.plan(SemanticQuery(
+        metrics = Seq("slow_scan.parts"), dimensions = Seq("slow_scan.kind"))))
+      Thread.sleep(300)
+      val c0 = System.nanoTime()
+      other.plan(SemanticQuery(metrics = Seq("orders.revenue"),
+        dimensions = Seq("orders.orderstatus"), orderBy = Seq("orderstatus")))
+      val composeMs = (System.nanoTime() - c0) / 1e6
+      val slowStillRunning = !cold.isCompleted
+      Await.result(cold, Duration.Inf)
+      val slowMs = (System.nanoTime() - t0) / 1e6
+      assert(slowMs > 1000, s"the slow scan took only $slowMs ms")
+      assert(slowStillRunning,
+        s"the cold compose ($composeMs ms) returned only after the slow " +
+          s"scan ($slowMs ms)")
+    }
+  }
+
   test("8 threads serving the dashboard tiles through the factory match a " +
       "serial run") {
     def routes(s: SparkSession): Seq[String] = {

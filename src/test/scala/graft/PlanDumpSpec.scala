@@ -37,4 +37,16 @@ class PlanDumpSpec extends AnyFunSuite {
       Set("q_agg_minmax"), "") == 1)
     assert(!Files.exists(o.resolve("q_agg_minmax.txt")))
   }
+
+  test("digests.tsv holds one plan digest per dumped query, equal across " +
+      "two dumps of the same build") {
+    val (a, b) = (out(), out())
+    Seq(a, b).foreach(o => assert(PlanDump.run(spark, TestSpark.sfDir,
+      o.toString, Set("q_agg_minmax", "q_multi_hop"), "") == 0))
+    val lines = Files.readAllLines(a.resolve("digests.tsv"))
+    assert(lines.size == 2)
+    assert(lines.get(0).matches("q_agg_minmax\\t[0-9a-f]{32}"), lines)
+    assert(lines.get(1).startsWith("q_multi_hop\t"), lines)
+    assert(lines == Files.readAllLines(b.resolve("digests.tsv")))
+  }
 }

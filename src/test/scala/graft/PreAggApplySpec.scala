@@ -69,7 +69,7 @@ class PreAggApplySpec extends AnyFunSuite {
     // routed result equals the direct plan
     val direct = new Generator(spark, cat).plan(query)
       .orderBy("orderstatus").collect().map(_.toSeq).toSeq
-    val viaRollup = routed.get.orderBy("orderstatus")
+    val viaRollup = routed.get.toDF.orderBy("orderstatus")
       .collect().map(_.toSeq).toSeq
     assert(viaRollup == direct)
 

@@ -26,7 +26,7 @@ class PreAggSpec extends AnyFunSuite {
     val routed = store.plan(q)
     assert(routed.isDefined, "query should match the daily rollup")
     val fromBase = new Generator(spark, cat).plan(q.copy(usePreAggs = false))
-    assert(collectSorted(routed.get) == collectSorted(fromBase))
+    assert(collectSorted(routed.get.toDF) == collectSorted(fromBase))
   }
 
   test("join-key routing: foreign dims served from the fk-bearing rollup") {
@@ -41,7 +41,7 @@ class PreAggSpec extends AnyFunSuite {
     val routed = store.plan(q)
     assert(routed.isDefined, "joined query should route via the stored fk")
     val fromBase = new Generator(spark, cat).plan(q.copy(usePreAggs = false))
-    assert(collectSorted(routed.get) == collectSorted(fromBase))
+    assert(collectSorted(routed.get.toDF) == collectSorted(fromBase))
     // a rollup without the fk cannot serve the joined query
     val qUnrouteable = SemanticQuery(
       metrics = Seq("orders.max_order_value"),
@@ -92,12 +92,12 @@ class PreAggSpec extends AnyFunSuite {
     store.materialize("orders", pa)
     val full = collectSorted(store.plan(SemanticQuery(
       metrics = Seq("orders.revenue", "orders.order_count"),
-      dimensions = Seq("orders.order_date__month"))).get)
+      dimensions = Seq("orders.order_date__month"))).get.toDF)
     // re-run an incremental pass over the tail; totals must be unchanged
     store.refreshIncremental("orders", pa, "2000-01-15", lookback = 2)
     val after = collectSorted(store.plan(SemanticQuery(
       metrics = Seq("orders.revenue", "orders.order_count"),
-      dimensions = Seq("orders.order_date__month"))).get)
+      dimensions = Seq("orders.order_date__month"))).get.toDF)
     assert(after == full)
   }
 

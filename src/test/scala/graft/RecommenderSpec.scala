@@ -42,7 +42,7 @@ class RecommenderSpec extends AnyFunSuite {
       val routed = store.plan(q)
       assert(routed.isDefined, s"recommended rollup must serve $q")
       val direct = new Generator(spark, cat2).plan(q.copy(usePreAggs = false))
-      assert(routed.get.collect().map(_.toSeq).toSet ==
+      assert(routed.get.toDF.collect().map(_.toSeq).toSet ==
         direct.collect().map(_.toSeq).toSet)
     }
   }

@@ -165,4 +165,28 @@ class SqlFrontSpec extends AnyFunSuite {
     val df = front.sql("SELECT orders.revenue, orders.order_count FROM orders")
     assert(df.count() == 1)
   }
+
+  test("two threads compiling WITH queries on one session never see each " +
+      "other's CTEs and match a serial run") {
+    // the same CTE name with different bodies: a session-level name (a
+    // temp view) would let one thread read or drop the other's `seg`
+    val texts = Seq(
+      """WITH seg AS (SELECT orders.orderpriority, orders.revenue FROM orders)
+        |SELECT orderpriority, revenue FROM seg
+        |ORDER BY orderpriority""".stripMargin,
+      """WITH seg AS (SELECT customer.mktsegment, orders.order_count FROM orders)
+        |SELECT mktsegment, order_count FROM seg
+        |ORDER BY mktsegment""".stripMargin)
+    val serial = texts.map(t => rows(front.sql(t)))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val runs = texts.zip(serial).map { case (t, want) =>
+        pool.submit(() => (1 to 200).count(_ =>
+          scala.util.Try(rows(front.sql(t))).toOption.contains(want)))
+      }
+      assert(runs.map(_.get()) == Seq(200, 200),
+        "some compiles failed or differ from the serial run")
+    } finally pool.shutdown()
+    assert(!spark.catalog.tableExists("seg"))
+  }
 }

@@ -41,7 +41,7 @@ class StreamingSpec extends AnyFunSuite {
       dimensions = Seq("events.event_type"),
       orderBy = Seq("event_type")))
     assert(routed.isDefined, "rollup should exist and match after streaming")
-    val got = routed.get.collect().map(_.toSeq).toSeq
+    val got = routed.get.toDF.collect().map(_.toSeq).toSeq
     val want = new graft.gen.Generator(spark, cat).plan(SemanticQuery(
       metrics = Seq("events.event_count", "events.total_value"),
       dimensions = Seq("events.event_type"),
@@ -75,7 +75,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val after = store.plan(SemanticQuery(
       metrics = Seq("events.event_count"),
-      dimensions = Seq("events.event_type"))).get
+      dimensions = Seq("events.event_type"))).get.toDF
       .agg(sum(col("event_count"))).collect()(0).getLong(0)
     val single = spark.read.parquet(s"${TestSpark.sfDir}/events.parquet").count()
     assert(after == 2 * single)
@@ -98,7 +98,7 @@ class StreamingSpec extends AnyFunSuite {
     roll.maintain("events", evPa, src, s"$tmp/ckpt").awaitTermination(120000)
     def total(): Long = store.plan(SemanticQuery(
       metrics = Seq("events.event_count"),
-      dimensions = Seq("events.event_type"))).get
+      dimensions = Seq("events.event_type"))).get.toDF
       .agg(sum(col("event_count"))).collect()(0).getLong(0)
     val first = total()
 

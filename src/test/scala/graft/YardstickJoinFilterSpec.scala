@@ -68,4 +68,30 @@ class YardstickJoinFilterSpec extends AnyFunSuite {
     }
     assert(err.getMessage.toLowerCase.contains("ambiguous"))
   }
+
+  test("WITH: CTE bodies feed the main body without touching the session " +
+      "catalog, so two threads with different bodies under one CTE name " +
+      "match a serial run") {
+    val yard = setup()
+    def run(text: String): Seq[String] =
+      yard.sql(text).collect().map(r =>
+        s"${r.get(0)}:${r.get(1).toString.toDouble}").toSeq
+    val texts = Seq(
+      """WITH r AS (SELECT yr, AGGREGATE(revenue) AS v FROM jf_sales_v GROUP BY yr)
+        |SELECT yr, v FROM r ORDER BY yr""".stripMargin,
+      """WITH r AS (SELECT yr2, AGGREGATE(n) AS v FROM jf_tags_v GROUP BY yr2)
+        |SELECT yr2, v FROM r ORDER BY yr2""".stripMargin)
+    val serial = texts.map(run)
+    assert(serial == Seq(Seq("2020:30.0", "2021:40.0"), Seq("2020:1.0", "2021:1.0")))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val runs = texts.zip(serial).map { case (t, want) =>
+        pool.submit(() => (1 to 100).count(_ =>
+          scala.util.Try(run(t)).toOption.contains(want)))
+      }
+      assert(runs.map(_.get()) == Seq(100, 100),
+        "some compiles failed or differ from the serial run")
+    } finally pool.shutdown()
+    assert(!spark.catalog.tableExists("r"))
+  }
 }
