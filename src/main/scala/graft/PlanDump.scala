@@ -8,7 +8,13 @@ import java.nio.file.{Files, Paths}
   * `<outDir>/digests<suffix>.tsv` gets one `<q>\t<digest>` line per dumped
   * query: a digest of its canonicalized optimized plan, by the rule
   * perfbench's `planDigest` uses, so two builds' files diff to nothing
-  * when they plan the same queries identically.
+  * when they plan the same queries identically. Six pipeline queries can
+  * differ between two dumps of one build: q_token_pack prints its
+  * `Sampling.packGreedy` closure with an identity hash
+  * (`Sampling$$$Lambda…@…`); q_ann_ivf_append, q_ann_ivfpq, q_dedup_index
+  * and q_rrf_ivf order the conjuncts of a dynamic-pruning Filter
+  * differently; q_corpus_report's distinct-aggregate rewrite numbers its
+  * `FILTER (WHERE (n = gid))` groups differently.
   * Usage: runMain graft.PlanDump <outDir> <q1,q2,...> [suffix]
   * Exits 1 when a requested name is unknown or a dump fails.
   * The session is `GraftSession.create()`, as in Bench, so the captured

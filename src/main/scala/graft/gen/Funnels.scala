@@ -3,11 +3,13 @@ package graft.gen
 import graft.functions.Exprs
 import graft.plan.{FieldRef, SemanticQuery}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, GraftPlan, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlan, SparkSession}
 
-/** Conversion / retention / cohort metric generators — multi-stage DataFrame
-  * plans (reference: sql/generator.py:5210-5700 conversion,
-  * :4998-5209 retention, :4694-4997 cohort).
+/** Conversion / retention / cohort / funnel metric generators —
+  * multi-stage plans composed through [[GraftPlan]] over the secured scan,
+  * analysed once with the rest of the compile (reference:
+  * sql/generator.py:5210-5700 conversion, :4998-5209 retention,
+  * :4694-4997 cohort).
   *
   * These operate on a single event-grain model; query dimensions must come
   * from that model. Every stage is a distributed groupBy/join — no driver
@@ -24,7 +26,7 @@ final class Funnels(spark: SparkSession, gen: Generator) {
     // base frame: the shared enforcement point (deny-by-default, access
     // gate, row filters) + all query filters (single-model scope) — funnel
     // plans get exactly the same security semantics as the standard path
-    var df = gen.securedScan(model, q.user).toDF
+    var df = gen.securedScan(model, q.user)
     (q.filters ++ segmentSql(q)).foreach { f =>
       val e = Exprs.rewriteRelativeDates(
         Exprs.parse(spark, Exprs.interpolate(f, gen.mergedParams(q))), q.anchorDate)
@@ -58,35 +60,30 @@ final class Funnels(spark: SparkSession, gen: Generator) {
     val ts = Exprs.toColumn(gen.localField(model, timeDim))
 
     m.kind match {
-      case "conversion" => conversion(q, df, m.name, dims, dimCol, local,
-        col(entity), ts,
-        m.baseFilter.get, m.conversionFilter.get,
-        m.conversionWindow.getOrElse("7 day"))
-      case "retention" => retention(q, df, m.name, local, col(entity), ts,
-        m.baseFilter.get, m.conversionFilter.get,
-        m.retentionGrain.getOrElse("day"), m.retentionPeriods.getOrElse(7))
+      case "conversion" =>
+        conversion(q, df, m, dims, dimCol, local, col(entity), ts)
+      case "retention" => retention(q, df, m, local, col(entity), ts)
       case "cohort" => cohort(q, df, m, dims, dimCol, local, col(entity))
-      case "funnel" => GraftPlan(funnelSteps(q, df, m, local, col(entity)))
+      case "funnel" => funnelSteps(df, m, local, col(entity))
     }
   }
 
   /** N-step funnel: per-entity BOOL_OR flags per step → sequential AND →
     * entities reached per step + rate vs step 0
     * (reference: sql/generator.py:5420-5700). */
-  private def funnelSteps(q: SemanticQuery, df: DataFrame, m: graft.model.Metric,
-      local: String => Column, entity: Column): DataFrame = {
+  private def funnelSteps(df: GraftPlan, m: graft.model.Metric,
+      local: String => Column, entity: Column): GraftPlan = {
     val n = m.steps.size
     require(n >= 2, s"Funnel metric '${m.name}' needs at least 2 steps")
     val flagAggs = m.steps.zipWithIndex.map { case (f, i) =>
       max(when(local(f), 1).otherwise(0)).as(s"__s$i") }
-    val perEntity = df.groupBy(entity.as("__e"))
-      .agg(flagAggs.head, flagAggs.tail: _*)
+    val perEntity = df.agg(Seq(entity.as("__e")), flagAggs)
     // reached step i ⇔ every step ≤ i fired for the entity
     val reached = m.steps.indices.map(i =>
       (0 to i).map(j => col(s"__s$j") === 1).reduce(_ && _))
     val countAggs = m.steps.indices.map(i =>
       sum(when(reached(i), 1L).otherwise(0L)).as(s"__r$i"))
-    val counts = perEntity.agg(countAggs.head, countAggs.tail: _*)
+    val counts = perEntity.agg(Nil, countAggs)
     val stackArgs = m.steps.indices
       .map(i => s"cast($i as bigint), __r$i").mkString(", ")
     counts
@@ -103,52 +100,49 @@ final class Funnels(spark: SparkSession, gen: Generator) {
 
   /** Entity-level conversion rate: of entities with a base event, the share
     * that fire a conversion event within the window after ANY base event. */
-  private def conversion(q: SemanticQuery, df: DataFrame, name: String,
+  private def conversion(q: SemanticQuery, df: GraftPlan, m: graft.model.Metric,
       dims: Seq[FieldRef], dimCol: FieldRef => Column, local: String => Column,
-      entity: Column, ts: Column, baseFilter: String, convFilter: String,
-      window: String): GraftPlan = {
+      entity: Column, ts: Column): GraftPlan = {
 
-    val (n, unit) = new WindowMetrics(spark, gen).parseWindow(window)
+    val (n, unit) =
+      WindowMetrics.parseWindow(m.conversionWindow.getOrElse("7 day"))
     val dimCols = dims.map(dimCol)
-    val base = df.filter(local(baseFilter))
+    val base = df.filter(local(m.baseFilter.get))
       .select((entity.as("__e") +: ts.as("__t") +: dimCols): _*)
-    val conv = df.filter(local(convFilter))
+    val conv = df.filter(local(m.conversionFilter.get))
       .select(entity.as("__ce"), ts.as("__ct"))
 
     val within = col("__ct") >= col("__t") &&
       col("__ct") <= col("__t") + expr(s"INTERVAL $n $unit")
     val j = base.join(conv, col("__ce") === col("__e") && within, "left")
 
-    val perEntity = j
-      .groupBy(col("__e") +: dims.map(d => col(d.outName)): _*)
-      .agg(max(when(col("__ct").isNotNull, 1).otherwise(0)).as("__conv"))
-    val out = perEntity
-      .groupBy(dims.map(d => col(d.outName)): _*)
-      .agg(
-        count(lit(1)).as("base_entities"),
-        sum(col("__conv")).as("converted_entities"),
-        (sum(col("__conv")) / count(lit(1))).as(name))
-    gen.shape(q, GraftPlan(out))
+    val perEntity = j.agg(col("__e") +: dims.map(d => col(d.outName)),
+      Seq(max(when(col("__ct").isNotNull, 1).otherwise(0)).as("__conv")))
+    val out = perEntity.agg(dims.map(d => col(d.outName)), Seq(
+      count(lit(1)).as("base_entities"),
+      sum(col("__conv")).as("converted_entities"),
+      (sum(col("__conv")) / count(lit(1))).as(m.name)))
+    gen.shape(q, out)
   }
 
   /** Cohort retention curve, on the reference's fixed output contract
     * (generator.py:5178-5205): cohort_date is a DATE, the period column is
     * `<grain>s_since`, and `retention_pct` = round(active·100/size, 1) —
-    * these names hold regardless of the metric's own name. */
-  private def retention(q: SemanticQuery, df: DataFrame, name: String,
-      local: String => Column, entity: Column, ts: Column,
-      cohortFilter: String, activityFilter: String,
-      grain: String, periods: Int): GraftPlan = {
+    * these names hold regardless of the metric's own name. The base filter
+    * picks cohort events, the conversion filter activity events. */
+  private def retention(q: SemanticQuery, df: GraftPlan, m: graft.model.Metric,
+      local: String => Column, entity: Column, ts: Column): GraftPlan = {
 
+    val grain = m.retentionGrain.getOrElse("day")
+    val periods = m.retentionPeriods.getOrElse(7)
     def trunc(c: Column): Column = grain match {
       case "day"   => to_date(c)
       case "week"  => to_date(date_trunc("week", c))
       case "month" => to_date(date_trunc("month", c))
     }
-    val cohorts = df.filter(local(cohortFilter))
-      .groupBy(entity.as("__e"))
-      .agg(min(trunc(ts)).as("cohort_date"))
-    val activity = df.filter(local(activityFilter))
+    val cohorts = df.filter(local(m.baseFilter.get))
+      .agg(Seq(entity.as("__e")), Seq(min(trunc(ts)).as("cohort_date")))
+    val activity = df.filter(local(m.conversionFilter.get))
       .select(entity.as("__ae"), trunc(ts).as("__ad"))
       .distinct()
 
@@ -163,14 +157,15 @@ final class Funnels(spark: SparkSession, gen: Generator) {
       case "month" => "months_since"
     }
     val joined = cohorts
-      .join(activity, col("__ae") === col("__e") && col("__ad") >= col("cohort_date"))
+      .join(activity, col("__ae") === col("__e") && col("__ad") >= col("cohort_date"),
+        "inner")
       .withColumn("__p", periodsSince)
       .filter(col("__p") <= periods)
 
-    val sizes = cohorts.groupBy(col("cohort_date"))
-      .agg(countDistinct(col("__e")).as("cohort_size"))
-    val retained = joined.groupBy(col("cohort_date"), col("__p"))
-      .agg(countDistinct(col("__e")).as("active_users"))
+    val sizes = cohorts.agg(Seq(col("cohort_date")),
+      Seq(countDistinct(col("__e")).as("cohort_size")))
+    val retained = joined.agg(Seq(col("cohort_date"), col("__p")),
+      Seq(countDistinct(col("__e")).as("active_users")))
 
     val out = retained.join(sizes, Seq("cohort_date"))
       .select(col("cohort_date"), col("__p").cast("long").as(label),
@@ -178,21 +173,20 @@ final class Funnels(spark: SparkSession, gen: Generator) {
         round(col("active_users") * lit(100.0) / col("cohort_size"), 1)
           .as("retention_pct"))
     // reference default ordering when the query specifies none
-    gen.shape(q, GraftPlan(
-      if (q.orderBy.isEmpty) out.orderBy(col("cohort_date"), col(label)) else out))
+    gen.shape(q,
+      if (q.orderBy.isEmpty) out.orderBy(col("cohort_date"), col(label)) else out)
   }
 
   /** Two-stage cohort metric: per-entity inner aggregate gated by HAVING,
     * then an outer aggregate over qualifying entities. */
-  private def cohort(q: SemanticQuery, df: DataFrame, m: graft.model.Metric,
+  private def cohort(q: SemanticQuery, df: GraftPlan, m: graft.model.Metric,
       dims: Seq[FieldRef], dimCol: FieldRef => Column,
       local: String => Column, entity: Column): GraftPlan = {
 
     val dimCols = dims.map(dimCol)
-    val inner = df
-      .groupBy((entity.as("__e") +: dimCols): _*)
-      .agg(local(m.sql.getOrElse(throw new IllegalArgumentException(
-        s"Cohort metric '${m.name}' needs sql (inner aggregate)"))).as("value"))
+    val inner = df.agg(entity.as("__e") +: dimCols,
+      Seq(local(m.sql.getOrElse(throw new IllegalArgumentException(
+        s"Cohort metric '${m.name}' needs sql (inner aggregate)"))).as("value")))
     val qualified = m.having match {
       case Some(h) => inner.filter(expr(h))
       case None    => inner
@@ -202,9 +196,7 @@ final class Funnels(spark: SparkSession, gen: Generator) {
       case "sum"   => sum(col("value"))
       case "avg"   => avg(col("value"))
     }
-    val grouped =
-      if (dims.isEmpty) qualified.agg(outer.as(m.name))
-      else qualified.groupBy(dims.map(d => col(d.outName)): _*).agg(outer.as(m.name))
-    gen.shape(q, GraftPlan(grouped))
+    gen.shape(q,
+      qualified.agg(dims.map(d => col(d.outName)), Seq(outer.as(m.name))))
   }
 }

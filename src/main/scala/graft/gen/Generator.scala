@@ -29,13 +29,11 @@ import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentH
   * lowering, security injection (reference pipeline:
   * sidemantic/sql/generator.py:961).
   *
-  * The standard, multi-fact and pre-aggregation routes compose through
-  * [[GraftPlan]], which adds plan nodes without analysing them, so Spark's
-  * analyzer runs once per compile, in [[build]], over the whole plan. The
-  * window planner ([[WindowMetrics]]) still composes DataFrames over
-  * [[planAggregate]]'s analysed result, and the funnel planner
-  * ([[Funnels]]) over the analysed secured scan; each hands its last steps
-  * back as a [[GraftPlan]].
+  * Every route (standard, multi-fact, pre-aggregation, and the window
+  * and funnel planners, [[WindowMetrics]] and [[Funnels]]) composes
+  * through [[GraftPlan]], which adds plan nodes without analysing them,
+  * so Spark's analyzer runs once per compile, in [[build]], over the
+  * whole plan.
   *
   * Internal column naming: `<model>__<field>[__<grain>]`; metric inputs as
   * `<model>__<metric>__raw`. Final select renames to user-facing short names.
@@ -713,14 +711,10 @@ final class Generator(spark: SparkSession, cat: Catalog,
       GraftSqlBridge.explainString(df, "formatted")
   }
 
-  /** Aggregated frame at the requested dim grain, fan-out handled.
-    * When finalShape, also applies derived/ratio composition, HAVING,
-    * ordering, limit/offset and user-facing renames. */
-  private[gen] def planAggregate(q0: SemanticQuery, finalShape: Boolean): DataFrame =
-    aggregate(q0, finalShape)._1.toDF
-
-  /** [[planAggregate]], unanalysed, with the route it took. */
-  private def aggregate(q0: SemanticQuery,
+  /** Aggregated plan at the requested dim grain, fan-out handled, with
+    * the route it took. When finalShape, also applies derived/ratio
+    * composition, HAVING, ordering, limit/offset and user-facing renames. */
+  private[gen] def aggregate(q0: SemanticQuery,
       finalShape: Boolean): (GraftPlan, String) = {
     // default time dimension injection (reference: generator.py:1015):
     // a dimension-less query over a model declaring BOTH
@@ -1164,12 +1158,6 @@ final class Generator(spark: SparkSession, cat: Catalog,
 
   // accessors for sibling planners
   private[gen] def catRef: Catalog = cat
-  private[gen] def dimRefsOf(q: SemanticQuery): Seq[(String, String, Option[String])] =
-    q.dimensions.map { r => val d = dimRef(r); (d.model, d.dim.name, d.grain) }
-  private[gen] def simpleDepRefs(mr: String): Seq[String] = {
-    val m = metricRef(mr)
-    simpleDeps(m).map(d => s"${d.model}.${d.metric.name}")
-  }
   private[gen] def metricOf(ref: String): (String, Metric) = {
     val mr = metricRef(ref); (mr.model, mr.metric)
   }

@@ -2,18 +2,20 @@ package graft.gen
 
 import graft.model.DimType
 import graft.plan.{FieldRef, SemanticQuery}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, GraftPlan, SparkSession}
+import org.apache.spark.sql.{Column, GraftPlan, SparkSession}
 
 /** Lowers cumulative and time-comparison metric types to Spark window
   * functions over an inner aggregated query — the reference's two-stage
   * shape (sql/generator.py:5701, :6150-6210, :6326).
   *
   * Inner stage: base metrics aggregated at (dims × time grain) via the
-  * standard path. Outer stage: window functions over the result. Interval
-  * RANGE frames (Spark supports only numeric range keys) are handled by
-  * ordering on an epoch-period key per grain (SURVEY §7.4 hard spot #1).
+  * standard path, left unanalysed. Outer stage: window functions and
+  * self-joins composed onto the same [[GraftPlan]], so the whole query is
+  * analysed once. Interval RANGE frames (Spark supports only numeric
+  * range keys) are handled by ordering on an epoch-period key per grain
+  * (SURVEY §7.4 hard spot #1).
   *
   * Scale note: the outer windows partition by the query's non-time dims
   * and order by the time bucket; with no other dims they are
@@ -24,6 +26,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlan, SparkSession}
   * decomposes them into distributed prefix plans instead.
   */
 final class WindowMetrics(spark: SparkSession, gen: Generator) {
+  import WindowMetrics.parseWindow
 
   private val cat = gen.catRef
 
@@ -56,7 +59,7 @@ final class WindowMetrics(spark: SparkSession, gen: Generator) {
     }.distinct
     val innerQ = q.copy(metrics = innerRefs, orderBy = Nil, limit = None,
       offset = None, withTotals = false)
-    var df = gen.planAggregate(innerQ, finalShape = true)
+    var df = gen.aggregate(innerQ, finalShape = true)._1
 
     // locate the time dimension in the requested dims
     val dimInfo = q.dimensions.map { r =>
@@ -179,7 +182,7 @@ final class WindowMetrics(spark: SparkSession, gen: Generator) {
 
     val dimOut = dimInfo.map { case (fr, _) => col(fr.outName) }
     val metOut = mets.map { case (_, (_, m)) => col(m.name) }
-    gen.shape(q, GraftPlan(df).select(dimOut ++ metOut: _*))
+    gen.shape(q, df.select(dimOut ++ metOut: _*))
   }
 
   private def strip(ref: String): String =
@@ -188,22 +191,14 @@ final class WindowMetrics(spark: SparkSession, gen: Generator) {
   private def qualify(model: String, ref: String): String =
     if (ref.contains(".")) ref else s"$model.$ref"
 
-  private[gen] def parseWindow(w: String): (Int, String) = {
-    val m = raw"(?i)\s*(\d+)\s+(day|week|month|quarter|year)s?\s*".r
-    w match {
-      case m(n, unit) => (n.toInt, unit.toLowerCase)
-      case _ => throw new IllegalArgumentException(s"Bad window spec '$w'")
-    }
-  }
-
   /** Left-join the aggregated frame to itself on (otherDims, shifted time):
     * each row picks up `valueName` of its exact comparison period as
     * `outName` (NULL when that period has no row). Post-aggregation frames
     * are grain-cardinality small, so the extra shuffle join is cheap at any
     * data scale — and it is the only correct lookup on sparse series. */
-  private def priorJoin(df: DataFrame, valueName: String, outName: String,
+  private def priorJoin(df: GraftPlan, valueName: String, outName: String,
       otherDims: Seq[String], timeName: String,
-      shift: Column => Column): DataFrame = {
+      shift: Column => Column): GraftPlan = {
     val prior = df.select(
       otherDims.map(n => col(n).as(s"__p_$n")) ++
         Seq(col(timeName).as("__p_t"), col(valueName).as(outName)): _*)
@@ -249,4 +244,17 @@ final class WindowMetrics(spark: SparkSession, gen: Generator) {
     case "year"    => year(t).cast("long")
   }
 
+}
+
+object WindowMetrics {
+
+  /** `"N unit"` (a trailing window, an offset, a conversion window) as
+    * (N, unit), the unit singular and lower-case. */
+  private[gen] def parseWindow(w: String): (Int, String) = {
+    val m = raw"(?i)\s*(\d+)\s+(day|week|month|quarter|year)s?\s*".r
+    w match {
+      case m(n, unit) => (n.toInt, unit.toLowerCase)
+      case _ => throw new IllegalArgumentException(s"Bad window spec '$w'")
+    }
+  }
 }

@@ -62,8 +62,10 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
   *     up normally — this falls out of the join-back shape
   *
   * The `SEMANTIC` prefix is optional; `AT` clauses are pre-lowered to a
-  * marker function so Spark's own parser handles everything else. WITH
-  * queries compile each CTE independently into temp views.
+  * marker function so Spark's own parser handles everything else. A WITH
+  * query compiles each CTE body in turn, under the CTEs before it, which
+  * sit in a thread-scoped list and are substituted into the parsed plan;
+  * nothing is registered in the session catalog.
   */
 final class Yardstick(spark: SparkSession, cat: Catalog) {
 

@@ -5,16 +5,18 @@ import graft.model._
 import graft.plan.SemanticQuery
 import graft.preagg.PreAggStore
 import graft.sqlfront.SqlFront
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftPlan, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicLong
 
 /** The generator composes one logical plan per compile: Spark's analyzer
   * runs once for a standard, a multi-fact, a routed pre-aggregation, a
-  * symmetric-dedup and a semantic-SQL compile, an error in the plan
-  * still surfaces inside `plan()`, and a routed plan's memoized rollup
-  * scan is re-resolved after every change to its files. */
+  * symmetric-dedup, a window, a conversion, a retention, a cohort, a
+  * funnel and a semantic-SQL compile, an error in the plan still
+  * surfaces inside `plan()`, and a routed plan's memoized rollup scan is
+  * re-resolved after every change to its files. */
 class ComposeOnceSpec extends AnyFunSuite {
 
   private val dir = TestSpark.sfDir
@@ -43,7 +45,25 @@ class ComposeOnceSpec extends AnyFunSuite {
       dimensions = Seq("orders.orderstatus"), orderBy = Seq("orderstatus")),
     "symmetric-dedup" -> SemanticQuery(metrics = Seq("customer.total_acctbal"),
       dimensions = Seq("orders.orderstatus"), orderBy = Seq("orderstatus"),
-      withTotals = true))
+      withTotals = true),
+    // cumulative, time comparison and offset ratio: window steps and
+    // self-joins over the inner aggregate
+    "window" -> SemanticQuery(
+      metrics = Seq("orders.cumulative_revenue", "orders.revenue"),
+      dimensions = Seq("orders.order_date__month"),
+      orderBy = Seq("order_date__month")),
+    "window" -> SemanticQuery(metrics = Seq("orders.revenue_mom"),
+      dimensions = Seq("orders.order_date__month"),
+      orderBy = Seq("order_date__month")),
+    "window" -> SemanticQuery(metrics = Seq("orders.revenue_vs_prev_month"),
+      dimensions = Seq("orders.order_date__month"),
+      orderBy = Seq("order_date__month")),
+    "conversion" -> SemanticQuery(metrics = Seq("events.signup_conversion")),
+    "retention" -> SemanticQuery(metrics = Seq("events.signup_retention"),
+      orderBy = Seq("cohort_date", "days_since")),
+    "cohort" -> SemanticQuery(metrics = Seq("events.multi_type_users")),
+    "funnel" -> SemanticQuery(metrics = Seq("events.signup_funnel"),
+      orderBy = Seq("step")))
 
   test("a standard, a multi-fact, a routed pre-agg and a symmetric-dedup " +
       "compile each run the analyzer once") {
@@ -91,7 +111,11 @@ class ComposeOnceSpec extends AnyFunSuite {
       val c = Catalog().add(Model("facts", source = ModelSource.Table(view),
         primaryKey = Seq("id"),
         dimensions = Seq(Dimension("label", sql = Some("zz_label"))),
-        metrics = Seq(Metric("n", agg = Some("count"), sql = Some("id")))))
+        metrics = Seq(Metric("n", agg = Some("count"), sql = Some("id")),
+          // a window over the grouped result naming a column it lacks
+          Metric("weighted_rank", metricType = Some("cumulative"),
+            windowExpression = Some("sum(n * zz_weight)"),
+            windowOrder = Some("label")))))
       val g = new Generator(s, c)
       val q = SemanticQuery(metrics = Seq("facts.n"),
         dimensions = Seq("facts.label"), orderBy = Seq("label"))
@@ -102,7 +126,27 @@ class ComposeOnceSpec extends AnyFunSuite {
       s.range(4).selectExpr("id", "cast(id % 2 AS string) AS zz_label")
         .createOrReplaceTempView(view)
       assert(rows(g.plan(q)) == Seq("[0,2]", "[1,2]"))
+      // the window route fails the same way; each call composes again,
+      // so the second raises its own exception, not a cached one
+      val w = q.copy(metrics = Seq("facts.n", "facts.weighted_rank"))
+      val errors = Seq.fill(2)(intercept[AnalysisException](g.plan(w)))
+      errors.foreach(e => assert(e.getMessage.contains("zz_weight"), e.getMessage))
+      assert(errors.head ne errors.last)
     } finally s.catalog.dropTempView(view)
+  }
+
+  test("GraftPlan names a multi-alias and a using join as the analyzer " +
+      "does, and refuses a select item with no name when composed") {
+    val s = TestSpark.spark
+    val scan = GraftPlan(s.range(3).selectExpr("id", "id * 10 AS v"))
+    val stacked = scan.select(expr("stack(2, id, v, v, id) AS (a, b)"), col("id"))
+    val sizes = scan.agg(Seq(col("id")), Seq(expr("count(v)").as("n")))
+    val joined = stacked.join(sizes, Seq("id"))
+    Seq(stacked, joined).foreach(p =>
+      assert(p.columns == p.toDF.columns.toSeq, p.columns))
+    assert(joined.columns == Seq("id", "a", "b", "n"))
+    val e = intercept[IllegalArgumentException](scan.select(col("id") + 1))
+    assert(e.getMessage.contains("no name"), e.getMessage)
   }
 
   test("after materialize, refreshIncremental or Catalog.invalidateScans, " +
