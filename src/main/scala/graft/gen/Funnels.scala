@@ -64,7 +64,7 @@ final class Funnels(spark: SparkSession, gen: Generator) {
         conversion(q, df, m, dims, dimCol, local, col(entity), ts)
       case "retention" => retention(q, df, m, local, col(entity), ts)
       case "cohort" => cohort(q, df, m, dims, dimCol, local, col(entity))
-      case "funnel" => funnelSteps(df, m, local, col(entity))
+      case "funnel" => gen.shape(q, funnelSteps(df, m, local, col(entity)))
     }
   }
 

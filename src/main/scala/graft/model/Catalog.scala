@@ -95,8 +95,6 @@ final case class Catalog(
       else spark.sql(s)
   }
 
-  def withDataDir(dir: String): Catalog = copy(dataDir = dir)
-
   /** Schema-evolution diff against a prior catalog version (`migrate
     * check` analog): every removal or redefinition a downstream query
     * could observe is breaking; additions and metadata-only changes are

@@ -29,15 +29,6 @@ object Dedup {
       .agg(count(lit(1)).as("copies"), min(col(idCol)).as("keeper_id"))
       .filter(col("copies") > 1)
 
-  /** MinHash signature over pre-hashed shingles: for each of `numHashes`
-    * seeded hash functions, the minimum re-mixed hash. Takes an
-    * `array<long>` column (hash the shingle strings ONCE into it first) —
-    * re-mixing 8-byte longs per seed is ~10× cheaper than re-hashing the
-    * shingle strings `numHashes` times. */
-  def minHashSignature(hashesCol: String, numHashes: Int): Column =
-    expr(s"transform(sequence(0, ${numHashes - 1}), " +
-      s"seed -> array_min(transform($hashesCol, h -> xxhash64(h, seed))))")
-
   /** (id, __hashes, __sigs, __n) per-document MinHash front — the
     * shared head of every MinHash path ([[minHashLSH]], [[DedupIndex]]).
     * ONE native projection ([[DedupExprs.MinHashShingles]]): tokenize,
@@ -413,30 +404,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
-
-  /** 64-bit SimHash over a pre-hashed token array (`array<long>`): bit b
-    * of the fingerprint is set when the population of tokens with bit b
-    * set outweighs those without. Token hashing must be hoisted into its
-    * own column — inlining it here would re-tokenize the text 64 times. */
-  def simHashFromHashes(hashesCol: String): Column =
-    expr(s"""
-      aggregate(
-        sequence(0, 63),
-        0L,
-        (acc, b) -> acc + shiftleft(
-          CASE WHEN aggregate(
-            $hashesCol,
-            0L,
-            (s, h) -> s + CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END
-          ) > 0 THEN 1L ELSE 0L END, b))
-    """)
-
-  /** SimHash of a text column — native per-row kernel
-    * ([[graft.functions.DedupExprs.SimHash64]]), same values as the
-    * lambda/aggregate shapes. */
-  def simHash(textCol: String): Column =
-    graft.functions.DedupExprs.simHash64(
-      split(lower(col(textCol)), "\\s+"))
 
   /** Near-duplicate pairs by SimHash Hamming distance ≤ `maxDistance`.
     *

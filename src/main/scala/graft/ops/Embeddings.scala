@@ -21,21 +21,6 @@ object Embeddings {
   private def asDouble(vecCol: Column): Column =
     transform(vecCol, x => x.cast("double"))
 
-  /** Per-vector max-abs scale: the symmetric-quantization denominator.
-    * Zero vectors get scale 0 and quantize to all-zero codes. */
-  def maxAbsScale(vecCol: Column): Column =
-    array_max(transform(asDouble(vecCol), x => abs(x)))
-
-  /** int8 codes: round(x / scale * 127) per element (half-up, matching
-    * ANSI SQL ROUND), all-zero when the vector is all-zero. */
-  def quantizeInt8(vecCol: Column): Column = {
-    val v = asDouble(vecCol)
-    val scale = array_max(transform(v, x => abs(x)))
-    transform(v, x =>
-      when(scale > 0, round(x / scale * 127)).otherwise(lit(0.0))
-        .cast("int"))
-  }
-
   /** (id, scale, codes, rmse, max_err): quantize + measure in one
     * projection. `rmse`/`max_err` are the dequantized reconstruction
     * errors, rounded to `errDecimals` for cross-engine stability. */

@@ -371,16 +371,6 @@ object Multimodal {
       .withColumn("needs_resize", scale < 1.0)
   }
 
-  /** Frame-sampling plan for video: evenly spaced sample timestamps from
-    * the duration metadata — generates (media_id, frame_ts_ms) rows to
-    * feed the decode stage; pure column math, scales with the catalog not
-    * the video bytes. */
-  def frameSamplePlan(df: DataFrame, idCol: String, durationMsCol: String,
-      frames: Int): DataFrame =
-    df.select(col(idCol),
-      explode(expr(s"transform(sequence(0, ${frames - 1}), " +
-        s"i -> cast(i * $durationMsCol / $frames as long))")).as("frame_ts_ms"))
-
   /** Demo source: wraps any table's text column as opaque binary media so
     * the pipeline runs against the shipped testdata. */
   def syntheticMedia(df: DataFrame, idCol: String, textCol: String): DataFrame =

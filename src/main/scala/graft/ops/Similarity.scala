@@ -111,14 +111,6 @@ object Similarity {
     scala.util.hashing.MurmurHash3.productHash((seed, plane, d))
       .toDouble / Int.MaxValue
 
-  /** Sign-LSH bucket key over one plane set (kept for ad-hoc use). */
-  def lshBucket(vec: Column, numPlanes: Int, dim: Int, seed: Int = 42): Column =
-    (0 until numPlanes).map { p =>
-      val d = (0 until dim).map(i =>
-        element_at(vec, i + 1) * lit(planeVal(seed, p, i))).reduce(_ + _)
-      when(d > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** (id, __band, __bucket) rows — ids only, vectors are re-joined after
     * candidate dedup so the shuffle payload stays narrow.
     *

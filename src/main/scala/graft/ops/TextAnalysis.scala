@@ -19,14 +19,6 @@ object TextAnalysis {
 
   private def tokens(textCol: Column): Column = split(lower(textCol), "\\s+")
 
-  /** Per-language stopword hit counts as a map. */
-  def langScores(textCol: Column): Column =
-    map(profiles.toSeq.sortBy(_._1).flatMap { case (lang, words) =>
-      Seq(lit(lang),
-        size(array_intersect(array_distinct(tokens(textCol)),
-          typedlit(words))).cast("double"))
-    }: _*)
-
   /** Predicted language = argmax of stopword hits; 'und' (undetermined)
     * when nothing matches. */
   def langId(textCol: Column): Column = {

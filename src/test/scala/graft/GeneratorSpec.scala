@@ -181,6 +181,15 @@ class GeneratorSpec extends AnyFunSuite {
     assert(ok.collect().nonEmpty)
   }
 
+  test("funnel steps honour ORDER BY, LIMIT and OFFSET") {
+    def steps(q: SemanticQuery) = gen.plan(q).collect().map(_.getLong(0)).toSeq
+    val funnel = SemanticQuery(metrics = Seq("events.signup_funnel"))
+    assert(steps(funnel.copy(orderBy = Seq("step"))) == Seq(0L, 1L, 2L))
+    assert(steps(funnel.copy(orderBy = Seq("-step"), limit = Some(1))) == Seq(2L))
+    assert(steps(funnel.copy(orderBy = Seq("-step"), offset = Some(1),
+      limit = Some(1))) == Seq(1L))
+  }
+
   test("with_totals under fan-out counts each pk once in the total") {
     val got = gen.plan(SemanticQuery(
       metrics = Seq("customer.total_acctbal"),

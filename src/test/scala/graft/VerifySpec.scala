@@ -49,4 +49,15 @@ class VerifySpec extends AnyFunSuite {
     val json = Files.readString(o.resolve("oracle_sql.json"))
     assert(json.contains("\"q_agg_minmax\""), json.take(200))
   }
+
+  test("a battery registry refuses a name declared twice, naming it") {
+    import graft.battery.{Battery, BatteryQuery}
+    def decl(name: String) =
+      BatteryQuery(name, "SELECT 1")((s, _) => s.range(1).toDF())
+    val e = intercept[IllegalArgumentException] {
+      Battery.registry(Seq(decl("q_twice"), decl("q_once")), Seq(decl("q_twice")))
+    }
+    assert(e.getMessage.contains("q_twice"), e.getMessage)
+    assert(!e.getMessage.contains("q_once"), e.getMessage)
+  }
 }
