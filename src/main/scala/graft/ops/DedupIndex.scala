@@ -167,14 +167,19 @@ object DedupIndex {
     * Append caveats, by design: batch ids must be fresh (re-ingesting
     * an already-appended slice sees its own ids as corpus rows — the
     * self-id guard in [[query]] masks the match and the keys append
-    * twice); and the build-time `maxBucketSize` cap is NOT re-applied
+    * twice, which is what a slice replayed by
+    * [[graft.streaming.StreamingIngest]] does: space, not correctness,
+    * degrades until [[build]], or [[compact]] for the layout alone);
+    * and the build-time `maxBucketSize` cap is NOT re-applied
     * across appends (a global recount would be the full-corpus pass
     * this operator exists to avoid) — buckets can drift over the cap
     * until the periodic [[build]] rebuild, which re-caps and re-records
     * the drop count. Returns one row per batch doc:
     * (batch_id, status, ref_id, est_jaccard), read back from the
     * `last_ingest/` receipt the verdicts are durably written to before
-    * the index mutates (see the barrier note in the body). */
+    * the index mutates (see the barrier note in the body). The receipt
+    * holds the most recent slice only; copy it elsewhere after each
+    * slice if the full audit trail matters. */
   def ingest(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       threshold: Double = 0.5): DataFrame = {

@@ -162,10 +162,11 @@ object ImageIndex {
     * keys, and durably write per-image verdicts to the `last_ingest/`
     * receipt (`fresh` | `corpus_dup` | `batch_dup` | `undecodable`).
     * A missing index bootstraps from the first slice. Returns the
-    * receipt frame. Delivery composes with foreachBatch's
-    * at-least-once: a replayed batch re-appends rows it already wrote —
-    * space, not correctness, degrades (matching is idempotent), and
-    * a periodic [[build]] rebuild is the cleanup path. */
+    * receipt frame, which holds the most recent slice only. Delivery
+    * composes with foreachBatch's at-least-once: a replayed batch
+    * re-appends rows it already wrote — space, not correctness,
+    * degrades (matching is idempotent), and a periodic [[build]]
+    * rebuild is the cleanup path. */
   def ingest(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, binCol: String, maxDistance: Int = 6,
       gridSize: Int = 8, method: String = "ahash",

@@ -55,7 +55,10 @@ object IvfIndex {
     * Centroids drift from the true k-means of the grown corpus as
     * slices accumulate; the periodic [[build]] retrains and
     * re-partitions. Slice ids must be fresh — the index stores rows,
-    * not a keyed map, so a re-appended id is returned twice. */
+    * not a keyed map, so a re-appended id is returned twice. A slice
+    * that [[graft.streaming.StreamingIngest]] replays after a failure
+    * is such a re-append: its twin rows tie at ranking and waste space
+    * until the periodic [[build]]. */
   def append(batch: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
     val spark = batch.sparkSession
@@ -104,7 +107,7 @@ object IvfIndex {
   }
 
   /** Layout-only maintenance for the append tail ([[append]] /
-    * [[graft.streaming.StreamingIvfIngest]] leave one file set per
+    * [[graft.streaming.StreamingIngest]] leave one file set per
     * slice): rewrite `cells/` so each `__cell=` partition holds one
     * file. Content-preserving — re-training drifted centroids and
     * re-assigning rows is [[build]]'s job; compaction only removes the

@@ -129,7 +129,10 @@ object PqIndex {
     * contract (and the same centroid-drift caveat) as
     * [[IvfIndex.append]]. Appended files are id-sorted per slice; the
     * fetch path's row-group skipping degrades gracefully as slices pile
-    * up until [[build]] re-sorts. Slice ids must be fresh. */
+    * up until [[build]] re-sorts. Codebook drift is the quantization
+    * twin of centroid drift: appended rows' error grows as the corpus
+    * moves, and [[Pq.reconstructionError]] says when to rebuild. Slice
+    * ids must be fresh. */
   def append(batch: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
     val spark = batch.sparkSession

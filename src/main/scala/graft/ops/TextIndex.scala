@@ -104,7 +104,10 @@ object TextIndex {
     * token, df only weighs scores). The periodic [[build]] rebuild
     * restores exact global df (and compacts the append tail's files;
     * [[compact]] does the file part alone). Slice ids must be fresh —
-    * a re-appended id surfaces twice in top-k. */
+    * a re-appended id surfaces twice in top-k, and a slice that
+    * [[graft.streaming.StreamingIngest]] replays after a failure is
+    * such a re-append: its doubled postings also inflate those docs'
+    * tf groupings until [[build]]. */
   def append(batch: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val spark = batch.sparkSession

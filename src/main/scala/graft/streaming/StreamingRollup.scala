@@ -1,8 +1,10 @@
 package graft.streaming
 
 import graft.model.{Catalog, PreAggregation}
+import graft.ops.IndexFiles
 import graft.preagg.PreAggStore
-import org.apache.spark.sql.functions.col
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -64,22 +66,25 @@ final class StreamingRollup(spark: SparkSession, cat: Catalog,
 
   /** Fold all accumulated per-batch deltas into a single batch directory
     * (run between maintenance windows; not concurrent with an active
-    * stream). Keeps read amplification bounded as batches accumulate. */
+    * stream). Keeps read amplification bounded as batches accumulate.
+    * The folded copy keeps the `__batch=0/__part=…` layout the stream
+    * appends beside, and goes live through the persisted indexes' swap
+    * ([[IndexFiles.compactWith]]): a complete rollup exists on disk at
+    * every instant, and a swap a crash interrupted is healed by the next
+    * `compact`. A no-op on a rollup that was never materialized. */
   def compact(modelName: String, pa: PreAggregation): Unit = {
     val m = cat.model(modelName)
     val path = store.rollupPath(modelName, pa)
-    if (!store.rollupExists(path)) return
-    val merged = store.mergeComponents(pa, m,
-      graft.ops.IndexFiles.readShaped(spark, path).drop("__batch"))
-    val compacted = merged.repartition(
-      PreAggStore.writeWidth(merged), col("__part"))
-    val tmp = s"${path}__compacting"
-    compacted.write.mode("overwrite").partitionBy("__part").parquet(s"$tmp/__batch=0")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(path))
+    if (!store.rollupExists(path) && !store.rollupExists(s"$path.compact"))
+      return
+    val live = new Path(path)
+    IndexFiles.compactWith(spark, live.getParent.toString, live.getName) {
+      rows =>
+        val merged = store.mergeComponents(pa, m, rows.drop("__batch"))
+        merged.repartition(PreAggStore.writeWidth(merged), col("__part"))
+          .withColumn("__batch", lit(0))
+          .write.mode("overwrite").partitionBy("__batch", "__part")
+    }
     store.written(path)
   }
 }

@@ -13,7 +13,7 @@ class BloomGateSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val docs = spark.read
-    .parquet("/root/testdata/sf0.01/documents.parquet")
+    .parquet(s"${TestSpark.sf001Dir}/documents.parquet")
 
   test("every corpus key probes maybe_dup (no false negatives)") {
     val corpus = docs.filter(col("doc_id") < 400)

@@ -8,7 +8,7 @@ class DedupIndexSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private lazy val docs =
-    spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    spark.read.parquet(s"${TestSpark.sf001Dir}/documents.parquet")
 
   test("batch near-dups of indexed corpus are found; fresh docs are not") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_dix").toString

@@ -48,7 +48,7 @@ class FusionSpec extends AnyFunSuite {
 
   test("rrf fuses real IVF-index output with a second retriever") {
     import org.apache.spark.sql.functions._
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    val emb = spark.read.parquet(s"${TestSpark.sf001Dir}/embeddings.parquet")
     val tmp = java.nio.file.Files.createTempDirectory("graft_rrf").toString
     graft.ops.IvfIndex.build(emb, "vec_id", "embedding", tmp, nCells = 16)
     val queries = emb.filter(col("vec_id") < 3)

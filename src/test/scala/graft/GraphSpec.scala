@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Join-graph resolution: pure metadata, no Spark session needed. */
 class GraphSpec extends AnyFunSuite {
 
-  private val cat = TpchCatalog.build("/root/testdata/sf0.001")
+  private val cat = TpchCatalog.build(TestSpark.sfDir)
   private val g = new SemanticGraph(cat)
 
   test("multi-hop BFS: orders → region via customer and nation") {

@@ -9,7 +9,7 @@ class IntrospectionSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def cat: Catalog = TpchCatalog.build("/root/testdata/sf0.001")
+  private def cat: Catalog = TpchCatalog.build(TestSpark.sfDir)
 
   private def parse(json: String) = {
     import spark.implicits._

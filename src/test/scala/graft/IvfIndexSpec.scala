@@ -8,7 +8,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private lazy val emb =
-    spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    spark.read.parquet(s"${TestSpark.sf001Dir}/embeddings.parquet")
 
   test("persisted index returns exactly the in-memory ivfTopK results") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivf").toString

@@ -45,7 +45,7 @@ class MigrationSpec extends AnyFunSuite {
     assert(orders.relationships.exists(r =>
       r.to == "customer" && r.foreignKey == Seq("o_custkey")))
     // generated models actually answer the original question
-    spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    spark.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
       .createOrReplaceTempView("orders")
     val df = new graft.gen.Generator(spark, Catalog().add(orders)).plan(
       graft.plan.SemanticQuery(

@@ -1006,7 +1006,7 @@ class OpsSpec extends AnyFunSuite {
     // the batch form shares ONE tokenization/stats pass across queries;
     // identical scores, ranking, and k-cut are the contract q_rrf's
     // exact twin relies on
-    val df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    val df = spark.read.parquet(s"${TestSpark.sf001Dir}/documents.parquet")
     val sets = Seq(1L -> Seq("spark", "vector"),
       2L -> Seq("customer", "order", "data"),
       3L -> Seq("window", "agg", "join"))
@@ -1261,7 +1261,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("cell drift: identical snapshots are flat, planted mass shows up") {
     val emb = spark.read
-      .parquet("/root/testdata/sf0.01/embeddings.parquet")
+      .parquet(s"${TestSpark.sf001Dir}/embeddings.parquet")
     val cents = Similarity.trainCentroids(emb, "vec_id", "embedding", k = 8)
     val self = Embeddings.cellDrift(emb, emb, "vec_id", "embedding", cents)
       .collect()
@@ -1354,7 +1354,7 @@ class OpsSpec extends AnyFunSuite {
     // and mutate a per-invocation working copy; without that, Bench's
     // pass N would probe an index carrying N-1 prior appends and both
     // results and timed work would drift pass-over-pass
-    val dir = "/root/testdata/sf0.001"
+    val dir = TestSpark.sfDir
     for (name <- Seq("q_dedup_ingest", "q_ann_ivf_append")) {
       val first = SparkEntry.queries(name)(spark, dir)
         .collect().map(_.toSeq).toSeq

@@ -11,7 +11,7 @@ class PqIndexSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private lazy val emb =
-    spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    spark.read.parquet(s"${TestSpark.sf001Dir}/embeddings.parquet")
 
   private def fresh(): String =
     java.nio.file.Files.createTempDirectory("graft_pqix").toString

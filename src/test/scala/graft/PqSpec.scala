@@ -13,7 +13,7 @@ class PqSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private lazy val emb =
-    spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
+    spark.read.parquet(s"${TestSpark.sf001Dir}/embeddings.parquet").cache()
 
   /** Final-adaptive-plan exchange count (same convention as
     * OpsPlanSpec: count post-EnsureRequirements exchanges, cut AQE's

@@ -8,7 +8,7 @@ class SemDedupSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private lazy val emb =
-    spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    spark.read.parquet(s"${TestSpark.sf001Dir}/embeddings.parquet")
 
   test("planted twins drop against their bases; bases stay kept") {
     val twins = emb.filter(col("vec_id") < 20).select(

@@ -13,7 +13,7 @@ class SimilarityRecallSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private lazy val emb =
-    spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
+    spark.read.parquet(s"${TestSpark.sf001Dir}/embeddings.parquet").cache()
 
   /** The real table plus deterministic near-dup twins (v + 0.25·rot(v),
     * cosine ≈ 0.97) — the operator's design regime; the raw table's max

@@ -3,7 +3,7 @@ package graft
 import graft.model.PreAggregation
 import graft.plan.SemanticQuery
 import graft.preagg.PreAggStore
-import graft.streaming.StreamingRollup
+import graft.streaming.{StreamingIngest, StreamingRollup}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -118,6 +118,14 @@ class StreamingSpec extends AnyFunSuite {
     // compaction folds the deltas without changing totals
     roll.compact("events", evPa)
     assert(total() == first, "compaction must preserve totals")
+
+    // a crash between the swap's two renames leaves the compacted copy
+    // only at `<path>.compact`: the next compaction heals it first
+    val live = java.nio.file.Paths.get(store.rollupPath("events", evPa))
+    java.nio.file.Files.move(live,
+      live.resolveSibling(s"${live.getFileName}.compact"))
+    roll.compact("events", evPa)
+    assert(total() == first, "an interrupted compaction must heal")
   }
 
   test("watermarked windowed aggregation over the event stream") {
@@ -147,110 +155,10 @@ class StreamingSpec extends AnyFunSuite {
       spark.read.parquet(s"${TestSpark.sfDir}/events.parquet").count())
   }
 
-  test("watermarked tumbling windows finalize once, dedup replayed ids") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val HourUs = 3600000000L
-    val T0 = 100 * HourUs // hour-aligned, above the initial watermark
-    val Min = 60000000L
-
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String, Double)]
-    val df = in.toDS().toDF("id", "tsUs", "dim", "value")
-      .withColumn("ts", timestamp_micros(col("tsUs")))
-    val out = graft.streaming.WindowedStream.dedupedTumbling(
-      df, "id", "ts", "1 hour", "30 minutes", Seq("dim"),
-      Seq("n" -> count(lit(1)),
-        "total" -> sum(col("value").cast("decimal(18,2)"))))
-    val q = out.writeStream.format("memory").queryName("ws_test")
-      .outputMode("append").start()
-    try {
-      in.addData(Seq(
-        (1L, T0 + 10 * Min, "a", 1.0),
-        (2L, T0 + 20 * Min, "a", 1.0),
-        (3L, T0 + 70 * Min, "a", 1.0)))
-      q.processAllAvailable()
-      // replay of id 3 (still above the watermark) must NOT double-count
-      // hour 1; id 4 advances the watermark past hours 0 and 1
-      in.addData(Seq(
-        (3L, T0 + 70 * Min, "a", 1.0),
-        (4L, T0 + 200 * Min, "a", 1.0)))
-      q.processAllAvailable()
-      // flush: push the watermark far past everything still open
-      in.addData(Seq((9L, T0 + 100 * HourUs, "z", 0.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val got = spark.table("ws_test")
-      .select(unix_micros(col("window_start")).as("ws"), col("dim"),
-        col("n"), col("total").cast("double"))
-      .collect().map(_.toSeq).toSet
-    assert(got == Set(
-      Seq(T0, "a", 2L, 2.0), // hour 0 finalized with both events
-      Seq(T0 + 60 * Min, "a", 1L, 1.0), // hour 1: replayed id deduped
-      Seq(T0 + 180 * Min, "a", 1L, 1.0))) // id 4's window, closed by flush
-  }
-
-  test("streaming content dedup emits only each content's first arrival") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamingDedup.distinctContent(
-      in.toDS().toDF("id", "text"), "text")
-    val q = out.writeStream.format("memory").queryName("sd_test")
-      .outputMode("append").start()
-    try {
-      in.addData(Seq(
-        (1L, "alpha content"), (2L, "beta content"),
-        (3L, "alpha content"))) // same-batch replay
-      q.processAllAvailable()
-      in.addData(Seq(
-        (4L, "alpha content"),  // cross-batch replay
-        (5L, "gamma content")))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("sd_test").select("id", "text")
-      .as[(Long, String)].collect().toMap
-    // one row per distinct content; which of a SAME-batch replay pair
-    // (ids 1/3) wins is partition order by contract, but the cross-batch
-    // replay (id 4) must always lose to batch-1 state
-    assert(got.values.toSet ==
-      Set("alpha content", "beta content", "gamma content"))
-    assert(!got.keySet.contains(4L))
-    assert(got.keySet.intersect(Set(1L, 3L)).size == 1)
-    assert(got.keySet.contains(2L) && got.keySet.contains(5L))
-  }
-
-  test("watermark-bounded content dedup suppresses replays inside the horizon") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val HourUs = 3600000000L
-    val T0 = 100 * HourUs
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val out = graft.streaming.StreamingDedup.distinctContentWithin(
-      in.toDS().toDF("id", "tsUs", "text")
-        .withColumn("ts", timestamp_micros(col("tsUs"))),
-      "text", "ts", "1 hour")
-    val q = out.writeStream.format("memory").queryName("sdw_test")
-      .outputMode("append").start()
-    try {
-      in.addData(Seq((1L, T0, "doc one"), (2L, T0 + 60000000L, "doc one")))
-      q.processAllAvailable() // replay inside horizon: suppressed
-      in.addData(Seq((3L, T0 + 10 * HourUs, "advance watermark")))
-      q.processAllAvailable() // expires "doc one" state
-      in.addData(Seq((4L, T0 + 11 * HourUs, "doc one")))
-      q.processAllAvailable() // beyond horizon: re-admitted by design
-    } finally q.stop()
-    val ids = spark.table("sdw_test").select("id").as[Long].collect().toSet
-    assert(ids == Set(1L, 3L, 4L))
-  }
-
   test("streaming pq ingest: twins retrievable through the compressed path") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    val emb = spark.read.parquet(s"${TestSpark.sf001Dir}/embeddings.parquet")
     val tmp = java.nio.file.Files.createTempDirectory("graft_spq").toString
     graft.ops.PqIndex.build(emb, "vec_id", "embedding", tmp, dim = 64,
       nCells = 16, m = 16, kCodes = 32, iters = 2)
@@ -263,9 +171,9 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, Array[Float])].collect().toSeq
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.StreamingPqIngest.maintain(
-      in.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      tmp, s"$tmp/_checkpoint")
+    val q = StreamingIngest.maintain(
+      in.toDS().toDF("vec_id", "embedding"), s"$tmp/_checkpoint")(
+      graft.ops.PqIndex.append(_, "vec_id", "embedding", tmp))
     try {
       in.addData(twinRows.take(2))
       q.processAllAvailable()
@@ -287,7 +195,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming ivf ingest: streamed twins are retrievable per micro-batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    val emb = spark.read.parquet(s"${TestSpark.sf001Dir}/embeddings.parquet")
     val tmp = java.nio.file.Files.createTempDirectory("graft_sivf").toString
     graft.ops.IvfIndex.build(emb, "vec_id", "embedding", tmp, nCells = 16)
     val centsBefore = graft.ops.IvfIndex.loadCentroids(spark, tmp)
@@ -299,9 +207,9 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, Array[Float])].collect().toSeq
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.StreamingIvfIngest.maintain(
-      in.toDS().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      tmp, s"$tmp/_checkpoint")
+    val q = StreamingIngest.maintain(
+      in.toDS().toDF("vec_id", "embedding"), s"$tmp/_checkpoint")(
+      graft.ops.IvfIndex.append(_, "vec_id", "embedding", tmp))
     try {
       in.addData(twinRows.take(2))
       q.processAllAvailable()
@@ -323,7 +231,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming dedup ingest: slices dedupe against corpus AND earlier slices") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    val docs = spark.read.parquet(s"${TestSpark.sf001Dir}/documents.parquet")
     val tmp = java.nio.file.Files.createTempDirectory("graft_sdix").toString
     graft.ops.DedupIndex.build(docs.filter(col("doc_id") < 400),
       "doc_id", "text", tmp)
@@ -338,17 +246,22 @@ class StreamingSpec extends AnyFunSuite {
       .mkString(" ")
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingDedupIngest.maintain(
-      in.toDS().toDF("doc_id", "text"), "doc_id", "text",
-      tmp, s"$tmp/_checkpoint")
+    val q = StreamingIngest.maintain(
+      in.toDS().toDF("doc_id", "text"), s"$tmp/_checkpoint")(b =>
+      graft.ops.DedupIndex.ingest(b.sparkSession, tmp, b, "doc_id", "text"))
     try {
       in.addData(Seq((50000L, nearDup0), (50001L, freshBase)))
       q.processAllAvailable()
       in.addData(Seq((50002L, freshVar)))
       q.processAllAvailable()
+      // an empty micro-batch is skipped: ingesting it would overwrite
+      // the receipt below with an empty one
+      in.addData(Seq.empty[(Long, String)])
+      q.processAllAvailable()
     } finally q.stop()
-    // last_ingest holds the most recent slice's verdicts: 50002 must be
-    // a corpus_dup OF THE STREAMED doc 50001 (cross-micro-batch dedup)
+    // last_ingest holds the most recent real slice's verdicts: 50002
+    // must be a corpus_dup OF THE STREAMED doc 50001 (cross-micro-batch
+    // dedup)
     val receipt = spark.read.parquet(s"$tmp/last_ingest")
       .collect().map(r => (r.getAs[Long]("batch_id"),
         r.getAs[String]("status"), r.getAs[Long]("ref_id"))).toSeq
@@ -366,15 +279,15 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming text ingest: streamed docs searchable per micro-batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    val docs = spark.read.parquet(s"${TestSpark.sf001Dir}/documents.parquet")
     val tmp = java.nio.file.Files.createTempDirectory("graft_stix").toString
     graft.ops.TextIndex.build(docs.filter(col("doc_id") < 300),
       "doc_id", "text", tmp, nBuckets = 16)
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingTextIngest.maintain(
-      in.toDS().toDF("doc_id", "text"), "doc_id", "text",
-      tmp, s"$tmp/_checkpoint")
+    val q = StreamingIngest.maintain(
+      in.toDS().toDF("doc_id", "text"), s"$tmp/_checkpoint")(
+      graft.ops.TextIndex.append(_, "doc_id", "text", tmp))
     try {
       in.addData(Seq((95001L, "streamglyphone retrieval test words")))
       q.processAllAvailable()
@@ -462,9 +375,9 @@ class StreamingSpec extends AnyFunSuite {
         .as[(Long, Array[Byte])].collect().toSeq
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.StreamingImageIngest.maintain(
-      in.toDS().toDF("media_id", "content"), "media_id", "content",
-      tmp, s"$tmp/_checkpoint")
+    val q = StreamingIngest.maintain(
+      in.toDS().toDF("media_id", "content"), s"$tmp/_checkpoint")(b =>
+      ImageIndex.ingest(b.sparkSession, tmp, b, "media_id", "content"))
     def receipt() = spark.read.parquet(s"$tmp/last_ingest")
       .collect().map(r => r.getAs[Long]("media_id") ->
         r.getAs[String]("verdict")).toMap

@@ -20,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * nulls, ties, zeros, and the N=1 percentile edge. */
 class TableCalcsPlanSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = TestSpark.sfDir
 
   private val GateConf = "spark.graft.tablecalc.globalWindowMaxBytes"
 

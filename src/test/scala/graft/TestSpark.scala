@@ -13,6 +13,9 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+  /** The sf0.01 data beside [[sfDir]], ten times its scale: the corpus
+    * specs read its 500 documents and embeddings. */
+  val sf001Dir = s"${new java.io.File(sfDir).getParent}/sf0.01"
 
   /** Result and the number of Spark jobs `body` launched on this
     * thread. */

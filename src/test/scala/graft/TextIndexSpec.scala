@@ -8,7 +8,7 @@ class TextIndexSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private lazy val docs =
-    spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    spark.read.parquet(s"${TestSpark.sf001Dir}/documents.parquet")
 
   test("indexed bm25 matches the full-scan scorer doc for doc") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_tix").toString

@@ -57,7 +57,7 @@ class TimeSpineSpec extends AnyFunSuite {
     // one sparse customer's monthly revenue from the actual generator
     // output: gaps materialize with the fills, observed months ride
     // through untouched, and the spine spans exactly min..max
-    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    val orders = spark.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
     val hot = orders.groupBy(col("o_custkey")).count()
       .orderBy(col("count").desc, col("o_custkey"))
       .limit(1).collect()(0).getLong(0)

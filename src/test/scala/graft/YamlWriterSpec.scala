@@ -26,7 +26,7 @@ class YamlWriterSpec extends AnyFunSuite {
   }
 
   test("round-trip: TPC-H catalog package (preaggs, security, segments, windows)") {
-    val cat = TpchCatalog.build("/root/testdata/sf0.001")
+    val cat = TpchCatalog.build(TestSpark.sfDir)
     val yaml = YamlWriter.writePackage(cat)
     val pkg = YamlLoader.loadPackageString(yaml)
     assert(pkg.models.sortBy(_.name) == cat.models.values.toSeq.sortBy(_.name))
