@@ -2,7 +2,7 @@ package graft
 
 import graft.adapters.CubeAdapter
 import graft.gen.Generator
-import graft.model.{Catalog, ModelSource}
+import graft.model.{Catalog, DimType, ModelSource, Relationship}
 import graft.plan.SemanticQuery
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -166,5 +166,55 @@ class CubeAdapterSpec extends AnyFunSuite {
     assert(single.models("visitors").preAggregations.exists(pa =>
       pa.name == "multiplied_rollup" &&
         pa.dimensions.contains("visitor_checkins.source")))
+  }
+
+  test("inline cube: dimensions, measures, segment and join from the grammar") {
+    val ms = CubeAdapter.loadString(
+      """cubes:
+        |  - name: orders
+        |    sql_table: public.orders
+        |    joins:
+        |      - name: customers
+        |        relationship: many_to_one
+        |        sql: "${CUBE}.customer_id = ${customers.id}"
+        |    dimensions:
+        |      - name: id
+        |        sql: id
+        |        type: number
+        |        primary_key: true
+        |      - name: status
+        |        sql: "${CUBE}.status"
+        |        type: string
+        |      - name: created_at
+        |        sql: created_at
+        |        type: time
+        |    measures:
+        |      - name: count
+        |        type: count
+        |      - name: revenue
+        |        sql: amount
+        |        type: sum
+        |        filters:
+        |          - sql: "${CUBE}.status = 'completed'"
+        |    segments:
+        |      - name: completed
+        |        sql: "${CUBE}.status = 'completed'"
+        |""".stripMargin)
+    assert(ms.map(_.name) == Seq("orders"))
+    val m = ms.head
+    assert(m.source == ModelSource.Table("public.orders"))
+    assert(m.primaryKey == Seq("id"))
+    assert(m.dimensions.map(d => (d.name, d.dimType, d.sql)) == Seq(
+      ("id", DimType.Numeric, Some("id")),
+      ("status", DimType.Categorical, Some("status")),
+      ("created_at", DimType.Time, Some("created_at"))))
+    assert(m.metrics.map(x => (x.name, x.agg, x.sql, x.filters)) == Seq(
+      ("count", Some("count"), None, Nil),
+      ("revenue", Some("sum"), Some("amount"),
+        Seq("{model}.status = 'completed'"))))
+    assert(m.segments.map(s => (s.name, s.sql)) ==
+      Seq(("completed", "{model}.status = 'completed'")))
+    assert(m.relationships == Seq(Relationship("customers", "many_to_one",
+      foreignKey = Seq("customer_id"), primaryKey = Seq("id"))))
   }
 }

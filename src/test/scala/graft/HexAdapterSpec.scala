@@ -2,7 +2,7 @@ package graft
 
 import graft.adapters.HexAdapter
 import graft.gen.Generator
-import graft.model.{Catalog, ModelSource}
+import graft.model.{Catalog, DimType, ModelSource, Relationship}
 import graft.plan.SemanticQuery
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -81,5 +81,59 @@ class HexAdapterSpec extends AnyFunSuite {
     // agg/NULLIF(agg, 0) func_sql stays the lifted first-class ratio
     assert(emp.metric("cost_per_head").exists(m =>
       m.metricType == Some("ratio")))
+  }
+
+  test("inline hex documents: dimensions, measures, filter and relation " +
+      "from the grammar") {
+    val ms = HexAdapter.parseAll(
+      """id: orders
+        |base_sql_table: public.orders
+        |dimensions:
+        |  - id: id
+        |    type: number
+        |    unique: true
+        |  - id: status
+        |    type: string
+        |  - id: created_at
+        |    type: timestamp_tz
+        |  - id: is_completed
+        |    type: boolean
+        |    expr_sql: status = 'completed'
+        |measures:
+        |  - id: order_count
+        |    func: count
+        |  - id: revenue
+        |    func: sum
+        |    of: amount
+        |  - id: completed_revenue
+        |    func: sum
+        |    of: amount
+        |    filters:
+        |      - is_completed
+        |relations:
+        |  - id: customers
+        |    type: many_to_one
+        |    join_sql: customer_id = ${customers}.id
+        |---
+        |---
+        |type: view
+        |id: orders_view
+        |""".stripMargin)
+    assert(ms.map(_.name) == Seq("orders")) // the view document is skipped
+    val m = ms.head
+    assert(m.source == ModelSource.Table("public.orders"))
+    assert(m.primaryKey == Seq("id"))
+    assert(m.dimensions.map(d => (d.name, d.dimType, d.sql)) == Seq(
+      ("id", DimType.Numeric, None),
+      ("status", DimType.Categorical, None),
+      ("created_at", DimType.Time, None),
+      ("is_completed", DimType.Bool, Some("status = 'completed'"))))
+    assert(m.metrics.map(x => (x.name, x.agg, x.sql, x.filters)) == Seq(
+      ("order_count", Some("count"), None, Nil),
+      ("revenue", Some("sum"), Some("amount"), Nil),
+      ("completed_revenue", Some("sum"), Some("amount"),
+        Seq("{model}.is_completed"))))
+    assert(m.relationships == Seq(Relationship("customers", "many_to_one",
+      foreignKey = Seq("customer_id"), primaryKey = Seq("id"))))
   }
 }

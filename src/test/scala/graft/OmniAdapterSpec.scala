@@ -90,4 +90,79 @@ class OmniAdapterSpec extends AnyFunSuite {
     assert(out(0).getString(0) == "DE" && out(0).getDouble(1) == 5.0)
     assert(out(1).getString(0) == "US" && out(1).getDouble(2) == 10.0)
   }
+
+  test("inline omni project: views, measures, filter and relationship " +
+      "from the grammar") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_omni_pin")
+    def write(rel: String, text: String): Unit = {
+      val p = dir.resolve(rel)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, text.stripMargin.getBytes("UTF-8"))
+    }
+    write("views/orders.view.yaml",
+      """table_name: orders
+        |dimensions:
+        |  id:
+        |    primary_key: true
+        |    type: number
+        |  status:
+        |    sql: ${TABLE}.status
+        |  created_at:
+        |    type: timestamp
+        |    timeframes: [date, week, month]
+        |measures:
+        |  count:
+        |    aggregate_type: count
+        |  total_revenue:
+        |    aggregate_type: sum
+        |    sql: ${orders.amount}
+        |  completed_revenue:
+        |    aggregate_type: sum
+        |    sql: ${TABLE}.amount
+        |    filters:
+        |      status:
+        |        is: completed
+        |""")
+    write("views/customers.view.yaml",
+      """table_name: customers
+        |dimensions:
+        |  id:
+        |    primary_key: true
+        |  city:
+        |measures:
+        |  count:
+        |    aggregate_type: count
+        |""")
+    write("relationships.yaml",
+      """- join_from_view: orders
+        |  join_to_view: customers
+        |  relationship_type: many_to_one
+        |  on_sql: ${orders.customer_id} = ${customers.id}
+        |""")
+    val imp = OmniAdapter.loadDirectory(dir.toString)
+    val byName = imp.models.map(m => m.name -> m).toMap
+    assert(byName.keySet == Set("orders", "customers"))
+    val orders = byName("orders")
+    assert(orders.source == ModelSource.Table("orders"))
+    assert(orders.primaryKey == Seq("id"))
+    assert(orders.dimensions.map(_.name).toSet == Set("id", "status", "created_at"))
+    assert(orders.dimension("id").get.dimType == DimType.Numeric)
+    assert(orders.dimension("status").get.sql.contains("status"))
+    val created = orders.dimension("created_at").get
+    assert(created.dimType == DimType.Time && created.granularity.contains("day"))
+    assert(created.supportedGranularities == Seq("day", "week", "month"))
+    assert(orders.metrics.map(_.name).toSet ==
+      Set("count", "total_revenue", "completed_revenue"))
+    assert(orders.metric("count").get.agg.contains("count"))
+    val rev = orders.metric("total_revenue").get
+    assert(rev.agg.contains("sum") && rev.sql.contains("amount"))
+    assert(orders.metric("completed_revenue").get.filters ==
+      Seq("status = 'completed'"))
+    assert(orders.relationships == Seq(Relationship("customers", "many_to_one",
+      foreignKey = Seq("customer_id"), primaryKey = Seq("id"))))
+    val customers = byName("customers")
+    assert(customers.dimensions.map(_.name).toSet == Set("id", "city"))
+    assert(customers.dimension("city").get.dimType == DimType.Categorical)
+    assert(customers.relationships.isEmpty)
+  }
 }

@@ -54,4 +54,48 @@ class SupersetAdapterSpec extends AnyFunSuite {
     assert(got.map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq ==
       Seq(("a", 2L, 400.0), ("b", 1L, 100.0)))
   }
+
+  test("inline superset dataset: columns, metrics and virtual source " +
+      "from the grammar") {
+    // a Superset dataset is one table: no joins or filters to import,
+    // so the virtual `sql` source and main_dttm_col stand in for them
+    val m = SupersetAdapter.parse(
+      """table_name: orders
+        |main_dttm_col: created_at
+        |sql: SELECT * FROM raw.orders
+        |columns:
+        |  - column_name: id
+        |    type: BIGINT
+        |  - column_name: status
+        |    type: VARCHAR
+        |    verbose_name: Order status
+        |  - column_name: created_at
+        |    type: TIMESTAMP WITHOUT TIME ZONE
+        |    is_dttm: true
+        |  - column_name: is_big
+        |    type: BOOLEAN
+        |    expression: amount > 100
+        |metrics:
+        |  - metric_name: count
+        |    metric_type: count
+        |    expression: COUNT(*)
+        |  - metric_name: total_revenue
+        |    expression: SUM(amount)
+        |  - metric_name: customers
+        |    expression: COUNT(DISTINCT customer_id)
+        |""".stripMargin)
+    assert(m.name == "orders")
+    assert(m.source == ModelSource.SqlView("SELECT * FROM raw.orders"))
+    assert(m.defaultTimeDimension.contains("created_at"))
+    assert(m.dimensions.map(d => (d.name, d.dimType, d.sql, d.granularity)) == Seq(
+      ("id", DimType.Numeric, None, None),
+      ("status", DimType.Categorical, None, None),
+      ("created_at", DimType.Time, None, Some("hour")),
+      ("is_big", DimType.Bool, Some("amount > 100"), None)))
+    assert(m.dimension("status").get.label.contains("Order status"))
+    assert(m.metrics.map(x => (x.name, x.agg, x.sql)) == Seq(
+      ("count", Some("count"), None),
+      ("total_revenue", Some("sum"), Some("amount")),
+      ("customers", Some("count_distinct"), Some("customer_id"))))
+  }
 }
