@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
+import graft.load.YamlTree.{seqOfMaps, strList}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for AtScale SML repositories (reference:
   * sidemantic/adapters/atscale_sml.py; fixtures
@@ -40,16 +38,12 @@ object AtScaleSmlAdapter {
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && (f.getName.endsWith(".yml") || f.getName.endsWith(".yaml")))
       .sortBy(_.getName)
-    load(files.toSeq.map(f => new String(java.nio.file.Files.readAllBytes(
-      f.toPath), "UTF-8")), resolve)
+    load(files.toSeq.map(f => YamlTree.readText(f.getPath)), resolve)
   }
 
   def load(yamls: Seq[String],
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
-    val objects = yamls.flatMap { y =>
-      Option(new Yaml(new SafeConstructor(new LoaderOptions())).load[Object](y))
-        .map(toScala).collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-    }
+    val objects = yamls.flatMap(y => YamlTree.mapOf(Option(YamlTree.parse(y))))
     def ofType(t: String) = objects.filter(_.get("object_type").map(_.toString).contains(t))
 
     // datasets → base models; remember column types for dimension typing
@@ -240,26 +234,5 @@ object AtScaleSmlAdapter {
           source = Some("atscale"))
         None
     }
-  }
-
-  // ---- plain-map YAML helpers (same shape as the other importers) ----
-
-  private def toScala(o: Any): Any = o match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, v) => k.toString -> toScala(v) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] = v match {
-    case Some(l: Seq[_]) => l.collect { case m: Map[_, _] =>
-      m.asInstanceOf[Map[String, Any]] }
-    case _ => Nil
-  }
-
-  private def strList(v: Option[Any]): Seq[String] = v match {
-    case Some(l: Seq[_]) => l.map(_.toString)
-    case Some(s)         => Seq(s.toString)
-    case None            => Nil
   }
 }

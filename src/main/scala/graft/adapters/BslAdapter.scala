@@ -1,10 +1,7 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for BSL (boring-semantic-layer) YAML models (reference:
   * sidemantic/adapters/bsl.py + bsl_expr.py; fixtures
@@ -35,15 +32,11 @@ object BslAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadString(yaml: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
-    val root = Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).map(toScala).collect {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      .getOrElse(return Imported(Nil))
+    val root = YamlTree.mapOf(Option(YamlTree.parse(yaml))).getOrElse(return Imported(Nil))
     val modelDefs = root.collect {
       case (name, m: Map[_, _]) if name != "profile" &&
           m.asInstanceOf[Map[String, Any]].contains("table") =>
@@ -204,12 +197,5 @@ object BslAdapter {
     case Some(m: Map[_, _]) =>
       m.asInstanceOf[Map[String, Any]].toSeq
     case _ => Nil
-  }
-
-  private def toScala(o: Any): Any = o match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, v) => k.toString -> toScala(v) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
   }
 }

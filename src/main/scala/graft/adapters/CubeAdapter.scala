@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
+import graft.load.YamlTree.{mapOf, seqOfMaps, strList}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for Cube.js YAML data models (reference:
   * sidemantic/adapters/cube.py; fixture corpus tests/fixtures/cube/).
@@ -37,8 +35,7 @@ object CubeAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadDirectory(dir: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver,
@@ -53,8 +50,7 @@ object CubeAdapter {
 
   def loadString(yaml: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] = {
-    val root = toScala(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).asInstanceOf[Map[String, Any]]
+    val root = YamlTree.parse(yaml).asInstanceOf[Map[String, Any]]
     root.getOrElse("cubes", Seq.empty).asInstanceOf[Seq[Any]]
       .map(c => parseCube(c.asInstanceOf[Map[String, Any]], resolve))
   }
@@ -198,8 +194,7 @@ object CubeAdapter {
         sql = sql.map(normalizeLocal(_, cube)).filter(_.nonEmpty),
         filters = filters, label = label, public = pub)
 
-    m.get("rolling_window").flatMap(Option(_)).map(v =>
-      toScala(v).asInstanceOf[Map[String, Any]]) match {
+    mapOf(m.get("rolling_window")) match {
       case Some(rw) =>
         // base aggregate as a hidden metric + cumulative referencing it
         val base = simple(AggMap.getOrElse(mtype, "sum"), rawSql,
@@ -394,28 +389,4 @@ object CubeAdapter {
     if (rowFilters.isEmpty) None
     else Some(SecurityPolicy(rowFilters = rowFilters))
   }
-
-  // ------------------------------------------------------------------
-
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> toScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  /** Empty YAML sections parse as explicit nulls — treat them as absent. */
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] =
-    v.flatMap(Option(_)).map(toScala).getOrElse(Seq.empty) match {
-      case s: Seq[_] =>
-        s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      case _ => Seq.empty
-    }
-
-  private def strList(v: Option[Any]): Seq[String] =
-    v.flatMap(Option(_)).map(toScala) match {
-      case Some(l: Seq[_]) => l.map(_.toString)
-      case Some(s)         => Seq(s.toString)
-      case None            => Nil
-    }
 }

@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.{Fidelity, YamlLoader}
+import graft.load.{Fidelity, YamlLoader, YamlTree}
+import graft.load.YamlTree.{mapOf, seqOfMaps, strList}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for GoodData logical data models (reference:
   * sidemantic/adapters/gooddata.py; fixtures tests/fixtures/gooddata/ —
@@ -35,15 +33,11 @@ object GoodDataAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadString(text: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
-    val root = Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](text)).map(toScala).collect {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      .getOrElse(return Imported(Nil))
+    val root = mapOf(Option(YamlTree.parse(text))).getOrElse(return Imported(Nil))
     // analytics payloads (dashboards, MAQL metrics) are declarative UI
     // state, not an executable LDM — only the LDM is imported
     if (root.contains("analytics"))
@@ -277,25 +271,4 @@ object GoodDataAdapter {
       case Some(inner: Map[_, _]) => inner.asInstanceOf[Map[String, Any]]
       case _                      => m
     }
-
-  // ---- plain-map helpers (same shape as the other importers) ----
-
-  private def toScala(o: Any): Any = o match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, v) => k.toString -> toScala(v) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] = v match {
-    case Some(l: Seq[_]) => l.collect { case m: Map[_, _] =>
-      m.asInstanceOf[Map[String, Any]] }
-    case _ => Nil
-  }
-
-  private def strList(v: Option[Any]): Seq[String] = v match {
-    case Some(l: Seq[_]) => l.map(_.toString)
-    case Some(s)         => Seq(s.toString)
-    case None            => Nil
-  }
 }

@@ -1,6 +1,6 @@
 package graft.adapters
 
-import graft.load.{AggExtract, Fidelity, YamlLoader}
+import graft.load.{AggExtract, Brackets, Fidelity, YamlLoader, YamlTree}
 import graft.model._
 
 /** Importer for Graphene `.gsql` files (reference:
@@ -36,8 +36,7 @@ object GrapheneAdapter {
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".gsql")).sortBy(_.getName)
-    load(files.toSeq.map(f => new String(
-      java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")), resolve)
+    load(files.toSeq.map(f => YamlTree.readText(f.getPath)), resolve)
   }
 
   def load(texts: Seq[String],
@@ -95,7 +94,7 @@ object GrapheneAdapter {
     val Head = raw"(?m)^(table|extend)\s+(\w+)\s*(as\s*)?\(".r
     Head.findAllMatchIn(text).foreach { m =>
       val open = m.end - 1
-      val close = matchParen(text, open)
+      val close = Brackets.closing(text, open, '(', ')')
       if (close > 0) {
         val body = text.substring(open + 1, close)
         val kind =
@@ -351,22 +350,6 @@ object GrapheneAdapter {
       if (i >= 0 && (l.substring(0, i).count(_ == '\'') & 1) == 0) l.substring(0, i)
       else l
     }.mkString("\n")
-
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var inStr = false
-    while (i < s.length) {
-      val c = s(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
-  }
 
   private def maskParens(s: String): String = {
     val sb = new StringBuilder

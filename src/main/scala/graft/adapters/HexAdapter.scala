@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
+import graft.load.YamlTree.seqOfMaps
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for Hex semantic-model YAML files (reference:
   * sidemantic/adapters/hex.py; fixture corpus tests/fixtures/hex/).
@@ -34,14 +32,11 @@ object HexAdapter {
     * documents (the default) import. */
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] =
-    parseAll(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    parseAll(YamlTree.readText(path), resolve)
 
   def parseAll(yaml: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] =
-    new Yaml(new SafeConstructor(new LoaderOptions())).loadAll(yaml)
-      .asScala.toSeq.flatMap(d => Option(d))
-      .map(d => toScala(d).asInstanceOf[Map[String, Any]])
+    YamlTree.parseAll(yaml).map(_.asInstanceOf[Map[String, Any]])
       .filter(_.get("type").forall(_.toString == "model"))
       .map(parseDoc(_, resolve))
 
@@ -206,22 +201,9 @@ object HexAdapter {
 
   // ------------------------------------------------------------------
 
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> toScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] =
-    v.flatMap(Option(_)).map(toScala).getOrElse(Seq.empty) match {
-      case s: Seq[_] =>
-        s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      case _ => Seq.empty
-    }
-
+  /** A list or a lone value, entries untyped: callers keep what they read. */
   private def seqOrStrings(v: Option[Any]): Seq[Any] =
-    v.flatMap(Option(_)).map(toScala) match {
+    v.flatMap(Option(_)) match {
       case Some(s: Seq[_]) => s
       case Some(x)         => Seq(x)
       case None            => Nil

@@ -1,6 +1,6 @@
 package graft.adapters
 
-import graft.load.{Fidelity, YamlLoader}
+import graft.load.{Brackets, Fidelity, YamlLoader, YamlTree}
 import graft.model._
 
 /** Importer for Holistics AML files (reference:
@@ -37,8 +37,7 @@ object HolisticsAdapter {
         fs.filter(_.isDirectory).flatMap(collect)
     }
     val files = collect(new java.io.File(dir)).sortBy(_.getName)
-    val texts = files
-      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    val texts = files.map(f => YamlTree.readText(f.getPath))
     load(texts, resolve, files.map(_.getName))
   }
 
@@ -157,29 +156,13 @@ object HolisticsAdapter {
     def isOdd: Boolean = (n & 1) == 1
   }
 
-  private def matchBrace(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var inStr = false
-    while (i < s.length) {
-      val c = s(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '{' => depth += 1
-        case '}' => depth -= 1; if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
-  }
-
   /** Top-level `Kind name { body }` blocks. */
   private def topBlocks(text0: String, src: String): Seq[B] = {
     val text = stripComments(text0)
     val Head = raw"(?m)^(Model|PartialModel|Dataset|Relationship|Metric)\s+(\w+)\s*\{".r
     Head.findAllMatchIn(text).flatMap { m =>
       val open = m.end - 1
-      val close = matchBrace(text, open)
+      val close = Brackets.closing(text, open, '{', '}')
       if (close > 0) Some(B(m.group(1), m.group(2),
         text.substring(open + 1, close), src, lineAt(text, m.start)))
       else {
@@ -198,7 +181,7 @@ object HolisticsAdapter {
     val Head = (raw"(?m)\b" + kind + raw"\s+(\w+)\s*\{").r
     Head.findAllMatchIn(body).flatMap { m =>
       val open = m.end - 1
-      val close = matchBrace(body, open)
+      val close = Brackets.closing(body, open, '{', '}')
       if (close > 0) Some((m.group(1), body.substring(open + 1, close)))
       else None
     }.toSeq
@@ -469,7 +452,7 @@ object HolisticsAdapter {
         .orElse {
           (side + raw"\s*:\s*FieldRef\s*\{").r.findFirstMatchIn(body)
             .flatMap { m =>
-              val close = matchBrace(body, m.end - 1)
+              val close = Brackets.closing(body, m.end - 1, '{', '}')
               if (close < 0) None else {
                 val fb = body.substring(m.end, close)
                 for (mo <- prop(fb, "model"); fi <- prop(fb, "field"))
@@ -488,13 +471,13 @@ object HolisticsAdapter {
     // an enclosing `active: false` config drops the edge
     val RelBlock = raw"(?s)RelationshipConfig\s*\{".r
     RelBlock.findAllMatchIn(body).foreach { m =>
-      val close = matchBrace(body, m.end - 1)
+      val close = Brackets.closing(body, m.end - 1, '{', '}')
       if (close > 0) {
         val cfg = body.substring(m.end, close)
         val active = !flatten(cfg).contains("active: false")
         if (active)
           raw"(?s)Relationship\s*\{".r.findFirstMatchIn(cfg).foreach { rm =>
-            val rclose = matchBrace(cfg, rm.end - 1)
+            val rclose = Brackets.closing(cfg, rm.end - 1, '{', '}')
             if (rclose > 0) {
               val spec = relFromBody(cfg.substring(rm.end, rclose))
               if (spec.isEmpty)

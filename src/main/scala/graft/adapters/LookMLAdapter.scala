@@ -1,6 +1,6 @@
 package graft.adapters
 
-import graft.load.{Fidelity, YamlLoader}
+import graft.load.{Fidelity, YamlLoader, YamlTree}
 import graft.model._
 import LkmlParser._
 
@@ -47,9 +47,7 @@ object LookMLAdapter {
 
   def loadFiles(paths: Seq[String],
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
-    val docs = paths.map(p => LkmlParser.parse(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)), "UTF-8")))
+    val docs = paths.map(p => LkmlParser.parse(YamlTree.readText(p)))
     fromDocs(docs, resolve)
   }
 
@@ -110,7 +108,7 @@ object LookMLAdapter {
   }
 
   /** Parents before children so `extends` resolves. */
-  private def topoByExtends(ms: Seq[Model]): Seq[Model] = {
+  private[graft] def topoByExtends(ms: Seq[Model]): Seq[Model] = {
     val byName = ms.map(m => m.name -> m).toMap
     val seen = scala.collection.mutable.LinkedHashSet[String]()
     def visit(m: Model, stack: Set[String]): Unit = {

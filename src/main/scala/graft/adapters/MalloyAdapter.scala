@@ -1,6 +1,6 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{Brackets, YamlLoader, YamlTree}
 import graft.model._
 
 /** Importer for Malloy source files (reference:
@@ -33,8 +33,7 @@ object MalloyAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadDirectory(dir: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
@@ -55,7 +54,7 @@ object MalloyAdapter {
       val name = m.group(1)
       val base = m.group(2).trim
       val open = m.end - 1
-      val close = matchBrace(text, open)
+      val close = Brackets.closing(text, open, '{', '}')
       if (close > 0) {
         val body = text.substring(open + 1, close)
         val source: Option[ModelSource] = base match {
@@ -370,20 +369,4 @@ object MalloyAdapter {
       if (i >= 0 && (l.substring(0, i).count(_ == '\'') & 1) == 0) l.substring(0, i)
       else l
     }.mkString("\n")
-
-  private def matchBrace(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var inStr = false
-    while (i < s.length) {
-      val c = s(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '{' => depth += 1
-        case '}' => depth -= 1; if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
-  }
 }

@@ -1,11 +1,9 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
+import graft.load.YamlTree.{mapOf, seqOfMaps}
 import graft.model._
 import graft.plan.SemanticQuery
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for dbt MetricFlow semantic-layer YAML (reference:
   * sidemantic/adapters/metricflow.py; fixture corpus
@@ -65,8 +63,7 @@ object MetricFlowAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadDirectory(dir: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver,
@@ -109,8 +106,7 @@ object MetricFlowAdapter {
 
   def loadString(yaml: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
-    val root = Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).map(toScala(_).asInstanceOf[Map[String, Any]])
+    val root = Option(YamlTree.parse(yaml)).map(_.asInstanceOf[Map[String, Any]])
       .getOrElse(Map.empty[String, Any])
 
     val legacy = seqOfMaps(root.get("semantic_models"))
@@ -464,7 +460,7 @@ object MetricFlowAdapter {
         windowChoice = na.get("window_choice").map(_.toString)
           .filter(Set("min", "max")).getOrElse("max"),
         // entity-name groupings resolve to their backing columns
-        windowGroupings = strList(na.get("window_groupings")).map(g =>
+        windowGroupings = nameList(na.get("window_groupings")).map(g =>
           if (dimNames(g)) g else entityColumns.getOrElse(g, g)))
     }
     Some(Metric(
@@ -476,7 +472,7 @@ object MetricFlowAdapter {
       sql = md.get("expr").flatMap(Option(_)).map(_.toString)
         .orElse(if (agg != "count") Some(name) else None),
       label = md.get("label").map(_.toString),
-      filters = strList(meta.get("filters")),
+      filters = nameList(meta.get("filters")),
       nonAdditive = nonAdditive))
   }
 
@@ -648,9 +644,9 @@ object MetricFlowAdapter {
       } yield {
         // a graph-level alias keeps the bare name queryable; otherwise the
         // metric lives on its owning model and needs qualification
-        val metrics = strList(qp.get("metrics")).map(m =>
+        val metrics = nameList(qp.get("metrics")).map(m =>
           if (graphNames(m)) m else ctx.qualifyMetric(m).getOrElse(m))
-        val dims = strList(qp.get("group_by")).flatMap(g => parseGroupBy(g, ctx))
+        val dims = nameList(qp.get("group_by")).flatMap(g => parseGroupBy(g, ctx))
         val where = qp.get("where").flatMap(Option(_)) match {
           case Some(l: Seq[_]) => l.map(w => translateJinja(w.toString, ctx))
           case Some(w)         => Seq(translateJinja(w.toString, ctx))
@@ -715,28 +711,10 @@ object MetricFlowAdapter {
     else w.trim
   }
 
-  // ------------------------------------------------------------------
-
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> toScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def mapOf(v: Option[Any]): Option[Map[String, Any]] =
-    v.flatMap(Option(_)).map(toScala).collect {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] =
-    v.flatMap(Option(_)).map(toScala).getOrElse(Seq.empty) match {
-      case s: Seq[_] =>
-        s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      case _ => Seq.empty
-    }
-
-  private def strList(v: Option[Any]): Seq[String] =
-    v.flatMap(Option(_)).map(toScala) match {
+  /** A list of strings or `{name: …}` entries, as names; a lone scalar is
+    * a one-element list, and null entries and empty names drop out. */
+  private def nameList(v: Option[Any]): Seq[String] =
+    v.flatMap(Option(_)) match {
       case Some(l: Seq[_]) => l.flatMap(x => Option(x)).map {
         case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
           .get("name").map(_.toString).getOrElse("")

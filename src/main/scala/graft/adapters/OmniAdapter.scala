@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
+import graft.load.YamlTree.{mapOf, seqOfMaps}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for Omni Analytics model exports (reference:
   * sidemantic/adapters/omni.py; fixtures tests/fixtures/omni/).
@@ -92,18 +90,15 @@ object OmniAdapter {
 
     // relationships: bare list file, or nested under model.yaml (older layout)
     val relDefs =
-      all.filter(isRelationships).flatMap(f => relList(loadYaml(f))) ++
-        all.filter(isModel).flatMap(f => seqOfMaps(loadYaml(f) match {
-          case m: Map[_, _] =>
-            m.asInstanceOf[Map[String, Any]].get("relationships")
-          case _ => None
-        }))
+      all.filter(isRelationships).flatMap(f => relList(tree(f))) ++
+        all.filter(isModel).flatMap(f =>
+          seqOfMaps(mapOf(Some(tree(f))).flatMap(_.get("relationships"))))
     models = attachRelationships(models, relDefs)
 
     // topics: base view + nested joins → Explore + realized edges
     var topics = Vector.empty[Explore]
     all.filter(isTopic).foreach { f =>
-      loadYaml(f) match {
+      tree(f) match {
         case m: Map[_, _] =>
           val topic = m.asInstanceOf[Map[String, Any]]
           topic.get("base_view").map(_.toString).foreach { base =>
@@ -143,9 +138,11 @@ object OmniAdapter {
 
   // ---- views ----
 
+  private def tree(f: java.io.File): Any = YamlTree.parse(YamlTree.readText(f.getPath))
+
   private def parseView(f: java.io.File,
       resolve: YamlLoader.TableResolver): Option[Model] = {
-    val view = loadYaml(f) match {
+    val view = tree(f) match {
       case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
       case _            => return None
     }
@@ -340,34 +337,9 @@ object OmniAdapter {
     else (fromCol, toCol)
   }
 
-  // ---- yaml plumbing ----
-
-  private def loadYaml(f: java.io.File): Any =
-    toScala(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
-
   /** `${TABLE}.col` and `${view.col}` both simplify to the bare column —
     * dimension/measure SQL evaluates inside the owning model's scope. */
   private def simplifyRefs(sql: String): String =
     raw"\$$\{[^.}]+\.([^}]+)\}".r.replaceAllIn(
       sql.replace("${TABLE}.", ""), m => m.group(1))
-
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> toScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def mapOf(v: Option[Any]): Option[Map[String, Any]] =
-    v.flatMap(Option(_)).map(toScala).collect {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-    }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] =
-    v.flatMap(Option(_)).map(toScala).getOrElse(Seq.empty) match {
-      case s: Seq[_] =>
-        s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      case _ => Seq.empty
-    }
 }

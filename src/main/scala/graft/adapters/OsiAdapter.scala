@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.{Fidelity, YamlLoader}
+import graft.load.{Fidelity, YamlLoader, YamlTree}
+import graft.load.YamlTree.{seqOfMaps, strList}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for OSI (Open Semantic Interchange) models (reference:
   * sidemantic/adapters/osi.py; fixtures tests/fixtures/osi/ — YAML and
@@ -30,13 +28,11 @@ object OsiAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadString(text: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
-    val root = Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](text)).map(toScala(_).asInstanceOf[Map[String, Any]])
+    val root = Option(YamlTree.parse(text)).map(_.asInstanceOf[Map[String, Any]])
       .getOrElse(return Imported(Nil, Nil))
     val sms = seqOfMaps(root.get("semantic_model")) ++
       seqOfMaps(root.get("ontology_mappings"))
@@ -204,26 +200,5 @@ object OsiAdapter {
         .flatMap(_.get("expression")).map(_.toString)
     case Some(s) => Some(s.toString)
     case None    => None
-  }
-
-  // ---- plain-map YAML helpers (same shape as the other importers) ----
-
-  private def toScala(o: Any): Any = o match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, v) => k.toString -> toScala(v) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] = v match {
-    case Some(l: Seq[_]) => l.collect { case m: Map[_, _] =>
-      m.asInstanceOf[Map[String, Any]] }
-    case _ => Nil
-  }
-
-  private def strList(v: Option[Any]): Seq[String] = v match {
-    case Some(l: Seq[_]) => l.map(_.toString)
-    case Some(s)         => Seq(s.toString)
-    case None            => Nil
   }
 }

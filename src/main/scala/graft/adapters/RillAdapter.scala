@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.{Fidelity, YamlLoader}
+import graft.load.{Brackets, Fidelity, YamlLoader, YamlTree}
+import graft.load.YamlTree.{mapOf, seqOfMaps}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for Rill metrics-view YAML (reference:
   * sidemantic/adapters/rill.py; fixture corpus tests/fixtures/rill/).
@@ -33,8 +31,7 @@ object RillAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve,
+    loadString(YamlTree.readText(path), resolve,
       defaultName = baseName(path))
 
   def loadDirectory(dir: String,
@@ -48,8 +45,7 @@ object RillAdapter {
     // parent (derived) metrics views resolve once the whole project is
     // parsed: the child selects inherited fields from its parent view
     files.foreach { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      parseRoot(text).filter(r =>
+      mapOf(Option(YamlTree.parse(YamlTree.readText(f.getPath)))).filter(r =>
         r.getOrElse("type", "metrics_view").toString == "metrics_view" &&
           r.contains("parent")).foreach { root =>
         resolveParentView(root, baseName(f.getPath), models) match {
@@ -91,8 +87,8 @@ object RillAdapter {
         severity = "approximated", source = Some("rill"))
     models.find(_.name == parentName).map { p =>
       val name = root.get("name").map(_.toString).getOrElse(defaultName)
-      val selDims = strList(root.get("parent_dimensions"))
-      val selMets = strList(root.get("parent_measures"))
+      val selDims = selection(root.get("parent_dimensions"))
+      val selMets = selection(root.get("parent_measures"))
       val dims = if (selDims.isEmpty) p.dimensions
         else p.dimensions.filter(d => selDims.contains(d.name))
       var mets = if (selMets.isEmpty) p.metrics
@@ -115,16 +111,12 @@ object RillAdapter {
     }
   }
 
-  private def parseRoot(yaml: String): Option[Map[String, Any]] =
-    Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).map(toScala).collect {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-
-  private def strList(v: Option[Any]): Seq[String] =
-    v.flatMap(Option(_)).map(toScala) match {
-      case Some(l: Seq[_]) => l.map(_.toString)
-      case _               => Nil
-    }
+  /** A derived view's field selection; empty selects every parent field,
+    * and so does a scalar (`parent_dimensions: '*'`). */
+  private def selection(v: Option[Any]): Seq[String] = v match {
+    case Some(l: Seq[_]) => l.map(_.toString)
+    case _               => Nil
+  }
 
   private def baseName(path: String): String =
     new java.io.File(path).getName.replaceAll(raw"\.ya?ml$$", "")
@@ -132,8 +124,7 @@ object RillAdapter {
   def loadString(yaml: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver,
       defaultName: String = "metrics_view"): Imported = {
-    val root = Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).map(toScala(_).asInstanceOf[Map[String, Any]])
+    val root = Option(YamlTree.parse(yaml)).map(_.asInstanceOf[Map[String, Any]])
       .getOrElse(return Imported(Nil, Nil))
     root.getOrElse("type", "metrics_view").toString match {
       case "metrics_view" if root.contains("parent") =>
@@ -245,7 +236,7 @@ object RillAdapter {
         return Nil
       }
     val mtype = m.get("type").map(_.toString.toLowerCase).getOrElse("")
-    val window = m.get("window").flatMap(Option(_)).map(toScala)
+    val window = m.get("window").flatMap(Option(_))
     if (window.isDefined) {
       val wm = window.collect { case w: Map[_, _] =>
         w.asInstanceOf[Map[String, Any]] }.getOrElse(Map.empty[String, Any])
@@ -299,7 +290,7 @@ object RillAdapter {
         case Some(m) =>
           val fn = m.group(1).toLowerCase
           val open = from + m.end - 1
-          val close = matchParen(e, open)
+          val close = Brackets.closing(e, open, '(', ')')
           if (AggNames(fn) && close > open) {
             val inner = e.substring(open + 1, close).trim
             out += AggCall(from + m.start, close + 1, fn, inner)
@@ -311,26 +302,6 @@ object RillAdapter {
       }
     }
     out.result()
-  }
-
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
   }
 
   /** Classify one aggregate call into (aggKind, sqlExpr). */
@@ -393,8 +364,7 @@ object RillAdapter {
     s.replaceAll(raw"\{\{\s*\.user\.(\w+)\s*\}\}", "{{ user.$1 }}")
 
   private def parseSecurity(v: Option[Any]): Option[SecurityPolicy] = {
-    val sec = v.flatMap(Option(_)).map(toScala).collect {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }.getOrElse(return None)
+    val sec = mapOf(v).getOrElse(return None)
     val access = sec.get("access").flatMap(Option(_)) match {
       case Some(b: java.lang.Boolean) => if (b) None else Some("FALSE")
       case Some(s) if s.toString.trim.nonEmpty =>
@@ -417,10 +387,9 @@ object RillAdapter {
         source = Some("rill"))
       return None
     }
-    val defaults = root.get("defaults").flatMap(Option(_)).map(toScala).collect {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }.getOrElse(Map.empty)
+    val defaults = mapOf(root.get("defaults")).getOrElse(Map.empty)
     def starOrList(v: Option[Any]): Option[Seq[String]] =
-      v.flatMap(Option(_)).map(toScala) match {
+      v match {
         case Some("*") => None // unrestricted
         case Some(l: Seq[_]) => Some(l.map(_.toString))
         case _ => None
@@ -434,20 +403,4 @@ object RillAdapter {
       defaultDimensions = starOrList(defaults.get("dimensions")).getOrElse(Nil),
       defaultMetrics = starOrList(defaults.get("measures")).getOrElse(Nil)))
   }
-
-  // ------------------------------------------------------------------
-
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> toScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] =
-    v.flatMap(Option(_)).map(toScala).getOrElse(Seq.empty) match {
-      case s: Seq[_] =>
-        s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      case _ => Seq.empty
-    }
 }

@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.{AggExtract, Fidelity, YamlLoader}
+import graft.load.{AggExtract, Fidelity, YamlLoader, YamlTree}
+import graft.load.YamlTree.{seqOfMaps, strList}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for Snowflake Cortex Analyst semantic models (reference:
   * sidemantic/adapters/snowflake.py; fixture corpus
@@ -38,13 +36,11 @@ object SnowflakeAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadString(yaml: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
-    val root = Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).map(toScala(_).asInstanceOf[Map[String, Any]])
+    val root = Option(YamlTree.parse(yaml)).map(_.asInstanceOf[Map[String, Any]])
       .getOrElse(return Imported(Nil, Nil))
 
     // Cortex retrieval surfaces (search services, verified queries,
@@ -207,25 +203,4 @@ object SnowflakeAdapter {
 
   private def isPublic(m: Map[String, Any]): Boolean =
     !m.get("access_modifier").map(_.toString).contains("private_access")
-
-  // ---- plain-map YAML helpers (same shape as the other importers) ----
-
-  private def toScala(o: Any): Any = o match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, v) => k.toString -> toScala(v) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] = v match {
-    case Some(l: Seq[_]) => l.collect { case m: Map[_, _] =>
-      m.asInstanceOf[Map[String, Any]] }
-    case _ => Nil
-  }
-
-  private def strList(v: Option[Any]): Seq[String] = v match {
-    case Some(l: Seq[_]) => l.map(_.toString)
-    case Some(s)         => Seq(s.toString)
-    case None            => Nil
-  }
 }

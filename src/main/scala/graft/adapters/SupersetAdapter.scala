@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
+import graft.load.YamlTree.seqOfMaps
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for Superset dataset YAML exports (reference:
   * sidemantic/adapters/superset.py; fixtures tests/fixtures/superset/).
@@ -26,8 +24,7 @@ object SupersetAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Model =
-    parse(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    parse(YamlTree.readText(path), resolve)
 
   def loadDirectory(dir: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver,
@@ -42,8 +39,7 @@ object SupersetAdapter {
 
   def parse(yaml: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Model = {
-    val m = toScala(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).asInstanceOf[Map[String, Any]]
+    val m = YamlTree.parse(yaml).asInstanceOf[Map[String, Any]]
     val name = m("table_name").toString
     val source = m.get("sql").flatMap(Option(_)) match {
       case Some(sql) => ModelSource.SqlView(sql.toString)
@@ -117,20 +113,4 @@ object SupersetAdapter {
         None
     }
   }
-
-  // ------------------------------------------------------------------
-
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> toScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] =
-    v.flatMap(Option(_)).map(toScala).getOrElse(Seq.empty) match {
-      case s: Seq[_] =>
-        s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      case _ => Seq.empty
-    }
 }

@@ -601,6 +601,7 @@ object TableauAdapter {
     out.toString
   }
 
+  // Not `Brackets.closing`: Tableau formulas escape a quote by doubling it.
   private def findMatchingParen(s: String, openPos: Int): Int = {
     var depth = 0; var i = openPos
     var inString = false; var stringChar = ' '

@@ -1,10 +1,8 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
+import graft.load.YamlTree.{mapOf, seqOfMaps}
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Importer for ThoughtSpot TML objects (reference:
   * sidemantic/adapters/thoughtspot.py; fixtures
@@ -36,8 +34,7 @@ object ThoughtSpotAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadDirectory(dir: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
@@ -48,10 +45,7 @@ object ThoughtSpotAdapter {
 
   def loadString(yaml: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Imported = {
-    val root = Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).map(toScala).collect {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      .getOrElse(return Imported(Nil))
+    val root = mapOf(Option(YamlTree.parse(yaml))).getOrElse(return Imported(Nil))
     root.get("table") match {
       case Some(t: Map[_, _]) =>
         Imported(parseTable(t.asInstanceOf[Map[String, Any]], resolve).toSeq)
@@ -88,8 +82,8 @@ object ThoughtSpotAdapter {
     seqOfMaps(t.get("columns")).foreach { c =>
       val cn = c.get("name").map(_.toString).getOrElse("")
       if (cn.nonEmpty) {
-        val props = mapOf(c.get("properties"))
-        val dbProps = mapOf(c.get("db_column_properties"))
+        val props = mapOf(c.get("properties")).getOrElse(Map.empty)
+        val dbProps = mapOf(c.get("db_column_properties")).getOrElse(Map.empty)
         val dataType = c.get("data_type").orElse(dbProps.get("data_type"))
           .map(_.toString.toUpperCase).getOrElse("")
         val src = c.get("db_column_name").map(_.toString).getOrElse(cn)
@@ -246,7 +240,7 @@ object ThoughtSpotAdapter {
     colDefs.foreach { c =>
       val cn = c.get("name").map(_.toString).getOrElse("")
       if (cn.nonEmpty) {
-        val props = mapOf(c.get("properties"))
+        val props = mapOf(c.get("properties")).getOrElse(Map.empty)
         val isMeasure = props.get("column_type").map(_.toString).contains("MEASURE")
         val sql: Option[String] =
           c.get("column_id").map(_.toString).map { cid =>
@@ -324,25 +318,5 @@ object ThoughtSpotAdapter {
     }
     Some(Model(name = name, source = ModelSource.SqlView(bound),
       dimensions = dims, metrics = mets))
-  }
-
-  // ---- plain-map helpers (same shape as the other importers) ----
-
-  private def toScala(o: Any): Any = o match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, v) => k.toString -> toScala(v) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
-
-  private def mapOf(v: Option[Any]): Map[String, Any] = v match {
-    case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
-    case _                  => Map.empty
-  }
-
-  private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] = v match {
-    case Some(l: Seq[_]) => l.collect { case m: Map[_, _] =>
-      m.asInstanceOf[Map[String, Any]] }
-    case _ => Nil
   }
 }

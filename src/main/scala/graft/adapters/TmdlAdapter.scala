@@ -1,6 +1,6 @@
 package graft.adapters
 
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
 import graft.model._
 
 /** Importer for Power BI TMDL semantic models (reference:
@@ -64,8 +64,7 @@ object TmdlAdapter {
       val nested = new java.io.File(d, "definition")
       if (nested.isDirectory) nested else d
     }
-    def read(f: java.io.File): String =
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    def read(f: java.io.File): String = YamlTree.readText(f.getPath)
     val tableFiles = Option(new java.io.File(defDir, "tables").listFiles())
       .getOrElse(Array.empty).filter(_.getName.endsWith(".tmdl")).sortBy(_.getName)
     val relFile = new java.io.File(defDir, "relationships.tmdl")
@@ -373,7 +372,8 @@ object TmdlAdapter {
 
   /** Index of the ')' matching the '(' at `open`, skipping quoted spans
     * (the same quote handling splitArgs uses — parens inside string
-    * literals and quoted table names don't count). -1 when unbalanced. */
+    * literals and quoted table names don't count). -1 when unbalanced.
+    * Not `Brackets.closing`: DAX also quotes table names with `"`. */
   private def matchingParen(s: String, open: Int): Int = {
     var depth = 0; var i = open
     while (i < s.length) {

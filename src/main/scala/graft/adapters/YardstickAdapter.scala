@@ -1,6 +1,6 @@
 package graft.adapters
 
-import graft.load.{AggExtract, YamlLoader}
+import graft.load.{AggExtract, YamlLoader, YamlTree}
 import graft.model._
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
@@ -29,8 +29,7 @@ object YardstickAdapter {
 
   def loadFile(path: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] =
-    loadString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadString(YamlTree.readText(path), resolve)
 
   def loadString(sql: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] =

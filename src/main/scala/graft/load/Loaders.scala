@@ -2,8 +2,6 @@ package graft.load
 
 import graft.adapters._
 import graft.model.{Catalog, Explore, Metric, Model}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
 import scala.jdk.CollectionConverters._
 
 /** Project-directory import with per-file format auto-detection
@@ -74,27 +72,12 @@ object Loaders {
     go(root)
   }
 
-  private def read(f: java.io.File): String =
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-
   private def rel(root: java.io.File, f: java.io.File): String =
     root.toPath.relativize(f.toPath).toString
 
-  private def yamlAny(content: String): Option[Any] =
-    try Option(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](content)).map(toScala)
-    catch { case _: Exception => None }
-
   private def yamlMap(content: String): Option[Map[String, Any]] =
-    yamlAny(content).collect { case m: Map[_, _] =>
-      m.asInstanceOf[Map[String, Any]] }
-
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> toScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
-  }
+    try YamlTree.mapOf(Option(YamlTree.parse(content)))
+    catch { case _: Exception => None }
 
   /** Exact key anywhere in the parsed YAML (loaders.py:993). */
   private def containsKeyDeep(v: Any, key: String): Boolean = v match {
@@ -169,8 +152,7 @@ object Loaders {
   /** Multi-document (`---`-separated) Hex file (loaders.py:835). */
   private def looksLikeHexMultiDoc(content: String): Boolean =
     try {
-      new Yaml(new SafeConstructor(new LoaderOptions())).loadAll(content)
-        .asScala.flatMap(d => Option(d)).map(toScala).exists {
+      YamlTree.parseAll(content).exists {
           case m: Map[_, _] => isHexResource(m.asInstanceOf[Map[String, Any]])
           case _ => false
         }
@@ -225,7 +207,7 @@ object Loaders {
       case ".tml" => Right("thoughtspot")
       case ".tds" | ".twb" | ".tdsx" | ".twbx" => Right("tableau")
       case ".py" =>
-        val content = try read(f) catch { case _: Exception => "" }
+        val content = try YamlTree.readText(f.getPath) catch { case _: Exception => "" }
         val semantic = name == "sidemantic.py" ||
           name.endsWith(".sidemantic.py") ||
           (content.toLowerCase.contains("sidemantic") &&
@@ -236,10 +218,10 @@ object Loaders {
             "(loaders.py:1316) — declare the models in YAML/SQL instead")
         else Left("not a semantic file")
       case ".sql" =>
-        if (looksLikeYardstickSql(read(f))) Right("yardstick")
+        if (looksLikeYardstickSql(YamlTree.readText(f.getPath))) Right("yardstick")
         else Right("native-sql")
       case ".json" =>
-        val content = read(f)
+        val content = YamlTree.readText(f.getPath)
         if ((content.contains("\"ldm\"") && content.contains("\"datasets\"")) ||
             content.contains("\"projectModel\"") ||
             content.contains("\"dateInstances\"") ||
@@ -260,7 +242,7 @@ object Loaders {
           else Right("osi")
         } else Left("not a semantic file")
       case ".yml" | ".yaml" =>
-        val content = read(f)
+        val content = YamlTree.readText(f.getPath)
         if (looksLikeSmlYaml(content)) return Right("sml")
         yamlMap(content) match {
           case None =>
@@ -447,7 +429,8 @@ object Loaders {
     // cross-file semantics (refinements, entity resolution, links)
     // resolve by construction
     grouped.get("sml").foreach(fs => contribute(fs, "sml", () =>
-      Contribution(AtScaleSmlAdapter.load(fs.map(read), resolve).models)))
+      Contribution(AtScaleSmlAdapter.load(
+        fs.map(f => YamlTree.readText(f.getPath)), resolve).models)))
     grouped.get("tmdl").foreach { fs =>
       // a PBIP tree parses from its definition/ root; otherwise treat
       // each directory cluster of .tmdl files as one project
@@ -467,9 +450,11 @@ object Loaders {
       Contribution(i.models, explores = i.explores)
     }))
     grouped.get("graphene").foreach(fs => contribute(fs, "graphene", () =>
-      Contribution(GrapheneAdapter.load(fs.map(read), resolve).models)))
+      Contribution(GrapheneAdapter.load(
+        fs.map(f => YamlTree.readText(f.getPath)), resolve).models)))
     grouped.get("holistics").foreach(fs => contribute(fs, "holistics", () =>
-      Contribution(HolisticsAdapter.load(fs.map(read), resolve,
+      Contribution(HolisticsAdapter.load(
+        fs.map(f => YamlTree.readText(f.getPath)), resolve,
         fs.map(rel(root, _))).models)))
     grouped.get("metricflow").foreach(fs => contribute(fs, "metricflow", () => {
       val imp = fs.map(f => MetricFlowAdapter.loadFile(f.getPath, resolve))
@@ -502,7 +487,7 @@ object Loaders {
 
     // register in extends-topological order so cross-file inheritance
     // resolves regardless of file order
-    val ordered = topoByExtends(mergedModels.values.toSeq)
+    val ordered = LookMLAdapter.topoByExtends(mergedModels.values.toSeq)
     var catalog = Catalog(dataDir = dataDir)
     ordered.foreach { m =>
       try catalog = catalog.add(m)
@@ -529,17 +514,5 @@ object Loaders {
     }
 
     ProjectLoad(catalog, attributions.toSeq, skipped.toSeq, warnings.toSeq)
-  }
-
-  private def topoByExtends(ms: Seq[Model]): Seq[Model] = {
-    val byName = ms.map(m => m.name -> m).toMap
-    val seen = scala.collection.mutable.LinkedHashSet[String]()
-    def visit(m: Model, stack: Set[String]): Unit = {
-      if (seen(m.name) || stack(m.name)) return
-      m.extendsModel.flatMap(byName.get).foreach(visit(_, stack + m.name))
-      seen += m.name
-    }
-    ms.foreach(visit(_, Set.empty))
-    seen.toSeq.map(byName)
   }
 }

@@ -32,11 +32,8 @@ object SqlModelLoader {
       segments: Seq[Segment] = Nil)
 
   def loadFile(path: String,
-      resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] = {
-    val content = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-    parse(content, resolve)
-  }
+      resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] =
+    parse(YamlTree.readText(path), resolve)
 
   def parse(content: String,
       resolve: YamlLoader.TableResolver = YamlLoader.defaultResolver): Seq[Model] = {
@@ -56,7 +53,7 @@ object SqlModelLoader {
       resolve: YamlLoader.TableResolver): Model = {
     val parts = content.split("---", 3)
     require(parts.length >= 3, "Frontmatter .sql file needs --- yaml --- body")
-    val fm = YamlLoader.parseYamlMap(parts(1)) - "version"
+    val fm = YamlTree.parse(parts(1)).asInstanceOf[Map[String, Any]] - "version"
     val base = YamlLoader.parseModelMap(fm, resolve)
     val st = parseStatements(parts(2), resolve)
     base.copy(

@@ -1,9 +1,7 @@
 package graft.load
 
+import graft.load.YamlTree.strList
 import graft.model._
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import scala.jdk.CollectionConverters._
 
 /** Loader for the reference's native YAML model format (version 1 —
   * reference: docs/native-format.md, fixtures under tests/native-fixtures).
@@ -31,18 +29,13 @@ object YamlLoader {
       paramDefaults: Map[String, String] = Map.empty,
       paramTypes: Map[String, String] = Map.empty)
 
-  private[load] def parseYamlMap(yaml: String): Map[String, Any] =
-    anyToScala(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml)).asInstanceOf[Map[String, Any]]
-
   def loadPackageString(yaml: String,
       resolve: TableResolver = defaultResolver): Loaded = {
-    val root = parseYamlMap(yaml)
+    val root = YamlTree.parse(yaml).asInstanceOf[Map[String, Any]]
     val version = root.getOrElse("version", 1)
     require(version == 1, s"Unsupported native-format version: $version")
     Loaded(
-      models = root.getOrElse("models", Seq.empty).asInstanceOf[Seq[Any]]
-        .map(m => parseModelMap(m.asInstanceOf[Map[String, Any]], resolve)),
+      models = seqOfMaps(root.get("models")).map(parseModelMap(_, resolve)),
       graphMetrics = seqOfMaps(root.get("metrics")).map(parseMetric),
       explores = seqOfMaps(root.get("explores")).map(parseExplore),
       paramDefaults = seqOfMaps(root.get("parameters")).flatMap { p =>
@@ -61,8 +54,7 @@ object YamlLoader {
 
   def loadPackageFile(path: String,
       resolve: TableResolver = defaultResolver): Loaded =
-    loadPackageString(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8"), resolve)
+    loadPackageString(YamlTree.readText(path), resolve)
 
   def loadFile(path: String,
       resolve: TableResolver = defaultResolver): Seq[Model] =
@@ -120,7 +112,7 @@ object YamlLoader {
     Model(
       name = name,
       source = source,
-      primaryKey = strOrList(m.get("primary_key").orElse(m.get("primary_key_columns"))),
+      primaryKey = strList(m.get("primary_key").orElse(m.get("primary_key_columns"))),
       dimensions = seqOfMaps(m.get("dimensions")).map(parseDimension) ++
         embedded.flatMap(_.dimensions),
       metrics = {
@@ -150,7 +142,7 @@ object YamlLoader {
     * block would erase a data contract, so unknown keys are hard errors. */
   private def parseFreshness(m: Map[String, Any], where: String): Option[Freshness] =
     m.get("freshness").flatMap(Option(_)).map { raw =>
-      val f = anyToScala(raw) match {
+      val f = raw match {
         case fm: Map[_, _] => fm.asInstanceOf[Map[String, Any]]
         case other => throw new IllegalArgumentException(
           s"$where freshness must be a mapping, got: $other")
@@ -180,7 +172,7 @@ object YamlLoader {
     if (!keys.exists(k => m.get(k).flatMap(Option(_)).isDefined)) None
     else {
       val dep = m.get("deprecation").flatMap(Option(_))
-        .map(anyToScala(_).asInstanceOf[Map[String, Any]])
+        .map(_.asInstanceOf[Map[String, Any]])
       Some(Governance(
         owner = m.get("owner").map(_.toString),
         domain = m.get("domain").map(_.toString),
@@ -223,7 +215,7 @@ object YamlLoader {
     * `false` denies outright. Silently dropping this block would load a
     * secured model as unrestricted, so unknown keys are hard errors. */
   private def parseSecurity(v: Any): SecurityPolicy = {
-    val sm = anyToScala(v).asInstanceOf[Map[String, Any]]
+    val sm = v.asInstanceOf[Map[String, Any]]
     val unknown = sm.keySet -- Set("access", "row_filters")
     require(unknown.isEmpty,
       s"Unknown field(s) ${unknown.mkString(", ")} in security policy")
@@ -429,7 +421,7 @@ object YamlLoader {
       entityDimensions = strList(m.get("entity_dimensions")),
       governance = parseGovernance(m),
       nonAdditive = m.get("non_additive_dimension").map { nad =>
-        val nm = anyToScala(nad).asInstanceOf[Map[String, Any]]
+        val nm = nad.asInstanceOf[Map[String, Any]]
         NonAdditiveDimension(
           name = nm("name").toString,
           windowChoice = nm.getOrElse("window_choice", "max").toString,
@@ -458,12 +450,12 @@ object YamlLoader {
     Relationship(
       to = r("name").toString,
       relType = r("type").toString,
-      foreignKey = strOrList(r.get("foreign_key").orElse(r.get("foreign_key_columns"))),
-      primaryKey = strOrList(r.get("primary_key").orElse(r.get("primary_key_columns"))),
+      foreignKey = strList(r.get("foreign_key").orElse(r.get("foreign_key_columns"))),
+      primaryKey = strList(r.get("primary_key").orElse(r.get("primary_key_columns"))),
       through = r.get("through").map(_.toString),
-      throughForeignKey = strOrList(r.get("through_foreign_key")
+      throughForeignKey = strList(r.get("through_foreign_key")
         .orElse(r.get("through_foreign_key_columns"))),
-      relatedForeignKey = strOrList(r.get("related_foreign_key")
+      relatedForeignKey = strList(r.get("related_foreign_key")
         .orElse(r.get("related_foreign_key_columns"))),
       sqlOn = r.get("sql").map(_.toString))
 
@@ -478,22 +470,17 @@ object YamlLoader {
 
   // ------------------------------------------------------------------
 
-  private def anyToScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> anyToScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(anyToScala).toSeq
-    case other => other
-  }
-
+  /** Strict, unlike `YamlTree.seqOfMaps`: graft's own format fails loudly
+    * on a list entry that is not a mapping. Empty still reads as empty. */
   private def seqOfMaps(v: Option[Any]): Seq[Map[String, Any]] =
-    v.map(anyToScala).getOrElse(Seq.empty).asInstanceOf[Seq[Any]]
-      .map(_.asInstanceOf[Map[String, Any]])
-
-  private def strList(v: Option[Any]): Seq[String] = v.map(anyToScala) match {
-    case Some(l: Seq[_]) => l.map(_.toString)
-    case Some(s)         => Seq(s.toString)
-    case None            => Nil
-  }
-
-  private def strOrList(v: Option[Any]): Seq[String] = strList(v)
+    v.flatMap(Option(_)) match {
+      case None => Nil
+      case Some(l: Seq[_]) => l.map {
+        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
+        case other => throw new IllegalArgumentException(
+          s"Expected a mapping in the list, got: $other")
+      }
+      case Some(other) => throw new IllegalArgumentException(
+        s"Expected a list of mappings, got: $other")
+    }
 }

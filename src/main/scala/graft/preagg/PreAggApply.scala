@@ -1,5 +1,6 @@
 package graft.preagg
 
+import graft.load.YamlTree
 import graft.model.{Catalog, PreAggregation}
 import org.apache.spark.sql.SparkSession
 import org.yaml.snakeyaml.{DumperOptions, LoaderOptions, Yaml}
@@ -36,12 +37,12 @@ object PreAggApply {
       .sortBy(_.getName).toSeq
 
     // parse every document once; remember (file, model-index) per model name
+    // (the raw java tree, not YamlTree's: the documents are edited and dumped back)
     val yaml = new Yaml(new SafeConstructor(new LoaderOptions()))
     val docs = scala.collection.mutable.LinkedHashMap.empty[java.io.File, java.util.Map[String, Any]]
     var locations = Map.empty[String, Seq[(java.io.File, Int)]].withDefaultValue(Nil)
     files.foreach { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      Option(yaml.load[Object](text)).foreach {
+      Option(yaml.load[Object](YamlTree.readText(f.getPath))).foreach {
         case m: java.util.Map[_, _] =>
           val doc = m.asInstanceOf[java.util.Map[String, Any]]
           docs(f) = doc

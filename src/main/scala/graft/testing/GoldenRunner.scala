@@ -1,13 +1,12 @@
 package graft.testing
 
 import graft.GraftSession
+import graft.load.YamlTree
 import graft.model.{Catalog, Model}
 import graft.sqlfront.SqlFront
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.yaml.snakeyaml.constructor.SafeConstructor
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -89,7 +88,7 @@ object GoldenRunner {
   }
 
   def loadTestFile(path: Path): Seq[GoldenCase] =
-    loadString(new String(Files.readAllBytes(path), "UTF-8"), path.toString)
+    loadString(YamlTree.readText(path.toString), path.toString)
 
   def loadTestFiles(paths: Seq[Path]): Seq[GoldenCase] =
     paths.flatMap(loadTestFile)
@@ -99,8 +98,7 @@ object GoldenRunner {
   /** Parse one golden-test YAML document, validating its shape eagerly
     * (same error contract as the reference loader). */
   def loadString(yaml: String, source: String = "<string>"): Seq[GoldenCase] = {
-    val root = toScala(new Yaml(new SafeConstructor(new LoaderOptions()))
-      .load[Object](yaml))
+    val root = YamlTree.parse(yaml)
     val tests = root match {
       case m: Map[_, _] => m.asInstanceOf[Map[String, Any]].get("tests") match {
         case Some(l: Seq[_]) => l
@@ -145,13 +143,6 @@ object GoldenRunner {
         s"$label ('$name') needs at least one of: value, rows, row_count, columns")
       GoldenCase(name, sql.trim, expect, source)
     }
-  }
-
-  private def toScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, vv) => k.toString -> toScala(vv) }.toMap
-    case l: java.util.List[_] => l.asScala.map(toScala).toSeq
-    case other => other
   }
 
   // ------------------------------------------------------------------

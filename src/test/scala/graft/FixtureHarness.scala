@@ -1,12 +1,11 @@
 package graft
 
 import graft.gen.{Generator, TableCalcs}
-import graft.load.YamlLoader
+import graft.load.{YamlLoader, YamlTree}
+import graft.load.YamlTree.strList
 import graft.plan.SemanticQuery
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Row, SparkSession}
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
 import scala.jdk.CollectionConverters._
 
 /** Generic runner for the reference's native-fixture contract, driven by
@@ -27,7 +26,8 @@ object FixtureHarness {
       queries: Seq[ManifestQuery], rewriteSqls: Seq[String])
 
   def manifest(): Seq[ManifestFixture] = {
-    val m = parseJsonish(read(s"$root/manifest.yml")).asInstanceOf[Map[String, Any]]
+    val m = YamlTree.parse(YamlTree.readText(s"$root/manifest.yml"))
+      .asInstanceOf[Map[String, Any]]
     m("fixtures").asInstanceOf[Seq[Any]].map(_.asInstanceOf[Map[String, Any]]).map { f =>
       ManifestFixture(
         name = f("name").toString,
@@ -58,10 +58,11 @@ object FixtureHarness {
     val gen = new Generator(spark, cat)
 
     fx.queries.foreach { mq =>
-      val expected = parseJsonish(read(s"$root/${fx.name}/expected/${mq.expected
-        .getOrElse("result.json").stripPrefix("expected/")}"))
+      val expected = YamlTree.parse(YamlTree.readText(
+        s"$root/${fx.name}/expected/${mq.expected
+          .getOrElse("result.json").stripPrefix("expected/")}"))
         .asInstanceOf[Seq[Any]].map(_.asInstanceOf[Map[String, Any]])
-      val (q0, calcs) = parseQuery(read(s"$root/${fx.name}/queries/${
+      val (q0, calcs) = parseQuery(YamlTree.readText(s"$root/${fx.name}/queries/${
         mq.file.stripPrefix("queries/")}"))
       // window metrics expose their base metric alongside (reference
       // result contract: cumulative/time_comparison rows carry the inner
@@ -119,14 +120,11 @@ object FixtureHarness {
 
   // ---- seed/duckdb.sql → temp views --------------------------------
 
-  private def read(p: String): String =
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-
   private def seedIfPresent(spark: SparkSession, path: String): Unit =
     if (new java.io.File(path).exists()) seed(spark, path)
 
   private def seed(spark: SparkSession, path: String): Unit = {
-    val stmts = read(path).split(";").map(_.trim).filter(_.nonEmpty)
+    val stmts = YamlTree.readText(path).split(";").map(_.trim).filter(_.nonEmpty)
     val creates = raw"(?is)create\s+table\s+(\w+)\s*\((.*)\)".r
     val inserts = raw"(?is)insert\s+into\s+(\w+)\s+values\s*(.*)".r
     val schemas = scala.collection.mutable.Map[String, StructType]()
@@ -215,7 +213,7 @@ object FixtureHarness {
   // ---- query YAML files → SemanticQuery -------------------------
 
   private def parseQuery(yaml: String): (SemanticQuery, Seq[Map[String, Any]]) = {
-    val m = parseJsonish(yaml).asInstanceOf[Map[String, Any]]
+    val m = YamlTree.parse(yaml).asInstanceOf[Map[String, Any]]
     def list(k: String): Seq[String] = strList(m.get(k))
     // raw values: the engine formats declared parameters by their type
     // (Generator.mergedParams via Params.format)
@@ -236,12 +234,6 @@ object FixtureHarness {
     (q, calcs)
   }
 
-  private def strList(v: Option[Any]): Seq[String] = v match {
-    case Some(l: Seq[_]) => l.map(_.toString)
-    case Some(s)         => Seq(s.toString)
-    case None            => Nil
-  }
-
   /** order_by entries reference fields (optionally with DESC/ASC suffix);
     * output columns use short names. */
   private def outName(ref: String): String = {
@@ -256,16 +248,6 @@ object FixtureHarness {
   }
 
   // ---- expected/result.json comparison -----------------------------
-
-  private def parseJsonish(s: String): Any = anyToScala(
-    new Yaml(new SafeConstructor(new LoaderOptions())).load[Object](s))
-
-  private def anyToScala(v: Any): Any = v match {
-    case m: java.util.Map[_, _] =>
-      m.asScala.map { case (k, x) => k.toString -> anyToScala(x) }.toMap
-    case l: java.util.List[_] => l.asScala.map(anyToScala).toSeq
-    case other => other
-  }
 
   private def compare(fixture: String, cols: Seq[String], got: Seq[Row],
       expected: Seq[Map[String, Any]]): Unit = {

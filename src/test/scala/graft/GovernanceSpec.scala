@@ -122,4 +122,26 @@ class GovernanceSpec extends AnyFunSuite {
       cat.addExplore(Explore(name = "bad2", model = "nope"))
     }
   }
+
+  test("empty list sections in a native package read as empty lists") {
+    // `key:` with nothing after it parses as an explicit null
+    val pkg = YamlLoader.loadPackageString(
+      """version: 1
+        |models:
+        |  - name: orders
+        |    table: orders
+        |    owner: finance
+        |    tags:
+        |    metrics:
+        |    dimensions:
+        |      - name: status
+        |metrics:
+        |""".stripMargin)
+    val m = pkg.models.head
+    assert(m.dimensions.map(_.name) == Seq("status"))
+    assert(m.metrics.isEmpty)
+    assert(m.governance.map(_.tags).contains(Nil))
+    assert(m.governance.flatMap(_.owner).contains("finance"))
+    assert(pkg.graphMetrics.isEmpty)
+  }
 }

@@ -93,4 +93,34 @@ class OsiAdapterSpec extends AnyFunSuite {
       orderBy = Seq("segment"))).collect()
     assert(out.length == 5)
   }
+
+  test("empty sections read as empty lists") {
+    // `key:` with nothing after it parses as an explicit null
+    val imp = OsiAdapter.loadString(
+      """semantic_model:
+        |  - name: shop
+        |    datasets:
+        |      - name: orders
+        |        source: db.public.orders
+        |        primary_key:
+        |        fields:
+        |          - name: status
+        |            expression:
+        |              dialects:
+        |                - dialect: ANSI_SQL
+        |                  expression: status
+        |    relationships:
+        |      - name: orders_customers
+        |        from: orders
+        |        to: customers
+        |        from_columns:
+        |        to_columns:
+        |""".stripMargin)
+    val m = imp.models.head
+    assert(m.name == "orders" && m.primaryKey == Nil)
+    assert(m.dimensions.map(_.name) == Seq("status"))
+    // no from_columns: the key defaults to <to>_id
+    assert(m.relationships == Seq(Relationship("customers", "many_to_one",
+      foreignKey = Seq("customers_id"), primaryKey = Nil)))
+  }
 }

@@ -87,4 +87,31 @@ class SnowflakeAdapterSpec extends AnyFunSuite {
     assert(out.length == 3) // F, O, P
     assert(out.map(_.getLong(2)).sum > 0)
   }
+
+  test("empty sections read as empty lists") {
+    // `key:` with nothing after it parses as an explicit null
+    val imp = SnowflakeAdapter.loadString(
+      """name: shop
+        |tables:
+        |  - name: orders
+        |    base_table: {database: db, schema: s, table: orders}
+        |    primary_key:
+        |      columns:
+        |    dimensions:
+        |      - name: status
+        |        expr: status
+        |        data_type: varchar
+        |    measures:
+        |      - name: amount
+        |        expr: amount
+        |        default_aggregation: sum
+        |    filters:
+        |relationships:
+        |""".stripMargin)
+    val m = imp.models.head
+    assert(m.primaryKey == Nil)
+    assert(m.dimensions.map(_.name) == Seq("status"))
+    assert(m.metrics.map(x => (x.name, x.agg)) == Seq(("amount", Some("sum"))))
+    assert(m.segments.isEmpty && m.relationships.isEmpty)
+  }
 }
